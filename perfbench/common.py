@@ -24,10 +24,13 @@ WORK = BENCH_DIR / ".work"
 # The package defaults the driver heap (and -Xms) to 16g, which a 15 GB
 # host cannot commit: the JVM dies at start. Every Spark process this
 # benchmark starts sets the package's own override to this fixed value,
-# so both sides of a comparison run with the same heap. 3g holds the
-# corpus below with room to spare; with -Xms at 6g the JVM touched
-# ~7 GB and every query and build ran 10-20% slower.
-DRIVER_MEM = "3g"
+# so both sides of a comparison run with the same heap. 1g holds the
+# corpus below with room to spare. The package sets -Xms to the same
+# value, and every page the JVM touches costs time on this VM: at 6g
+# the JVM touched ~7 GB and queries and builds ran 10-20% slower than
+# at 3g, and 1g runs shorter still, which keeps a set of runs inside a
+# shorter stretch of host time.
+DRIVER_MEM = "1g"
 CORES = 4
 
 # Corpus shape shared by every workload. The size is set by the time
