@@ -1,7 +1,10 @@
 """Benchmark entry point.
 
-  python3 perfbench/run.py --workload {build,query,serve,dedup} \
+  python3 perfbench/run.py --workload {query,serve} \
       --seed N --seconds S --trace {0,1}
+
+The workload names are those of BENCHMARK.json; each maps to the
+module ``workload_<name>.py`` beside this file.
 
 Generates the workload's inputs from the seed, drives one public entry
 point of the program, checks its outputs, and prints a ``record`` line
@@ -22,8 +25,6 @@ import sys
 
 from common import ROOT, BenchError, RunRecord, metric, prepare_environment
 
-WORKLOADS = ("build", "query", "serve", "dedup")
-
 
 def load_spec() -> dict:
     with open(ROOT / "BENCHMARK.json") as f:
@@ -31,8 +32,13 @@ def load_spec() -> dict:
 
 
 def main(argv: list[str]) -> int:
+    try:
+        spec = load_spec()
+    except (OSError, ValueError) as e:
+        print(f"perfbench: {e}", file=sys.stderr)
+        return 2
     ap = argparse.ArgumentParser()
-    ap.add_argument("--workload", required=True, choices=WORKLOADS)
+    ap.add_argument("--workload", required=True, choices=[w["name"] for w in spec["workloads"]])
     ap.add_argument("--seed", type=int, required=True)
     ap.add_argument("--seconds", type=float, required=True)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
@@ -40,7 +46,6 @@ def main(argv: list[str]) -> int:
     trace = bool(args.trace)
 
     try:
-        spec = load_spec()
         run_id = f"{args.workload}-seed{args.seed}-trace{args.trace}"
         run_dir = prepare_environment(run_id)
     except (BenchError, OSError) as e:

@@ -8,7 +8,8 @@ time minus the part covered by its child spans.
 
 Spark counters come from the status store of the live context (it is
 populated with the UI disabled): every traced call runs under its own
-job group, and the group's jobs, stages and tasks are summed.
+job group, and once the listener bus has drained, the group's jobs,
+stages and tasks are summed.
 """
 
 from __future__ import annotations
@@ -181,6 +182,9 @@ class SparkCounters:
             out.update(self.read(gid))
 
     def read(self, gid: str) -> dict:
+        # the status store is filled from the listener bus, asynchronously;
+        # drain it so the group's last task and stage updates are in
+        self.sc._jsc.sc().listenerBus().waitUntilEmpty()
         stage_ids = set()
         job_ids = self.sc.statusTracker().getJobIdsForGroup(gid)
         for jid in job_ids:

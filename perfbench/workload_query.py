@@ -83,6 +83,9 @@ def run(seed: int, seconds: float, trace: bool, run_dir, rec) -> dict:
             tracer.wrap(bm25, "resolve_query_terms", "bm25.resolve")
             tracer.wrap(wand, "resolve_query_terms", "bm25.resolve")
             tracer.wrap(wand, "free_query_wand", "wand.plan")
+            # wand's own reference to the exhaustive scorer: each call is
+            # a wand query the cost gate sent to bm25 instead of pruning
+            tracer.count(wand, "free_query", "wand.exhaustive")
             tracer.wrap(boolean, "boolean_query", "boolean.plan")
             tracer.count(DriverVocabulary, "spellcheck_term", "spellcheck", spellcheck_corrected)
 
@@ -180,10 +183,18 @@ def run(seed: int, seconds: float, trace: bool, run_dir, rec) -> dict:
     else:
         totals = tracer.totals()
         n_traced = max(1, len(traced_lat))
+        wand_calls = totals.get("wand.plan", {}).get("calls", 0)
+        wand_exhaustive = tracer.counts["wand.exhaustive"]["calls"]
+        rec["wand"] = {
+            "traced_calls": wand_calls,
+            "exhaustive_calls": wand_exhaustive,
+            "min_prunable_postings": wand.MIN_PRUNABLE_POSTINGS,
+        }
         layer |= {
             "index.load_s": (totals.get("index.load", {}).get("total_s", 0.0), "s"),
             "index.driver_vocab_s": (totals.get("index.driver_vocab", {}).get("total_s", 0.0), "s"),
             "bm25.resolve_ms": (tracer.per_call_ms("bm25.resolve"), "ms"),
+            "wand.exhaustive_share": (wand_exhaustive / max(1, wand_calls), "ratio"),
             **spellcheck_metrics(tracer.counts["spellcheck"], n_traced),
             "trace.overhead_pct": (
                 100.0 * (median(traced_lat) / median(lat) - 1.0) if traced_lat else 0.0,

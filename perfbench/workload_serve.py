@@ -36,7 +36,11 @@ from fixture import build_fixture
 from inputs import QuerySampler, make_corpus, query_shapes, read_corpus, word_dfs
 from tracing import Tracer, spellcheck_metrics
 
-RATE = 30.0  # requests/s: well under the closed-loop capacity (~130/s at 4,000 docs)
+# requests/s, about a fifth of the server's closed-loop capacity on this
+# corpus (~290 req/s on 4 vCPUs, with one or four connections). At half
+# the capacity, queueing behind the slow requests made p90_ms spread
+# 0.37 between runs, more than its regression bound.
+RATE = 60.0
 CONNECTIONS = 4
 POOL = 1500
 BOOLEAN_SHARE = 0.2
