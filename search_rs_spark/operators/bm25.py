@@ -187,7 +187,7 @@ def _score_fused(
     e: DataFrame,
     num_tokens: int,
     n_fragments: int | None = None,
-    prefer_impl: str | None = None,
+    batch: bool = False,
 ) -> DataFrame:
     """Single-pass scoring for corpus-sized conjunctions: ONE explode,
     ONE aggregate that carries the per-(doc, qid) position arrays next
@@ -235,43 +235,29 @@ def _score_fused(
     # one row per (term, doc) upstream, so qids holds distinct ids
     is_conj = F.size("qids") == num_tokens
     score = (
-        F.when(is_conj, _window_col(num_tokens, prefer=prefer_impl)).otherwise(
-            F.lit(eps)
-        )
+        F.when(is_conj, _window_col(num_tokens, batch=batch)).otherwise(F.lit(eps))
         + bm_norm
     )
     return agg.select("doc_id", score.alias("score"))
 
 
-def _window_col(num_tokens: int, prefer: str | None = None):
+def _window_col(num_tokens: int, batch: bool = False):
     """Window-score Column over the aggregated (qids, ps) shape.
 
-    SPARK_GRAFT_WINDOW_IMPL selects the implementation — all three are
-    bit-identical (property-pinned in tests/test_window_score_units.py):
+    Both kernels are bit-identical to ``3 * nt / min_window``
+    (property-pinned in tests/test_window_score_units.py):
 
-    - ``hof`` (default): JVM-side SQL higher-order-function expression —
+    - the HOF (default): JVM-side SQL higher-order-function expression —
       no Python workers in the query path.
-    - ``udfbatch``: Arrow-batched numpy kernel vectorised across the
-      whole batch (one lexsort + one segmented accumulate per batch) —
-      the fastest on corpus-sized conjunction sets.
-    - ``udf``: the per-doc numpy loop (legacy fallback / cross-check).
-
-    ``prefer`` is the caller's data-driven choice (e.g. the fused gate
-    prefers ``udfbatch`` for corpus-sized conjunctions, where it
-    measured 6-11% faster than hof — BASELINE.md round-4 addendum); an
-    explicitly set env var still wins, so operators can pin one kernel
-    fleet-wide.
+    - ``batch=True``: Arrow-batched numpy kernel vectorised
+      across the whole batch (one lexsort + one segmented accumulate per
+      batch). The fused gate picks it for corpus-sized conjunctions,
+      where it measured 6-11% faster than the HOF (BASELINE.md round-4
+      addendum).
     """
-    import os
-
     from pyspark.sql import functions as F
 
-    impl = os.environ.get("SPARK_GRAFT_WINDOW_IMPL") or prefer or "hof"
-    if impl == "udf":
-        from .window_score import window_score_nested_udf
-
-        return window_score_nested_udf(num_tokens)(F.col("qids"), F.col("ps"))
-    if impl == "udfbatch":
+    if batch:
         from .window_score import window_score_batch_udf
 
         return window_score_batch_udf(num_tokens)(F.col("qids"), F.col("ps"))
@@ -366,7 +352,7 @@ def score_candidates(
                 e,
                 num_tokens,
                 n_fragments=sum(df for _, _, df in terms),
-                prefer_impl="udfbatch" if corpus_sized else None,
+                batch=corpus_sized,
             )
     flags = e.groupBy("doc_id", "dl").agg(
         F.sum("bm").alias("bm_sum"), F.countDistinct("qid").alias("nq_present")
@@ -484,10 +470,8 @@ def free_query(
         # min-of-3: 1.88/1.87/1.90 s -> 1.14/1.03/1.07 s on the bench
         # queries, rank-identical). Single-distinct-term queries keep
         # score_candidates' closed form (no positions aggregate at all).
-        # The lazy plan is cached per (query, k, window impl) — see
-        # SearchIndex.cached_plan; the window impl env var is part of
-        # the key because _window_col reads it at plan-build time.
-        import os
+        # The lazy plan is cached per (query, k) — see
+        # SearchIndex.cached_plan.
 
         def build_plan():
             n_distinct = len({t for _, t, _ in terms})
@@ -509,8 +493,7 @@ def free_query(
 
         if not plan_cache:
             return build_plan()
-        impl = os.environ.get("SPARK_GRAFT_WINDOW_IMPL", "hof")
-        return index.cached_plan(("free", query, k, impl), build_plan)
+        return index.cached_plan(("free", query, k), build_plan)
     cleanup: list = []
     try:
         rows = (

@@ -50,33 +50,6 @@ def combined_score(bm25_normalized: float, pairs, num_tokens: int) -> float:
     )
 
 
-def min_window_np(pos, ids, num_tokens: int) -> int:
-    """Vectorised minimal covering window (numpy), equal to
-    :func:`min_window` on sorted input (property-tested).
-
-    For each right endpoint r, the minimal covering window ending at r
-    starts at ``l(r) = min over ids of (last occurrence of id <= r)``;
-    the answer is the min over r — the same quantity the reference's
-    two-pointer sweep computes (mod.rs:264-281).
-    """
-    import numpy as np
-
-    L = len(pos)
-    if L == 0:
-        return U32_MAX
-    pos = np.asarray(pos, dtype=np.int64)
-    ids = np.asarray(ids, dtype=np.int64)
-    M = np.full((num_tokens, L), -1, dtype=np.int64)
-    M[ids, np.arange(L)] = np.arange(L)
-    M = np.maximum.accumulate(M, axis=1)
-    m = M.min(axis=0)
-    valid = m >= 0
-    if not valid.any():
-        return U32_MAX
-    w = pos[valid] - pos[m[valid]] + 1
-    return int(w.min())
-
-
 def min_window_sql(qids: str, ps: str, num_tokens: int) -> str:
     """Spark SQL higher-order-function expression computing the same
     minimal covering window as :func:`min_window` — entirely JVM-side.
@@ -84,9 +57,9 @@ def min_window_sql(qids: str, ps: str, num_tokens: int) -> str:
     ``qids`` / ``ps`` are COLUMN NAMES (aligned ``array<int>`` /
     ``array<array<int>>``, the shape ``score_candidates`` aggregates).
     The expression is the per-right-endpoint formulation of
-    :func:`min_window_np`: flatten the per-term position lists into
+    :func:`min_windows_batch`: flatten the per-term position lists into
     (pos, qid) pairs, ``array_sort`` them (struct sort = (pos, qid)
-    lexicographic, identical to the UDF's lexsort), then one
+    lexicographic, identical to the batch kernel's lexsort), then one
     ``aggregate`` pass carrying (last-seen position per qid, best).
     For each pair the minimal covering window ENDING at its position
     starts at ``min over qids of last[qid]``; the answer is the min
@@ -160,9 +133,9 @@ def min_window_sql(qids: str, ps: str, num_tokens: int) -> str:
 
 def window_score_expr(qids: str, ps: str, num_tokens: int):
     """JVM-side window-score Column: ``3.0 * num_tokens / min_window``
-    over the same (qids, ps) shape :func:`window_score_nested_udf`
-    consumes — bit-identical output (``3.0 * nt`` folds to the same
-    double literal the UDF multiplies by; pinned in
+    over the same (qids, ps) shape :func:`window_score_batch_udf`
+    consumes — bit-identical to ``3.0 * nt / min_window`` (``3.0 * nt``
+    folds to one double literal; pinned in
     tests/test_window_score_units.py)."""
     from pyspark.sql import functions as F
 
@@ -171,7 +144,7 @@ def window_score_expr(qids: str, ps: str, num_tokens: int):
     )
 
 
-def min_windows_batch(pos, qid, doc_sizes, num_tokens: int):
+def min_windows_batch(pos, qid, doc_sizes, num_tokens: int, max_cells=None):
     """Vectorised minimal covering windows for a whole BATCH of docs in
     one pass — no per-doc Python or numpy-call overhead.
 
@@ -181,12 +154,20 @@ def min_windows_batch(pos, qid, doc_sizes, num_tokens: int):
     not covering). Same quantity as :func:`min_window` per doc.
 
     Method: one global lexsort by (doc, pos, qid), then the
-    per-right-endpoint formulation of :func:`min_window_np` batched
-    with a leak-guard — M[q, i] holds the GLOBAL index of the last
-    occurrence of token q at-or-before i via one maximum.accumulate
-    over the whole batch; an occurrence is only valid for doc d if the
-    index falls inside d's segment (>= the doc's start), which exactly
-    cancels the cross-doc leakage of the global accumulate."""
+    per-right-endpoint formulation (the minimal covering window ending
+    at pair i starts at the min over ids of their last occurrence
+    at-or-before i; the answer is the min over i) with a leak-guard —
+    M[q, i] holds the GLOBAL index of the last occurrence of token q
+    at-or-before i via a maximum.accumulate along the whole batch; an
+    occurrence is only valid for doc d if the index falls inside d's
+    segment (>= the doc's start), which exactly cancels the cross-doc
+    leakage of the global accumulate.
+
+    The last-seen matrix is built in column chunks of at most
+    ``max_cells`` int64 cells (default :data:`_BATCH_MATRIX_CELLS`),
+    each chunk's first column carrying the previous chunk's last
+    column, so memory stays O(L) however wide the query or long the
+    batch."""
     import numpy as np
 
     n_docs = len(doc_sizes)
@@ -200,10 +181,17 @@ def min_windows_batch(pos, qid, doc_sizes, num_tokens: int):
     starts = np.zeros(n_docs, dtype=np.int64)
     np.cumsum(doc_sizes[:-1], out=starts[1:])
     start_of = np.repeat(starts, doc_sizes)  # doc-major order survives the sort
-    M = np.full((num_tokens, L), -1, dtype=np.int64)
-    M[qid_s, np.arange(L)] = np.arange(L)
-    np.maximum.accumulate(M, axis=1, out=M)
-    m = M.min(axis=0)
+    step = max(1, (max_cells or _BATCH_MATRIX_CELLS) // num_tokens - 1)
+    m = np.empty(L, dtype=np.int64)
+    last = np.full(num_tokens, -1, dtype=np.int64)
+    for lo in range(0, L, step):
+        hi = min(lo + step, L)
+        M = np.full((num_tokens, hi - lo + 1), -1, dtype=np.int64)
+        M[:, 0] = last
+        M[qid_s[lo:hi], np.arange(1, hi - lo + 1)] = np.arange(lo, hi)
+        np.maximum.accumulate(M, axis=1, out=M)
+        m[lo:hi] = M[:, 1:].min(axis=0)
+        last = M[:, -1].copy()
     valid = m >= start_of
     win = np.full(L, U32_MAX, dtype=np.int64)
     win[valid] = pos_s[valid] - pos_s[m[valid]] + 1
@@ -218,18 +206,16 @@ def min_windows_batch(pos, qid, doc_sizes, num_tokens: int):
     return out
 
 
-# cap on the nt x L last-seen matrix a single vectorised pass allocates
-# (int64 cells); wider/longer batches are processed in doc-aligned
-# chunks so memory stays bounded regardless of batch size or query width
+# cap on the nt x L last-seen matrix one min_windows_batch chunk
+# allocates (int64 cells, 256 MB)
 _BATCH_MATRIX_CELLS = 32_000_000
 
 
 def window_score_batch_udf(num_tokens: int):
     """Arrow-batched pandas UDF computing ``3*nt/min_window`` for a
     whole batch of docs with ONE flatten + ONE lexsort + ONE segmented
-    accumulate (:func:`min_windows_batch`) — removes the per-doc
-    Python/numpy-call overhead that dominates
-    :func:`window_score_nested_udf` on corpus-sized candidate sets."""
+    accumulate (:func:`min_windows_batch`), so no per-doc Python or
+    numpy-call overhead on corpus-sized candidate sets."""
     import numpy as np
     import pandas as pd
 
@@ -272,68 +258,9 @@ def window_score_batch_udf(num_tokens: int):
         ne = nterm > 0
         if lens.size and ne.any():
             doc_sizes[ne] = np.add.reduceat(lens, term_starts[ne])
-        # doc-aligned chunking keeps the nt x L matrix bounded
-        max_rows = max(1, _BATCH_MATRIX_CELLS // max(num_tokens, 1))
-        outs = []
-        lo_doc = 0
-        lo_el = 0
-        while lo_doc < n:
-            hi_doc = lo_doc
-            el = 0
-            while hi_doc < n and (el + doc_sizes[hi_doc] <= max_rows or el == 0):
-                el += doc_sizes[hi_doc]
-                hi_doc += 1
-            outs.append(
-                min_windows_batch(
-                    pos[lo_el : lo_el + el],
-                    qid[lo_el : lo_el + el],
-                    doc_sizes[lo_doc:hi_doc],
-                    num_tokens,
-                )
-            )
-            lo_doc, lo_el = hi_doc, lo_el + el
-        w = np.concatenate(outs)
+        # the cap is read here, when the UDF is pickled, so a driver-side
+        # override reaches the Python workers
+        w = min_windows_batch(pos, qid, doc_sizes, num_tokens, _BATCH_MATRIX_CELLS)
         return pd.Series(WINDOW_SCORE_MULTIPLIER * num_tokens / w, dtype="float64")
-
-    return F.pandas_udf(fn, T.DoubleType())
-
-
-_NUMPY_CUTOVER = 32  # below this, the python loop beats numpy overhead
-
-
-def window_score_nested_udf(num_tokens: int):
-    """pandas UDF over per-term rows: (qids array<int>, positions
-    array<array<int>>) -> 3*nt/window.
-
-    The fast path for large candidate sets: upstream groups the
-    per-(doc, qid) POSITION ARRAYS as-is (a handful of rows per doc)
-    instead of exploding every position through the shuffle — same
-    bytes, ~tf× fewer shuffle rows. numpy flattens via concatenate +
-    repeat, so no per-position Python objects."""
-    import numpy as np
-    import pandas as pd
-
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    def fn(qids, positions):
-        out = []
-        for q_arr, p_arrs in zip(qids, positions):
-            lens = [len(p) for p in p_arrs]
-            total = sum(lens)
-            if total >= _NUMPY_CUTOVER:
-                p = np.concatenate([np.asarray(x, dtype=np.int64) for x in p_arrs])
-                q = np.repeat(np.asarray(q_arr, dtype=np.int64), lens)
-                order = np.lexsort((q, p))
-                w = min_window_np(p[order], q[order], num_tokens)
-            else:
-                pairs = sorted(
-                    (int(p), int(q))
-                    for q, ps in zip(q_arr, p_arrs)
-                    for p in ps
-                )
-                w = min_window(pairs, num_tokens)
-            out.append(WINDOW_SCORE_MULTIPLIER * num_tokens / w)
-        return pd.Series(out, dtype="float64")
 
     return F.pandas_udf(fn, T.DoubleType())

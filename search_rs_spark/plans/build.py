@@ -378,7 +378,7 @@ def build_index_from_term_doc(
     runner = StageRunner(spark, out_dir, fp, resume=True)
 
     # "tokens" table without the tokens column — SearchIndex.doc_lengths
-    # and LocalEngine read only (doc_id, url, doc_len) from it
+    # reads (doc_id, url, doc_len) from it, LocalEngine (doc_id, url)
     runner.run("tokens", lambda: doc_lengths.select("doc_id", "url", "doc_len"))
 
     if runner.is_done("stats"):

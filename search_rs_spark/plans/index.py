@@ -174,8 +174,8 @@ class SearchIndex:
         checkpointed) index — what's reused is the driver-side py4j
         plan construction + Catalyst analysis, ~0.3-0.5 s per query of
         pure scheduling overhead at small corpus sizes. Keys must
-        include everything the plan shape depends on (query, k, and
-        impl-selection env vars — callers own that contract)."""
+        include everything the plan shape depends on (query and k —
+        callers own that contract)."""
         df = self._query_plans.get(key)
         if df is None:
             df = build()

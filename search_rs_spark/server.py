@@ -12,10 +12,11 @@ Reference: /root/reference/server/src/main.rs —
 
 Implementation: stdlib ThreadingHTTPServer (no web framework in the
 sandbox) over :class:`operators.serving.LocalEngine` — the driver-local
-ms-latency path that loads the same parquet tables and shares the
-scoring code with the Spark engine, so results are identical by
-construction. POST /query answers JSON when the client sends
-``Accept: application/json``, HTML otherwise.
+ms-latency engine that loads the same parquet tables once, keeps the
+postings resident and scores them with vectorised numpy; its results
+equal the Spark engine's (tests/test_serving.py). POST /query answers
+JSON when the client sends ``Accept: application/json``, HTML
+otherwise.
 """
 
 from __future__ import annotations

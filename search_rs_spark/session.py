@@ -56,6 +56,13 @@ def ensure_workers_can_import(spark: SparkSession) -> None:
         pass  # already added
 
 
+def _default_driver_memory() -> str:
+    """Half of physical memory, capped at 16g: the JVM must be able to
+    commit its whole heap (``-Xms`` equals it), or it exits at start."""
+    half_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**21
+    return f"{min(half_mb, 16 * 1024)}m"
+
+
 def get_spark(
     cores: int | None = None,
     app: str = "search_rs_spark",
@@ -66,6 +73,7 @@ def get_spark(
         cores = int(os.environ.get("SPARK_GRAFT_CPUS", "0") or 0) or (os.cpu_count() or 4)
     if shuffle_partitions is None:
         shuffle_partitions = max(cores, 4)
+    heap = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory()
 
     # Make this package importable in Spark's Python workers regardless of
     # the driver's cwd (spark-submit --py-files equivalent for local mode).
@@ -89,11 +97,8 @@ def get_spark(
         # local mode: the driver heap IS the executor memory — with 32
         # concurrent sort/aggregate tasks a small heap GC-thrashes, and a
         # small initial heap pays ~1 min of growth+GC on the first heavy job
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
-        .config(
-            "spark.driver.extraJavaOptions",
-            "-Xms" + os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
-        )
+        .config("spark.driver.memory", heap)
+        .config("spark.driver.extraJavaOptions", "-Xms" + heap)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # push bounded IN-lists (e.g. WAND's literal block restriction,

@@ -232,16 +232,15 @@ def test_fused_gate_routes_window_kernel_by_conjunction_size(
 ):
     """The fused gate's own signal also selects the window kernel:
     corpus-sized conjunctions prefer the batch numpy kernel (measured
-    6-11% faster exactly there), a merely FORCED fused plan keeps the
-    HOF default (no Python workers), and an explicitly set
-    SPARK_GRAFT_WINDOW_IMPL always wins."""
+    6-11% faster exactly there), and a merely FORCED fused plan keeps
+    the HOF default (no Python workers)."""
     from search_rs_spark.operators import bm25 as bm25_mod
 
     prefs = []
     real = bm25_mod._score_fused
 
     def spy(e, num_tokens, **kw):
-        prefs.append(kw.get("prefer_impl"))
+        prefs.append(kw.get("batch"))
         return real(e, num_tokens, **kw)
 
     monkeypatch.setattr(bm25_mod, "_score_fused", spy)
@@ -250,21 +249,19 @@ def test_fused_gate_routes_window_kernel_by_conjunction_size(
     bm25_mod.score_candidates(
         wand_index, head_terms, k=5, cleanup=[], prefilter=True
     )
-    assert prefs == ["udfbatch"], "corpus-sized conjunction must prefer udfbatch"
+    assert prefs == [True], "corpus-sized conjunction must pick the batch UDF"
     prefs.clear()
     # forced fused with a rare conjunction: HOF default stays
     rare_terms = [(0, "the", 3), (1, "of", 2)]
     bm25_mod.score_candidates(
         wand_index, rare_terms, k=5, cleanup=[], prefilter=True, fused=True
     )
-    assert prefs == [None], "forced-but-small conjunction must keep the default"
-    # env override beats the preference in both directions
-    monkeypatch.setenv("SPARK_GRAFT_WINDOW_IMPL", "hof")
-    col_hof = bm25_mod._window_col(2, prefer="udfbatch")
-    assert "pythonUDF" not in repr(col_hof) and "fn(" not in repr(col_hof)
-    monkeypatch.delenv("SPARK_GRAFT_WINDOW_IMPL")
-    col_pref = bm25_mod._window_col(2, prefer="udfbatch")
+    assert prefs == [False], "forced-but-small conjunction must keep the HOF"
+    # _window_col follows the flag: batch UDF when set, else HOF
+    col_pref = bm25_mod._window_col(2, batch=True)
     assert repr(col_pref).startswith("Column<'fn(")
+    col_hof = bm25_mod._window_col(2)
+    assert "pythonUDF" not in repr(col_hof) and "fn(" not in repr(col_hof)
 
 
 # ---------------------------------------------------------------------------

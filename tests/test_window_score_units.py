@@ -1,9 +1,10 @@
 """Hand-derived vectors for the minimal covering window (Q11).
 
-These are independent of the oracle: min_window is SHARED between the
-Spark UDF, the oracle, and the serving engine, so a bug there would
-cancel out in rank-identity tests — these vectors pin the semantics
-(mod.rs:255-286) directly.
+These are independent of the oracle: min_window is the oracle's
+kernel and the reference every other window kernel (the Spark HOF
+expression, the batch UDF, the serving engine's batch kernel) is
+pinned to, so a bug there would cancel out in rank-identity tests —
+these vectors pin the semantics (mod.rs:255-286) directly.
 """
 
 import pytest
@@ -27,6 +28,12 @@ VECTORS = [
 ]
 
 
+def _reference_score(qids, ps, nt):
+    """``3*nt/min_window`` over one doc's (qids, per-term positions)."""
+    pairs = [(p, q) for q, pos in zip(qids, ps) for p in pos]
+    return 3.0 * nt / min_window(pairs, nt)
+
+
 @pytest.mark.parametrize("pairs,nt,expected", VECTORS)
 def test_min_window_vectors(pairs, nt, expected):
     assert min_window(pairs, nt) == expected
@@ -44,14 +51,15 @@ def test_combined_score_formula():
 
 
 def test_nested_flatten_equals_pairwise():
-    """The nested-array UDF's flatten (concatenate + repeat + lexsort)
+    """The batch kernel over the nested (qids, per-term positions)
+    flatten (concatenate + repeat, as window_score_batch_udf builds it)
     must agree with the pairwise two-pointer on random per-term
     position groups — the exact shape score_candidates ships."""
     import random
 
     import numpy as np
 
-    from search_rs_spark.operators.window_score import min_window_np
+    from search_rs_spark.operators.window_score import min_windows_batch
 
     rng = random.Random(41)
     for _ in range(300):
@@ -65,32 +73,26 @@ def test_nested_flatten_equals_pairwise():
             parrs.append(pos)
             pairs.extend((p, qid) for p in pos)
         expected = min_window(sorted(pairs), nt)
-        if parrs:
-            lens = [len(p) for p in parrs]
-            p = np.concatenate([np.asarray(x, dtype=np.int64) for x in parrs])
-            q = np.repeat(np.asarray(qids, dtype=np.int64), lens)
-            order = np.lexsort((q, p))
-            got = min_window_np(p[order], q[order], nt)
-        else:
-            got = U32_MAX
+        lens = [len(p) for p in parrs]
+        p = (
+            np.concatenate([np.asarray(x, dtype=np.int64) for x in parrs])
+            if parrs
+            else np.empty(0, dtype=np.int64)
+        )
+        q = np.repeat(np.asarray(qids, dtype=np.int64), lens)
+        got = min_windows_batch(p, q, [len(p)], nt)[0]
         assert got == expected, (qids, parrs, nt, got, expected)
 
 
-def test_hof_expr_equals_udf_on_spark(spark):
+def test_hof_expr_equals_min_window_on_spark(spark):
     """The JVM-side higher-order-function window expression must be
-    BIT-identical to the pandas-UDF path over the property corpus —
-    same (qids, ps) nested shape score_candidates ships, including
-    non-covering docs (absent terms -> U32_MAX window) and duplicate
-    positions. This is the pinned A/B equality the round-3 verdict
-    asked for before switching the default to the HOF path."""
+    BIT-identical to ``3*nt/min_window`` (the oracle's kernel) over the
+    property corpus — same (qids, ps) nested shape score_candidates
+    ships, including non-covering docs (absent terms -> U32_MAX window)
+    and duplicate positions."""
     import random
 
-    from pyspark.sql import functions as F
-
-    from search_rs_spark.operators.window_score import (
-        window_score_expr,
-        window_score_nested_udf,
-    )
+    from search_rs_spark.operators.window_score import window_score_expr
 
     rng = random.Random(1234)
     by_nt: dict[int, list] = {}
@@ -119,42 +121,20 @@ def test_hof_expr_equals_udf_on_spark(spark):
             rows, "doc_id int, qids array<int>, ps array<array<int>>"
         )
         got = df.select(
-            "doc_id",
-            window_score_expr("qids", "ps", nt).alias("hof"),
-            window_score_nested_udf(nt)(F.col("qids"), F.col("ps")).alias("udf"),
+            "doc_id", window_score_expr("qids", "ps", nt).alias("hof")
         ).collect()
+        expected = {i: _reference_score(q, ps, nt) for i, q, ps in rows}
         for r in got:
-            assert r["hof"] == r["udf"], (nt, r)
-
-
-def test_min_window_np_equals_loop():
-    import random
-
-    import numpy as np
-
-    from search_rs_spark.operators.window_score import min_window_np
-
-    rng = random.Random(99)
-    for _ in range(500):
-        nt = rng.randint(1, 6)
-        n = rng.randint(0, 80)
-        pairs = sorted(
-            (rng.randint(0, 200), rng.randint(0, nt - 1)) for _ in range(n)
-        )
-        expected = min_window(pairs, nt)
-        if pairs:
-            arr = np.asarray(pairs, dtype=np.int64)
-            got = min_window_np(arr[:, 0], arr[:, 1], nt)
-        else:
-            got = min_window_np([], [], nt)
-        assert got == expected, (pairs, nt, got, expected)
+            assert r["hof"] == expected[r["doc_id"]], (nt, r)
 
 
 def test_min_windows_batch_equals_loop():
     """The batch-vectorised kernel (one lexsort + leak-guarded global
     accumulate over a whole batch) must equal the per-doc reference on
     random multi-doc batches, including non-covering docs, absent
-    tokens, duplicate positions, and empty docs."""
+    tokens, duplicate positions, and empty docs — also when a small
+    matrix cap splits the accumulate into many column chunks, down to
+    one column each."""
     import random
 
     import numpy as np
@@ -181,19 +161,21 @@ def test_min_windows_batch_equals_loop():
             expected.append(min_window(sorted(pairs), nt))
             pos_l.extend(p for p, _ in pairs)
             qid_l.extend(q for _, q in pairs)
-        got = min_windows_batch(
-            np.asarray(pos_l, dtype=np.int64),
-            np.asarray(qid_l, dtype=np.int64),
-            np.asarray(sizes, dtype=np.int64),
-            nt,
-        )
-        assert list(got) == expected, (trial, nt, sizes, list(got), expected)
+        for max_cells in (None, 40, 1):
+            got = min_windows_batch(
+                np.asarray(pos_l, dtype=np.int64),
+                np.asarray(qid_l, dtype=np.int64),
+                np.asarray(sizes, dtype=np.int64),
+                nt,
+                max_cells,
+            )
+            assert list(got) == expected, (trial, nt, max_cells, list(got), expected)
 
 
-def test_batch_udf_equals_hof_and_nested_on_spark(spark):
+def test_batch_udf_equals_hof_and_min_window_on_spark(spark):
     """Three-way bit-identity on the production (qids, ps) shape:
-    batch UDF == nested UDF == HOF expression, including the
-    doc-aligned chunking path (matrix cap forced tiny)."""
+    batch UDF == HOF expression == ``3*nt/min_window``, including the
+    chunked matrix path (matrix cap forced tiny)."""
     import random
 
     from pyspark.sql import functions as F
@@ -217,13 +199,14 @@ def test_batch_udf_equals_hof_and_nested_on_spark(spark):
     )
     orig_cap = ws._BATCH_MATRIX_CELLS
     try:
-        ws._BATCH_MATRIX_CELLS = 64  # force many doc-aligned chunks
+        ws._BATCH_MATRIX_CELLS = 64  # force many matrix chunks
         got = df.select(
+            "doc_id",
             ws.window_score_batch_udf(4)(F.col("qids"), F.col("ps")).alias("b"),
-            ws.window_score_nested_udf(4)(F.col("qids"), F.col("ps")).alias("u"),
             ws.window_score_expr("qids", "ps", 4).alias("h"),
         ).collect()
     finally:
         ws._BATCH_MATRIX_CELLS = orig_cap
+    expected = {i: _reference_score(q, ps, 4) for i, q, ps in rows}
     for r in got:
-        assert r["b"] == r["u"] == r["h"], r
+        assert r["b"] == r["h"] == expected[r["doc_id"]], r
