@@ -268,7 +268,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     )
 
     # the REAL engine path, DuckDB-hash-gated: a stem=False index makes
-    # the engine's own join/prefilter/top-k plan SQL-expressible (the
+    # the engine's own join/aggregate/top-k plan SQL-expressible (the
     # single-term query's window component is the closed-form 3.0; the
     # boolean path has no scores). These gate operators/bm25.py +
     # operators/boolean.py themselves, not the sql_parity re-expression.
@@ -324,15 +324,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         _streamed_index(s, d), "data", k=NOSTEM_K
     ).select("doc_id", F.round("score", 6).alias("score"))
 
-    # the FUSED single-pass plan (one explode, one positions-carrying
-    # aggregate, no theta job — what auto mode takes for corpus-sized
-    # conjunctions; forced here because the driver sf corpora are tiny)
-    # under the SAME 2-term DuckDB window oracle: hash-gates the fused
-    # aggregate's aligned collect_lists + window expression dataflow.
-    # Since round 5 the fused gate also routes corpus-sized conjunctions
-    # to the BATCH numpy window kernel — head terms over the sf corpus
-    # trip that signal, so this row hash-gates the udfbatch kernel too
-    # (hof is gated by the plain 2term/3term rows)
+    # the engine's one scoring plan (one explode, one aggregate carrying
+    # the position arrays next to the bm sums) returned WHOLE, before
+    # the top-k: every scored doc of the 2-term query, conjunction and
+    # partial, under the SAME 2-term DuckDB window oracle. The sf
+    # corpora are far below BATCH_WINDOW_MIN_DOCS, so this row runs the
+    # HOF window kernel; the batch UDF is pinned against it by
+    # tests/test_window_score_units.py
     def _fused_2term(s, d):
         from search_rs_spark.operators.bm25 import (
             resolve_query_terms,
@@ -341,9 +339,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
         idx = _index(s, d, stem=False)
         terms = resolve_query_terms(idx, "data query")
-        return score_candidates(
-            idx, terms, k=NOSTEM_K, prefilter=True, fused=True
-        ).select("doc_id", F.round("score", 6).alias("score"))
+        return score_candidates(idx, terms).select(
+            "doc_id", F.round("score", 6).alias("score")
+        )
 
     q["engine_free_query_nostem_2term_fused"] = _fused_2term
 

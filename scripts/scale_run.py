@@ -135,20 +135,19 @@ def main() -> None:
         spark = get_spark(cores=16, shuffle_partitions=64, extra_conf=BUILD_CONF)
         idx = SearchIndex.load(spark, out)
         # one untimed warmup (JIT + relation cache)
-        free_query(idx, "merge sort", k=100, plan_cache=False).collect()
+        free_query(idx, "merge sort", k=100).collect()
         res = {}
         for name, q in QUERIES:
             best = None
             for _ in range(reps):
                 t0 = time.time()
-                rows = free_query(idx, q, k=100, plan_cache=False).collect()
+                rows = free_query(idx, q, k=100).collect()
                 dt = time.time() - t0
                 best = dt if best is None or dt < best else best
             res[name] = {"sec": round(best, 2), "rows": len(rows),
                          "top1": [rows[0]["doc_id"], round(rows[0]["score"], 4)]}
         t0 = time.time()
-        rows = free_query_wand(idx, "the time world man year", k=100,
-                               plan_cache=False).collect()
+        rows = free_query_wand(idx, "the time world man year", k=100).collect()
         res["wand_head5_auto"] = {"sec": round(time.time() - t0, 2),
                                   "rows": len(rows)}
         print(json.dumps({"phase": "queries", "index": out, "results": res}))

@@ -179,14 +179,14 @@ class BitReader:
 # ---------------------------------------------------------------------------
 
 
-def encode_postings(doc_ids, tfs, positions) -> bytes:
+def encode_postings_with_bitlen(doc_ids, tfs, positions) -> tuple[bytes, int]:
     """Encode one term's postings to the reference bit layout.
 
     Layout (postings.rs:57-75): ``vbyte(n_docs)`` then per posting
     ``gamma(doc_id_gap), gamma(tf), vbyte(n_positions),
-    gamma(position_gap)*``. Returned blob is byte-aligned (the
-    reference stream is bit-contiguous across terms; per-term blobs are
-    re-concatenated at the bit level by the file writer).
+    gamma(position_gap)*``. Returns the byte-aligned blob and its bit
+    length (the reference stream is bit-contiguous across terms; the
+    file writer re-concatenates per-term blobs at the bit level).
     """
     w = BitWriter()
     w.write_vbyte(len(doc_ids))
@@ -203,26 +203,12 @@ def encode_postings(doc_ids, tfs, positions) -> bytes:
             w.write_gamma(p - prev_pos)
             prev_pos = p
         prev_doc = d
-    return w.to_bytes()
-
-
-def encode_postings_with_bitlen(doc_ids, tfs, positions) -> tuple[bytes, int]:
-    w = BitWriter()
-    w.write_vbyte(len(doc_ids))
-    prev_doc = 0
-    for i, d in enumerate(doc_ids):
-        d = int(d)
-        w.write_gamma(d - prev_doc)
-        w.write_gamma(int(tfs[i]))
-        pos = positions[i]
-        w.write_vbyte(len(pos))
-        prev_pos = 0
-        for p in pos:
-            p = int(p)
-            w.write_gamma(p - prev_pos)
-            prev_pos = p
-        prev_doc = d
     return w.to_bytes(), w.bit_len
+
+
+def encode_postings(doc_ids, tfs, positions) -> bytes:
+    """:func:`encode_postings_with_bitlen` without the bit length."""
+    return encode_postings_with_bitlen(doc_ids, tfs, positions)[0]
 
 
 def decode_postings(blob: bytes) -> tuple[list[int], list[int], list[list[int]]]:

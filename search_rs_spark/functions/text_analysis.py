@@ -16,6 +16,8 @@ the Python oracle instead).
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -33,18 +35,21 @@ LANG_STOPWORDS = {
 LANG_ORDER = ["en", "de", "fr", "es"]
 
 
-def _scan_width(docs: DataFrame) -> DataFrame:
+def widen_scan(docs: DataFrame) -> DataFrame:
     """Spread CPU-bound per-row work across the cluster when the input
     arrives narrow (a small single-file parquet scans as ONE task, so a
-    shuffle-free operator would otherwise serialize all its md5 work on
-    one core). Target = max(shuffle conf, the input's own 128 MB-split
-    scan width): widening a narrow input is the point, but a corpus
-    that already scans wider than the conf must not be shrunk. Same
-    contract as operators/dedup._parallelize (kept local — functions/
-    must not import from operators/)."""
-    import os
+    shuffle-free operator would otherwise serialize all its md5/shingle
+    work on one core). Target = max(shuffle conf, the input's own scan
+    width): widening a narrow input is the point, but a corpus that
+    already scans wider than the conf must NOT be shrunk (that would
+    serialize the work and enlarge task memory at scale).
 
-    spark = docs.sparkSession
+    Scan width = 128 MB-split count for locally sizeable files (what
+    Spark itself would schedule), 1 per file whose size is unknowable
+    here (remote URIs), 0 when ``inputFiles`` is empty or raises
+    (non-file DataFrames). DataFrame-native; no plan-to-RDD conversion.
+    Shared by this module and operators/dedup.py (functions/ must not
+    import from operators/)."""
     try:
         files = docs.inputFiles()
     except Exception:
@@ -56,8 +61,8 @@ def _scan_width(docs: DataFrame) -> DataFrame:
             splits += max(1, -(-os.path.getsize(p) // (128 << 20)))
         else:
             splits += 1
-    target = max(int(spark.conf.get("spark.sql.shuffle.partitions", "32")), splits)
-    return docs.repartition(target, F.col("doc_id"))
+    conf = int(docs.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
+    return docs.repartition(max(conf, splits), F.col("doc_id"))
 
 
 def _arr(words: list[str]) -> str:
@@ -340,7 +345,7 @@ def winnow_fingerprints(docs: DataFrame, k: int = WINNOW_K, w: int = WINNOW_W) -
     posexploded one row per character and shuffled them into a
     doc_id-partitioned sliding window — rows shuffled = characters
     scanned, plus a second exchange for the global distinct; the one
-    exchange left is ``_scan_width``'s repartition of the slim
+    exchange left is ``widen_scan``'s repartition of the slim
     (doc_id, text) rows, which exists only to widen narrow scans
     (measured at sf0.1: 3.84 s -> 1.31 s noop, plan = 1 slim Exchange
     + 0 Window vs per-character Exchange + Window + distinct
@@ -350,7 +355,7 @@ def winnow_fingerprints(docs: DataFrame, k: int = WINNOW_K, w: int = WINNOW_W) -
     row).
     """
     s = F.concat_ws(" ", F.expr(SPARK_TOKENS))
-    d = _scan_width(docs).select("doc_id", s.alias("txt"))
+    d = widen_scan(docs).select("doc_id", s.alias("txt"))
     n_g = F.greatest(F.length("txt") - F.lit(k - 1), F.lit(0))
     hps = F.when(
         n_g > 0,

@@ -100,22 +100,9 @@ def _not_operator(index, operand: DataFrame) -> DataFrame:
     )
 
 
-def boolean_query(index, query: str, plan_cache: bool = True) -> DataFrame:
-    """-> DataFrame (doc_id, url, score=1.0) ordered by doc_id.
-
-    The lazy plan is cached per raw query string on the index handle
-    (SearchIndex.cached_plan — the reference server's LRU is keyed the
-    same way, server/src/main.rs:123-128); collects still re-execute
-    (modulo AQE stage reuse — see free_query's plan_cache note; pass
-    False to measure cold query arrival, as bench.py does)."""
-    if not plan_cache:
-        return _boolean_query_plan(index, query)
-    return index.cached_plan(
-        ("boolean", query), lambda: _boolean_query_plan(index, query)
-    )
-
-
-def _boolean_query_plan(index, query: str) -> DataFrame:
+def boolean_query(index, query: str) -> DataFrame:
+    """-> DataFrame (doc_id, url, score=1.0) ordered by doc_id; a lazy
+    plan, built fresh per call."""
     postfix = infix_to_postfix(query)
     stack: list[DataFrame] = []
     for p in postfix:

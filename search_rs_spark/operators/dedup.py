@@ -25,12 +25,11 @@ signature per doc (bit-majority over token hashes).
 from __future__ import annotations
 
 import logging
-import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.text_analysis import DUCK_TOKENS, SPARK_TOKENS
+from ..functions.text_analysis import DUCK_TOKENS, SPARK_TOKENS, widen_scan
 
 log = logging.getLogger("search_rs_spark.dedup")
 
@@ -132,47 +131,13 @@ def _duck_shingles(k: int = SHINGLE_K, tokens: str = "toks") -> str:
 _DUCK_TOKS_CTE = f"SELECT doc_id, {DUCK_TOKENS} AS toks FROM documents"
 
 
-def _scan_splits(docs: DataFrame) -> int:
-    """Lower bound on the input's natural scan parallelism: 128 MB-split
-    count for locally sizeable files (what Spark itself would schedule
-    for the scan), 1 per file whose size is unknowable here (remote
-    URIs). Returns 0 — "no bound" to callers — only when ``inputFiles``
-    is empty or raises (non-file DataFrames). DataFrame-native
-    (``inputFiles``); no plan-to-RDD conversion."""
-    try:
-        files = docs.inputFiles()
-    except Exception:
-        return 0
-    splits = 0
-    for uri in files:
-        p = uri[len("file:"):] if uri.startswith("file:") else None
-        if p and os.path.exists(p):
-            splits += max(1, -(-os.path.getsize(p) // (128 << 20)))
-        else:
-            splits += 1
-    return splits
-
-
-def _parallelize(docs: DataFrame) -> DataFrame:
-    """Small single-file inputs arrive as one partition; the md5/shingle
-    work is CPU-bound, so spread it across the cluster explicitly.
-    Target = max(shuffle conf, the input's own scan width): widening a
-    single-file input is the point, but a large corpus that already
-    scans wider than the conf must NOT be shrunk (that would serialize
-    md5/shingle work and enlarge task memory at scale)."""
-    spark = docs.sparkSession
-    conf_target = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    target = max(conf_target, _scan_splits(docs))
-    return docs.repartition(target, F.col("doc_id"))
-
-
 def _shingled(docs: DataFrame, toks_col: str | None = None) -> DataFrame:
     # tokens in their own projection: referenced >1 time by the shingle
     # fragment, so CollapseProject keeps the regexp out of the lambda.
     # ``toks_col`` names a pre-tokenized column (same SPARK_TOKENS
     # expression materialized upstream) so composed pipelines tokenize
     # the corpus once — see operators/corpus_filter.py.
-    toks = _parallelize(docs).select(
+    toks = widen_scan(docs).select(
         "doc_id",
         (F.col(toks_col) if toks_col else F.expr(SPARK_TOKENS)).alias("toks"),
     )
@@ -623,7 +588,7 @@ def simhash_signatures(docs: DataFrame) -> DataFrame:
     """(doc_id, simhash): 32-char bitstring; bit d = majority vote of the
     high bit of md5(token) hex nibble d, weighted by term frequency."""
     t = F.expr(SPARK_TOKENS)
-    toks = _parallelize(docs).select("doc_id", F.explode(t).alias("tok"))
+    toks = widen_scan(docs).select("doc_id", F.explode(t).alias("tok"))
     weighted = toks.groupBy("doc_id", "tok").agg(F.count(F.lit(1)).alias("tf"))
     hashed = weighted.select(
         "doc_id", "tf", F.md5("tok").alias("h")

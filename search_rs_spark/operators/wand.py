@@ -161,7 +161,6 @@ def free_query_wand(
     query: str,
     k: int = 100,
     force_protocol: bool | None = None,
-    plan_cache: bool = True,
 ) -> DataFrame:
     """Rank-identical to operators.bm25.free_query, with block pruning.
 
@@ -211,7 +210,7 @@ def free_query_wand(
             index.doc_lengths.select("doc_id", "url", F.lit(0.0).alias("score")).limit(0)
         )
     if force_protocol is False:
-        return free_query(index, query, k, plan_cache=plan_cache)
+        return free_query(index, query, k)
 
     if force_protocol is None:
         # zero-job forms of the pre-gates:
@@ -226,16 +225,16 @@ def free_query_wand(
         import math
 
         if len({t for _, t, _ in terms}) == 1:
-            return free_query(index, query, k, plan_cache=plan_cache)
+            return free_query(index, query, k)
         block_span = int(index.stats.get("block_span") or 1)
         max_spans = math.ceil(index.num_docs / block_span)
         if max_spans <= SPAN_GATE_FACTOR * COVERAGE_FACTOR * k:
-            return free_query(index, query, k, plan_cache=plan_cache)
+            return free_query(index, query, k)
         # absolute-volume gate: dfs arrived with resolve_query_terms,
         # so this costs nothing (see MIN_PRUNABLE_POSTINGS)
         sum_df = sum({t: df for _, t, df in terms}.values())
         if sum_df <= MIN_PRUNABLE_POSTINGS:
-            return free_query(index, query, k, plan_cache=plan_cache)
+            return free_query(index, query, k)
         # blanket estimate (zero-job): the in-plan blanket gate below
         # needs span_upper_bounds — a full postings scan of the query
         # terms that pruning then throws away when it fires (measured
@@ -268,11 +267,9 @@ def free_query_wand(
             min(dfs) / n >= HEAD_DF_FRACTION
             and miss_est <= 1.0 - BLANKET_FRACTION
         ):
-            return free_query(index, query, k, plan_cache=plan_cache)
+            return free_query(index, query, k)
 
     span_ub = span_upper_bounds(index, terms).persist()
-
-    cleanup: list = []
     try:
         # ---- pass 1: coverage set, picked distributedly -------------------
         # top-N by ub is bounded by COVERAGE_FACTOR*k rows (each span
@@ -323,17 +320,9 @@ def free_query_wand(
                 n_spans <= SPAN_GATE_FACTOR * target
                 or n_full >= BLANKET_FRACTION * n_spans
             ):
-                return free_query(index, query, k, plan_cache=plan_cache)
-        # prefilter=False: the block restriction already bounds each
-        # pass's candidate set (COVERAGE_FACTOR*k spans / ub survivors),
-        # so score_candidates' own theta pre-pass would only add a
-        # second persist + collect per pass — measured 10.4 s -> with
-        # the inner prefilter off, the pass count halves
+                return free_query(index, query, k)
         first_top = (
-            score_candidates(
-                index, terms, blocks=first_rep, k=k, cleanup=cleanup,
-                prefilter=False,
-            )
+            score_candidates(index, terms, blocks=first_rep)
             .orderBy(F.desc("score"), F.asc("doc_id"))
             .limit(k)
             .collect()
@@ -346,13 +335,12 @@ def free_query_wand(
         if force_protocol is None:
             survivors = span_ub.filter(F.col("ub") >= F.lit(theta)).count()
             if survivors >= SURVIVOR_BAILOUT_FRACTION * n_spans:
-                return free_query(index, query, k, plan_cache=plan_cache)
+                return free_query(index, query, k)
 
         # ---- pass 2: every other span that could still alter the top-k ----
         # >= (not >): a doc could score exactly theta and win a doc_id
-        # tie-break. Each pass's own doc-level prefilter (k) only drops
-        # docs provably below >= k docs of the SAME pass, so the merged
-        # top-k stays exact.
+        # tie-break. The two passes score disjoint span sets exactly, so
+        # the merged top-k of their top-ks is the exact top-k.
         remaining = span_ub.filter(F.col("ub") >= F.lit(theta))
         if first_df is None:
             remaining = remaining.filter(~F.col("block_id").isin(first_blocks))
@@ -376,18 +364,13 @@ def free_query_wand(
                 else remaining
             )
             second_top = (
-                score_candidates(
-                    index, terms, blocks=blocks2, k=k, cleanup=cleanup,
-                    prefilter=False,
-                )
+                score_candidates(index, terms, blocks=blocks2)
                 .orderBy(F.desc("score"), F.asc("doc_id"))
                 .limit(k)
                 .collect()
             )
     finally:
         span_ub.unpersist(blocking=False)
-        for c in cleanup:
-            c.unpersist(blocking=False)
 
     merged = sorted(
         list(first_top) + list(second_top),

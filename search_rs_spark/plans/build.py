@@ -90,7 +90,6 @@ def build_index(
     block_span: int = DEFAULT_BLOCK_SPAN,
     resume: bool = True,
     corpus_fingerprint: str | None = None,
-    encode_blobs: bool = False,
 ) -> "list[dict]":
     """Build all index tables under ``out_dir``; returns stage metrics.
 
@@ -124,7 +123,6 @@ def build_index(
             "stem": stem,
             "lang": lang,
             "block_span": block_span,
-            "encode_blobs": encode_blobs,
             "layout": 7,
         }
     )
@@ -221,8 +219,7 @@ def build_index(
     term_only = tokens.select(F.explode("terms").alias("term"))
 
     _build_downstream(
-        runner, spark, term_doc, stats, min_f, block_span, encode_blobs,
-        term_only=term_only,
+        runner, spark, term_doc, stats, min_f, block_span, term_only=term_only
     )
     return runner.metrics
 
@@ -238,7 +235,7 @@ def _norm_expr(e, avgdl):
 
 
 def _build_downstream(
-    runner, spark, term_doc, stats, min_f, block_span, encode_blobs, term_only=None
+    runner, spark, term_doc, stats, min_f, block_span, term_only=None
 ):
     """vocabulary (B8/B9) + blocked postings (B10) from a term_doc table —
     shared by the batch build and the streaming-delta finalizer.
@@ -295,7 +292,7 @@ def _build_downstream(
                 F.collect_list(F.struct("doc_id", "tf", "doc_len", "positions"))
             ).alias("plist")
         )
-        out = grouped.select(
+        return grouped.select(
             "term_id",
             "term",
             "df",
@@ -314,26 +311,6 @@ def _build_downstream(
             agg_parts,
             F.col("term"),
         ).sortWithinPartitions("term", "block_id")
-        if encode_blobs:
-            # reference-layout binary blob per block (gap + gamma/vbyte,
-            # postings.rs:57-75) via an Arrow-batched pandas UDF
-            from ..functions.codecs import encode_postings
-
-            def enc_fn(doc_ids, tfs, positions):
-                import pandas as pd
-
-                return pd.Series(
-                    [
-                        encode_postings(list(d), list(t), [list(x) for x in p])
-                        for d, t, p in zip(doc_ids, tfs, positions)
-                    ]
-                )
-
-            enc_udf = F.pandas_udf(enc_fn, "binary")
-            out = out.withColumn(
-                "postings_bytes", enc_udf("doc_ids", "tfs", "positions")
-            )
-        return out
 
     runner.run("postings", make_postings)
 
@@ -346,7 +323,6 @@ def build_index_from_term_doc(
     min_f: int = 0,
     max_p: float = 1.0,
     block_span: int = DEFAULT_BLOCK_SPAN,
-    encode_blobs: bool = False,
     fingerprint_hint: str = "deltas",
     stem: bool = True,
 ) -> "list[dict]":
@@ -370,7 +346,6 @@ def build_index_from_term_doc(
             "min_f": min_f,
             "max_p": max_p,
             "block_span": block_span,
-            "encode_blobs": encode_blobs,
             "stem": stem,
             "layout": 6,
         }
@@ -403,5 +378,5 @@ def build_index_from_term_doc(
         "term_doc",
         lambda: term_doc.select("term", "doc_id", "doc_len", "tf", "positions"),
     )
-    _build_downstream(runner, spark, td, stats, min_f, block_span, encode_blobs)
+    _build_downstream(runner, spark, td, stats, min_f, block_span)
     return runner.metrics

@@ -37,8 +37,6 @@ DRIVER_VOCAB_MAX_TERMS = 2_000_000
 SMALL_SCAN_BYTES = 64 * 1024 * 1024
 SMALL_SCAN_TARGET_BYTES = 16 * 1024 * 1024
 
-QUERY_PLAN_CACHE_MAX = 32
-
 
 def _dir_bytes(path: str) -> int:
     total = 0
@@ -58,7 +56,6 @@ class SearchIndex:
     stats: dict
     _driver_vocab: "DriverVocabulary | None" = field(default=None, repr=False)
     _stage_dfs: dict = field(default_factory=dict, repr=False)
-    _query_plans: dict = field(default_factory=dict, repr=False)
 
     @classmethod
     def load(cls, spark: SparkSession, path: str) -> "SearchIndex":
@@ -163,26 +160,6 @@ class SearchIndex:
         except (OSError, json.JSONDecodeError, ValueError):
             pass
         return self.vocabulary.count()
-
-    def cached_plan(self, key: tuple, build) -> DataFrame:
-        """Analyzed-plan cache for lazy query plans (FIFO, bounded).
-
-        The reference server caches full query RESULTS keyed by the raw
-        query string (LRU size 10, server/src/main.rs:21,123-128);
-        caching only the analyzed LAZY plan is strictly weaker: every
-        collect re-executes the query against the (immutable,
-        checkpointed) index — what's reused is the driver-side py4j
-        plan construction + Catalyst analysis, ~0.3-0.5 s per query of
-        pure scheduling overhead at small corpus sizes. Keys must
-        include everything the plan shape depends on (query and k —
-        callers own that contract)."""
-        df = self._query_plans.get(key)
-        if df is None:
-            df = build()
-            if len(self._query_plans) >= QUERY_PLAN_CACHE_MAX:
-                self._query_plans.pop(next(iter(self._query_plans)))
-            self._query_plans[key] = df
-        return df
 
     def idf(self, df: int) -> float:
         """BM25 idf (mod.rs:158-159), intended-df semantics per SURVEY §1.4."""

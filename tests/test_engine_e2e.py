@@ -138,41 +138,22 @@ def test_resume_skips_stages(spark, tmp_path):
     assert all(m.get("skipped") for m in m2 if "stage" in m)
 
 
-def test_plan_cache_contract(fixture_index):
-    """cached_plan semantics: a repeated (query, k) returns the SAME
-    analyzed Dataset (plan + AQE stage reuse), plan_cache=False builds
-    a fresh plan, and cache hits return identical results to a fresh
-    plan."""
-    a = free_query(fixture_index, "hello world", k=10)
-    b = free_query(fixture_index, "hello world", k=10)
-    assert a is b
-    fresh = free_query(fixture_index, "hello world", k=10, plan_cache=False)
-    assert fresh is not a
-    rows = lambda df: [(r["doc_id"], round(r["score"], 9)) for r in df.collect()]
-    assert rows(a) == rows(fresh)
-    # boolean side: same-string hit, identical results either way
-    x = boolean_query(fixture_index, "hello AND NOT world")
-    assert x is boolean_query(fixture_index, "hello AND NOT world")
-    assert rows(x) == rows(
-        boolean_query(fixture_index, "hello AND NOT world", plan_cache=False)
-    )
-
-
 def test_fused_aggregate_sizes_its_shuffle_from_fragments(fixture_index, monkeypatch):
-    """The fused plan's positions-carrying aggregate must size its
-    shuffle from sum(df) over the query tokens — same memory shape and
-    mechanism as the build's postings stage. Below the conf the plan is
-    untouched; above it exactly ONE data-sized exchange feeds the
-    aggregate, and results are identical either way."""
-    from search_rs_spark.operators.bm25 import _score_fused, scored_hits
+    """The scoring aggregate must size its shuffle from sum(df) over the
+    query tokens — same memory shape and mechanism as the build's
+    postings stage. Below the conf the plan is untouched; above it
+    exactly ONE data-sized exchange feeds the aggregate, and results
+    are identical either way."""
+    from search_rs_spark.operators.bm25 import score_candidates
     from search_rs_spark.plans import build as bmod
 
-    terms = [(0, "hello", 2), (1, "world", 2)]
+    # dfs stated as 250 each: sum(df) = 500 fragments drives the sizing
+    terms = [(0, "hello", 250), (1, "world", 250)]
     rows = lambda df: sorted(
         (r["doc_id"], round(r["score"], 9)) for r in df.collect()
     )
-    plain = _score_fused(scored_hits(fixture_index, terms), 2, n_fragments=4)
-    # 4 fragments < 4M threshold -> no data-sized repartition appears
+    plain = score_candidates(fixture_index, terms)
+    # 500 fragments < 4M threshold -> no data-sized repartition appears
     # (on this tiny fixture the coalesced single-partition scan already
     # satisfies the aggregate's distribution, so NO exchange at all)
     assert (
@@ -182,7 +163,7 @@ def test_fused_aggregate_sizes_its_shuffle_from_fragments(fixture_index, monkeyp
 
     # force the data-sized count above the conf
     monkeypatch.setattr(bmod, "POSTINGS_FRAGMENTS_PER_PARTITION", 1)
-    sized = _score_fused(scored_hits(fixture_index, terms), 2, n_fragments=500)
+    sized = score_candidates(fixture_index, terms)
     plan = sized._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange hashpartitioning") == 1, plan
     assert "500" in plan  # the data-sized partition count reached the exchange

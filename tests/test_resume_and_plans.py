@@ -72,29 +72,15 @@ def test_physical_plan_properties(spark, small_index):
     assert "BroadcastHashJoin" in plan  # query terms broadcast, never shuffled
     assert "term#" in plan and " IN (" in plan  # IN-filter reaches the scan
 
-    # the distributed bounded top-k happens inside free_query's eager
-    # scoring pass; pin it on the scoring plan it collects from
-    from search_rs_spark.operators.bm25 import score_candidates
-    from pyspark.sql import functions as F
-
-    cleanup = []
-    scoring = (
-        score_candidates(idx, terms, k=10, cleanup=cleanup)
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(10)
-    )
-    topk_plan = scoring._jdf.queryExecution().executedPlan().toString()
-    for c in cleanup:
-        c.unpersist(blocking=False)
-    assert "TakeOrderedAndProject" in topk_plan  # distributed bounded top-k
-
-    # the returned DataFrame joins only the k winners (broadcast)
+    # the distributed bounded top-k sits inside free_query's own lazy
+    # plan, and the returned DataFrame joins only the k winners (broadcast)
     result_plan = (
         free_query(idx, "the world time", 10)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
     )
+    assert "TakeOrderedAndProject" in result_plan  # distributed bounded top-k
     assert "BroadcastHashJoin" in result_plan
 
 
@@ -147,3 +133,30 @@ def test_postings_aggregate_reuses_explicit_partitioning(spark):
         .toString()
     )
     assert plan.count("Exchange hashpartitioning") == 1, plan
+
+
+def test_free_query_stays_lazy_at_corpus_scale(spark, small_index):
+    """free_query is one lazy plan at every corpus size: on a handle
+    claiming 1M docs no Spark job runs before the caller collects, and
+    nothing is persisted (no InMemoryTableScan in the executed plan)."""
+    idx, _ = small_index
+    big = SearchIndex(
+        spark=spark, path=idx.path, stats={**idx.stats, "num_docs": 1_000_000}
+    )
+    # driver-side vocabulary + stage relations load once per handle;
+    # those jobs are not the query's
+    big.driver_vocab()
+    _ = (big.postings, big.doc_lengths)
+    sc = spark.sparkContext
+    group = "free_query_lazy"
+    sc.setJobGroup(group, "free_query laziness")
+    try:
+        df = free_query(big, "the world time", 10)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "InMemoryTableScan" not in plan, plan
+        assert len(df.collect()) == 10
+        # the tracker does see this group's jobs once the caller collects
+        assert list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc._jsc.clearJobGroup()

@@ -9,6 +9,7 @@ from search_rs_spark.functions.text_analysis import (
     WINNOW_K,
     WINNOW_W,
     bpe_token_counts,
+    widen_scan,
     winnow_fingerprints,
 )
 
@@ -92,3 +93,26 @@ def test_winnow_disjoint_texts_share_nothing(spark):
     for r in winnow_fingerprints(d).collect():
         fps[r["doc_id"]].add(r["fp"])
     assert fps[0] and fps[1] and not (fps[0] & fps[1])
+
+
+def test_widen_scan_spreads_to_the_input_width_never_below_conf(spark, tmp_path):
+    """The repartition target is max(shuffle conf, the input's scan
+    width): a 3-file local parquet input at conf 1 is spread over 3
+    partitions, a 1-file input stays at the conf (1, then 4)."""
+    rows = spark.range(30).withColumnRenamed("id", "doc_id")
+    three, one = str(tmp_path / "three"), str(tmp_path / "one")
+    rows.repartition(3).write.parquet(three)
+    rows.coalesce(1).write.parquet(one)
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "1")
+    try:
+        wide = spark.read.parquet(three)
+        assert len(wide.inputFiles()) == 3
+        assert widen_scan(wide).rdd.getNumPartitions() == 3
+        narrow = spark.read.parquet(one)
+        assert widen_scan(narrow).rdd.getNumPartitions() == 1
+        spark.conf.set(key, "4")
+        assert widen_scan(narrow).rdd.getNumPartitions() == 4
+    finally:
+        spark.conf.set(key, old)

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from search_rs_spark.operators.bm25 import free_query
 from search_rs_spark.operators.wand import free_query_wand, span_upper_bounds
+from search_rs_spark.oracle import build_oracle, oracle_free_query
 from search_rs_spark.plans.build import build_index
 from search_rs_spark.plans.index import SearchIndex
 from search_rs_spark.sources.webtext import WEBTEXT_SCHEMA, _EPOCH, wrap_html
@@ -131,137 +132,63 @@ def test_wand_empty_query(wand_index):
     assert free_query_wand(wand_index, "zzzzqqq", 10).count() == 0
 
 
-@pytest.mark.parametrize("q,k", QUERIES)
-def test_two_stage_prefilter_is_lossless(wand_index, q, k):
-    """The doc-level lb/ub prefilter (forced on — the auto threshold
-    would skip it at this corpus size) must reproduce the fully
-    exhaustive (unpruned) scoring's top-k exactly."""
-    from search_rs_spark.operators.bm25 import resolve_query_terms, score_candidates
-
-    terms = resolve_query_terms(wand_index, q)
-    exhaustive = (
-        score_candidates(wand_index, terms)  # k=None: no pruning at all
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-        .collect()
-    )
-    cleanup = []
-    pruned = (
-        score_candidates(
-            wand_index, terms, k=k, cleanup=cleanup, prefilter=True, fused=False
-        )
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-        .collect()
-    )
-    for c in cleanup:
-        c.unpersist(blocking=False)
-    assert cleanup, "prefilter did not engage"
-    assert [r["doc_id"] for r in pruned] == [r["doc_id"] for r in exhaustive]
-    for p, e in zip(pruned, exhaustive):
-        assert math.isclose(p["score"], e["score"], rel_tol=1e-9)
+@pytest.fixture(scope="module")
+def wand_oracle(spark):
+    """Python oracle over the same seeded corpus as ``wand_index``."""
+    wt = synthesize_webtext(spark, 300, seed=11, vocab_size=400, mean_len=50)
+    rows = wt.select("url", "text").collect()
+    return build_oracle([(r["url"], r["text"]) for r in rows])
 
 
 @pytest.mark.parametrize(
     "q,k", [(q, k) for q, k in QUERIES if len(set(q.split())) > 1]
 )
-def test_fused_single_pass_plan_is_lossless(wand_index, q, k):
-    """The fused all-head plan (one explode, one aggregate carrying the
-    position arrays, no theta job — forced on; the conj_lb auto gate
-    would skip it at this corpus size) must reproduce the unpruned
-    scoring's top-k with bit-identical scores."""
-    from search_rs_spark.operators.bm25 import resolve_query_terms, score_candidates
-
-    terms = resolve_query_terms(wand_index, q)
-    exhaustive = (
-        score_candidates(wand_index, terms)
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-        .collect()
-    )
-    fused = (
-        score_candidates(wand_index, terms, k=k, prefilter=True, fused=True)
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-        .collect()
-    )
-    assert [r["doc_id"] for r in fused] == [r["doc_id"] for r in exhaustive]
-    for f, e in zip(fused, exhaustive):
-        assert math.isclose(f["score"], e["score"], rel_tol=1e-9, abs_tol=1e-12)
-
-
-def test_fused_auto_gate_is_conjunction_bound_driven(wand_index, monkeypatch):
-    """Auto mode takes the fused plan iff the Bonferroni conjunction
-    lower bound sum(df) - (m-1)*N clears FUSED_CONJ_FRACTION * N."""
-    from search_rs_spark.operators import bm25 as bm25_mod
-
-    called = []
-    real = bm25_mod._score_fused
-
-    def spy(e, num_tokens, **kw):
-        called.append(num_tokens)
-        return real(e, num_tokens, **kw)
-
-    monkeypatch.setattr(bm25_mod, "_score_fused", spy)
-    n = wand_index.num_docs
-    # synthetic head terms: every df = N => conj_lb = N >= fraction * N
-    head_terms = [(0, "the", n), (1, "of", n)]
-    bm25_mod.score_candidates(
-        wand_index, head_terms, k=5, cleanup=[], prefilter=True
-    )
-    assert called == [2], "all-head dfs must route to the fused plan"
-    called.clear()
-    # rare terms: conj_lb <= 0 AND independence estimate ~ 6/N docs
-    # => theta path
-    rare_terms = [(0, "the", 3), (1, "of", 2)]
-    bm25_mod.score_candidates(
-        wand_index, rare_terms, k=5, cleanup=[], prefilter=True
-    )
-    assert called == [], "rare dfs must keep the two-stage theta path"
-    # mid terms: Bonferroni bound is vacuous (sum(df) = N) but the
-    # independence estimate N/4 clears FUSED_CONJ_EST_FRACTION
-    mid_terms = [(0, "the", n // 2), (1, "of", n // 2)]
-    bm25_mod.score_candidates(
-        wand_index, mid_terms, k=5, cleanup=[], prefilter=True
-    )
-    assert called == [2], "mid dfs must route to the fused plan via the estimate"
+def test_fused_single_pass_plan_is_lossless(wand_index, wand_oracle, q, k):
+    """The one scoring plan (one explode, one aggregate carrying the
+    position arrays next to the bm sums) must reproduce the reference
+    oracle's top-k with the same scores — multi-term queries, one with
+    a duplicated token."""
+    got = free_query(wand_index, q, k).collect()
+    want = oracle_free_query(wand_oracle, q, k=k)
+    assert [r["doc_id"] for r in got] == [d for d, _, _ in want]
+    for r, (_, _, es) in zip(got, want):
+        assert math.isclose(r["score"], es, rel_tol=1e-9, abs_tol=1e-12)
 
 
 def test_fused_gate_routes_window_kernel_by_conjunction_size(
     wand_index, monkeypatch
 ):
-    """The fused gate's own signal also selects the window kernel:
-    corpus-sized conjunctions prefer the batch numpy kernel (measured
-    6-11% faster exactly there), and a merely FORCED fused plan keeps
-    the HOF default (no Python workers)."""
+    """One constant picks the window kernel: the batch UDF iff the
+    Bonferroni conjunction bound sum(df) - (m-1)*N clears
+    BATCH_WINDOW_MIN_DOCS, the HOF otherwise, and no window kernel at
+    all for a single distinct term (closed form). Both kernels give the
+    same scores."""
     from search_rs_spark.operators import bm25 as bm25_mod
 
-    prefs = []
-    real = bm25_mod._score_fused
+    def plan(terms):
+        df = bm25_mod.score_candidates(wand_index, terms)
+        return df, df._jdf.queryExecution().executedPlan().toString()
 
-    def spy(e, num_tokens, **kw):
-        prefs.append(kw.get("batch"))
-        return real(e, num_tokens, **kw)
+    def rows(df):
+        return sorted((r["doc_id"], r["score"]) for r in df.collect())
 
-    monkeypatch.setattr(bm25_mod, "_score_fused", spy)
-    n = wand_index.num_docs
-    head_terms = [(0, "the", n), (1, "of", n)]
-    bm25_mod.score_candidates(
-        wand_index, head_terms, k=5, cleanup=[], prefilter=True
-    )
-    assert prefs == [True], "corpus-sized conjunction must pick the batch UDF"
-    prefs.clear()
-    # forced fused with a rare conjunction: HOF default stays
-    rare_terms = [(0, "the", 3), (1, "of", 2)]
-    bm25_mod.score_candidates(
-        wand_index, rare_terms, k=5, cleanup=[], prefilter=True, fused=True
-    )
-    assert prefs == [False], "forced-but-small conjunction must keep the HOF"
-    # _window_col follows the flag: batch UDF when set, else HOF
-    col_pref = bm25_mod._window_col(2, batch=True)
-    assert repr(col_pref).startswith("Column<'fn(")
-    col_hof = bm25_mod._window_col(2)
-    assert "pythonUDF" not in repr(col_hof) and "fn(" not in repr(col_hof)
+    terms = bm25_mod.resolve_query_terms(wand_index, "the of")
+    bound = sum(df for _, _, df in terms) - wand_index.num_docs
+    assert len({t for _, t, _ in terms}) == 2 and bound > 0
+
+    monkeypatch.setattr(bm25_mod, "BATCH_WINDOW_MIN_DOCS", bound)
+    batch, batch_plan = plan(terms)
+    assert "ArrowEvalPython" in batch_plan, batch_plan
+
+    monkeypatch.setattr(bm25_mod, "BATCH_WINDOW_MIN_DOCS", bound + 1)
+    hof, hof_plan = plan(terms)
+    assert "ArrowEvalPython" not in hof_plan and "collect_list" in hof_plan
+    assert rows(batch) == rows(hof)
+
+    monkeypatch.setattr(bm25_mod, "BATCH_WINDOW_MIN_DOCS", 0)
+    _, single_plan = plan(bm25_mod.resolve_query_terms(wand_index, "the the"))
+    assert "ArrowEvalPython" not in single_plan
+    assert "collect_list" not in single_plan, single_plan
 
 
 # ---------------------------------------------------------------------------
