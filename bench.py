@@ -5,7 +5,7 @@ Prints ONE JSON line:
    "queries": {name: sec, ...}, "sf": ..., ...extras}
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-     SPARK_GRAFT_CPUS (default 32).
+     SPARK_GRAFT_CPUS (default: this host's CPU count).
 
 ``--scaling`` mode runs the build twice in fresh subprocesses at
 local[N] and local[4N] (default 2 and 8 — see run_scaling) on the same
@@ -25,7 +25,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
 
 
 def _sf_label(sf_dir: str) -> float:

@@ -8,7 +8,7 @@ Usage:
   python bench_extra.py plans <outdir>   # capture explain("formatted")
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-     SPARK_GRAFT_CPUS (default 32), SPARK_GRAFT_REPS (default 3).
+     SPARK_GRAFT_CPUS (default: this host's CPU count), SPARK_GRAFT_REPS (default 3).
 """
 
 from __future__ import annotations
@@ -23,7 +23,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
 REPS = int(os.environ.get("SPARK_GRAFT_REPS", "3"))
 
 

@@ -5,9 +5,10 @@ Spark re-expression of ``Engine::free_query``
 
 1. tokenize+stem the query with the build-identical preprocessor, then
    spellcheck each token (dropping unmatched ones) — driver side.
-2. join the tiny query-terms set against the blocked postings table
-   (Catalyst prunes to the query terms' row groups; the query-terms
-   side is broadcast).
+2. bind the query terms inside the plan: a pushed ``term IN (...)``
+   scan filter on the blocked postings table (parquet row-group
+   skipping) and a literal term -> [(qid, idf)] map looked up per
+   postings row (:func:`bind_terms`) — no join, no broadcast.
 3. explode postings; per-posting BM25 contribution
    ``idf * tf*(k1+1) / (tf + k1*(1-b+b*dl/avgdl))`` (mod.rs:162-169)
    with the idf computed driver-side from the vocabulary df.
@@ -19,7 +20,9 @@ Spark re-expression of ``Engine::free_query``
    (TakeOrderedAndProject — the heap of heap.rs:32-63; ties broken by
    doc_id, which the reference leaves unspecified).
 
-One lazy plan at every corpus size, like the reference's single pass;
+One lazy plan at every corpus size, like the reference's single pass,
+built as ONE ``spark.sql`` statement over the handle's stage relations
+(~40 py4j round trips; the DataFrame-API form took ~800 per query);
 pruning at scale is block-max WAND's job (operators/wand.py). No RDDs,
 no driver-side scoring: the only collect is the final k rows.
 ``doc_len`` rides inside the postings blocks, so scoring requires no
@@ -28,6 +31,8 @@ winners.
 """
 
 from __future__ import annotations
+
+import math
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -39,7 +44,7 @@ from .window_score import (
     U32_MAX,
     WINDOW_SCORE_MULTIPLIER,
     window_score_batch_udf,
-    window_score_expr,
+    window_score_sql,
 )
 
 NUM_RESULTS = 100  # search/src/main.rs:10
@@ -94,6 +99,81 @@ def resolve_query_terms(index, query: str) -> list[tuple[int, str, int]]:
     return out
 
 
+def sql_str(s: str) -> str:
+    """A SQL string literal for ``spark.sql`` text that also goes
+    through its ``{name}`` formatter: backslash and quote escaped,
+    braces doubled. Only vocabulary terms are spliced this way — never
+    raw user text."""
+    lit = "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+    return lit.replace("{", "{{").replace("}", "}}")
+
+
+def sql_double(x: float) -> str:
+    """A DOUBLE literal with the exact bits of ``x``: ``repr`` is the
+    shortest round-trip decimal, which the parser reads back correctly
+    rounded."""
+    x = float(x)
+    if not math.isfinite(x):
+        raise ValueError(f"cannot splice {x!r} as a SQL literal")
+    return f"{x!r}D"
+
+
+def bind_terms(structs: dict[str, list[str]], fields: str, where: str = "") -> str:
+    """FROM-clause text binding query terms inside the plan: the
+    postings rows of the terms in ``structs`` (and matching the extra
+    predicate ``where``), each repeated once per struct its term maps
+    to, with the struct's fields as the columns named in ``fields``.
+
+    The terms go in twice, as literals: a ``term IN (...)`` scan filter
+    (PushedFilters; the postings files are term-sorted, so parquet
+    row-group stats skip other terms) and a literal
+    ``map(term -> array(struct))`` that ``inline`` looks each row's
+    term up in. No query-terms relation is built, joined or broadcast,
+    so binding costs no py4j round trip and no Spark job of its own."""
+    keys = sorted(structs)
+    in_list = ", ".join(sql_str(t) for t in keys)
+    entries = ", ".join(
+        f"{sql_str(t)}, array({', '.join(structs[t])})" for t in keys
+    )
+    return (
+        f"(SELECT * FROM {{postings}} WHERE term IN ({in_list}){where}) "
+        f"LATERAL VIEW inline(element_at(map({entries}), term)) q AS {fields}"
+    )
+
+
+def _hits_sql(index, terms, blocks, hint: str = "") -> tuple[str, dict]:
+    """-> (SELECT text, relations) of :func:`scored_hits`."""
+    structs: dict[str, list[str]] = {}
+    for qid, t, df in terms:
+        structs.setdefault(t, []).append(
+            f"struct({int(qid)}, {sql_double(index.idf(df))})"
+        )
+    rels = {"postings": index.postings}
+    if isinstance(blocks, list):
+        ids = ", ".join(str(int(b)) for b in blocks)
+        where = f" AND block_id IN ({ids})" if blocks else " AND FALSE"
+    elif blocks is not None:
+        where = " AND block_id IN (SELECT block_id FROM {blocks})"
+        rels["blocks"] = blocks
+    else:
+        where = ""
+    avgdl = sql_double(index.avgdl or 1.0)
+    k1, b = sql_double(BM25_K1), sql_double(BM25_B)
+    bm = (
+        f"idf * (tf * {sql_double(BM25_K1 + 1.0)}) / "
+        f"(tf + {k1} * ({sql_double(1.0 - BM25_B)} + {b} * dl / {avgdl}))"
+    )
+    text = (
+        f"SELECT {hint}qid, idf, doc_id, tf, dl, positions, {bm} AS bm FROM ("
+        "SELECT qid, idf, doc_id, CAST(tf_i AS DOUBLE) AS tf, "
+        "CAST(dl_i AS DOUBLE) AS dl, pos AS positions "
+        f"FROM {bind_terms(structs, 'qid, idf', where)} "
+        "LATERAL VIEW inline(arrays_zip(doc_ids, tfs, dls, positions)) p "
+        "AS doc_id, tf_i, dl_i, pos)"
+    )
+    return text, rels
+
+
 def scored_hits(
     index,
     terms: list[tuple[int, str, int]],
@@ -104,68 +184,69 @@ def scored_hits(
     ``blocks`` restricts to the given posting blocks BEFORE the arrays
     are exploded (block-max WAND's pruned exact pass). Two forms:
 
-    - a bounded ``list[int]`` of block ids becomes a literal IN filter
-      folded into the scan predicate: the postings files are sorted by
-      (term, block_id) within partitions, so parquet row-group stats +
-      the pushed In filter skip the pruned blocks' row groups — the
-      positions arrays of skipped blocks are never read or decompressed
-      (measured 2x vs the semi-join on a warm 10M-doc scan, more cold).
-      Callers must bound the list (wand.py caps at MAX_LITERAL_BLOCKS)
-      — an unbounded literal predicate blows up plan compile time.
-    - a block_id DataFrame becomes a broadcast LEFT SEMI join — the
-      fallback when the surviving-block set is too large to inline
-      (it prunes the explode, not the scan).
+    - a bounded ``list[int]`` of block ids becomes a literal
+      ``block_id IN (...)`` folded into the scan predicate: the
+      postings files are sorted by (term, block_id) within partitions,
+      so parquet row-group stats + the pushed In filter skip the pruned
+      blocks' row groups — the positions arrays of skipped blocks are
+      never read or decompressed (measured 2x vs the semi-join on a
+      warm 10M-doc scan, more cold). Callers must bound the list
+      (wand.py caps at MAX_LITERAL_BLOCKS) — an unbounded literal
+      predicate blows up plan compile time.
+    - a block_id DataFrame becomes an ``IN (SELECT block_id ...)``
+      subquery, planned as a LEFT SEMI join — the fallback when the
+      surviving-block set is too large to inline (it prunes the
+      explode, not the scan).
     """
-    spark = index.spark
-    # one spark.sql call instead of createDataFrame: the terms table is
-    # a handful of rows and createDataFrame's py4j/serialization round
-    # trip costs ~0.15 s per query — measurable against a warm sub-2 s
-    # query. repr() emits the shortest round-trip decimal and the
-    # quoted-string cast (Double.parseDouble, correctly rounded) yields
-    # the identical double F.lit would embed. Vocabulary terms are
-    # alnum-only (tokenizer contract); quotes escaped defensively.
-    rows = ", ".join(
-        "({}, '{}', CAST('{!r}' AS DOUBLE))".format(
-            int(qid), term.replace("'", "''"), float(index.idf(df))
-        )
-        for qid, term, df in terms
-    )
-    qdf = spark.sql(f"SELECT * FROM VALUES {rows} AS t(qid, term, idf)")
-    # explicit IN-filter so the parquet scan gets PushedFilters on the
-    # term-sorted postings files (row-group skipping), in addition to the
-    # broadcast join that attaches qid/idf
-    postings = index.postings.filter(
-        F.col("term").isin(sorted({t for _, t, _ in terms}))
-    )
-    if isinstance(blocks, list):
-        postings = postings.filter(
-            F.col("block_id").isin([int(b) for b in blocks])
-        )
-    elif blocks is not None:
-        postings = postings.join(
-            F.broadcast(blocks.select("block_id")), "block_id", "left_semi"
-        )
-    hits = postings.join(F.broadcast(qdf), "term")
-    avgdl = index.avgdl or 1.0
+    text, rels = _hits_sql(index, terms, blocks)
+    return index.spark.sql(text, **rels)
 
-    e = hits.select(
-        "qid",
-        "idf",
-        F.explode(F.arrays_zip("doc_ids", "tfs", "dls", "positions")).alias("p"),
-    ).select(
-        "qid",
-        "idf",
-        F.col("p.doc_ids").alias("doc_id"),
-        F.col("p.tfs").cast("double").alias("tf"),
-        F.col("p.dls").cast("double").alias("dl"),
-        F.col("p.positions").alias("positions"),
+
+def _candidates_sql(index, terms, blocks) -> tuple[str, dict]:
+    """-> (SELECT text, relations) of :func:`score_candidates`."""
+    num_tokens = len(terms)
+    dfs = {t: df for _, t, df in terms}
+    # the multi-term aggregate buffers its partition's (qid, positions)
+    # fragments in collect_list state — the same memory shape as the
+    # build's postings stage, so it sizes its shuffle the same way
+    # (POSTINGS_FRAGMENTS_PER_PARTITION): sum(df) over the query tokens
+    # counts the exploded rows exactly and is known driver-side for
+    # free. At or below the session conf the plan is untouched. The
+    # repartition on a subset of the grouping keys satisfies the
+    # aggregate's distribution, so no second exchange appears
+    # (plan-pinned in test_engine_e2e).
+    spark = index.spark
+    conf_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    parts = postings_shuffle_partitions(sum(df for _, _, df in terms), conf_parts)
+    hint = f"/*+ REPARTITION({parts}, doc_id, dl) */ " if parts > conf_parts else ""
+    hits, rels = _hits_sql(index, terms, blocks, hint)
+    bm_norm = f"bm_sum * {sql_double(BM25_SCORE_MULTIPLIER)} / dl"
+    if len(dfs) == 1:
+        agg = f"SELECT doc_id, dl, sum(bm) AS bm_sum FROM ({hits}) GROUP BY doc_id, dl"
+        score = f"{sql_double(WINDOW_SCORE_MULTIPLIER * num_tokens)} + {bm_norm}"
+        return f"SELECT doc_id, {score} AS score FROM ({agg})", rels
+    # two collect_lists in one aggregate see rows in the same order, so
+    # qids[i] owns ps[i]; the position arrays ride the shuffle unexploded
+    agg = (
+        "SELECT doc_id, dl, sum(bm) AS bm_sum, collect_list(qid) AS qids, "
+        f"collect_list(positions) AS ps FROM ({hits}) GROUP BY doc_id, dl"
     )
-    return e.withColumn(
-        "bm",
-        F.col("idf")
-        * (F.col("tf") * (BM25_K1 + 1.0))
-        / (F.col("tf") + BM25_K1 * (1.0 - BM25_B + BM25_B * F.col("dl") / F.lit(avgdl))),
+    conj_lb = sum(dfs.values()) - (len(dfs) - 1) * index.num_docs
+    if conj_lb >= BATCH_WINDOW_MIN_DOCS:
+        # built per call: the UDF pickles the kernel's matrix cap when
+        # it is created, so a driver-side override reaches the workers
+        name = f"window_score_batch_{num_tokens}"
+        spark.udf.register(name, window_score_batch_udf(num_tokens))
+        window = f"{name}(qids, ps)"
+    else:
+        window = window_score_sql("qids", "ps", num_tokens)
+    eps = sql_double(WINDOW_SCORE_MULTIPLIER * num_tokens / U32_MAX)
+    # one row per (qid, doc) upstream, so qids holds distinct ids
+    score = (
+        f"CASE WHEN size(qids) = {num_tokens} THEN {window} ELSE {eps} END"
+        f" + {bm_norm}"
     )
+    return f"SELECT doc_id, {score} AS score FROM ({agg})", rels
 
 
 def score_candidates(
@@ -187,83 +268,49 @@ def score_candidates(
     (``3*nt/window + bm_sum/dl``, the HOF or, past
     BATCH_WINDOW_MIN_DOCS, the batch UDF — bit-identical).
     """
-    num_tokens = len(terms)
-    dfs = {t: df for _, t, df in terms}
-    e = scored_hits(index, terms, blocks=blocks)
-    # the multi-term aggregate buffers its partition's (qid, positions)
-    # fragments in collect_list state — the same memory shape as the
-    # build's postings stage, so it sizes its shuffle the same way
-    # (POSTINGS_FRAGMENTS_PER_PARTITION): sum(df) over the query tokens
-    # counts the exploded rows exactly and is known driver-side for
-    # free. At or below the session conf the plan is untouched. The
-    # repartition on a subset of the grouping keys satisfies the
-    # aggregate's distribution, so no second exchange appears
-    # (plan-pinned in test_engine_e2e).
-    conf_parts = int(e.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
-    parts = postings_shuffle_partitions(sum(df for _, _, df in terms), conf_parts)
-    if parts > conf_parts:
-        e = e.repartition(parts, "doc_id", "dl")
-    bm_norm = BM25_SCORE_MULTIPLIER * F.col("bm_sum") / F.col("dl")
-    if len(dfs) == 1:
-        agg = e.groupBy("doc_id", "dl").agg(F.sum("bm").alias("bm_sum"))
-        score = F.lit(WINDOW_SCORE_MULTIPLIER * num_tokens) + bm_norm
-        return agg.select("doc_id", score.alias("score"))
-    # two collect_lists in one aggregate see rows in the same order, so
-    # qids[i] owns ps[i]; the position arrays ride the shuffle unexploded
-    agg = e.groupBy("doc_id", "dl").agg(
-        F.sum("bm").alias("bm_sum"),
-        F.collect_list("qid").alias("qids"),
-        F.collect_list("positions").alias("ps"),
-    )
-    conj_lb = sum(dfs.values()) - (len(dfs) - 1) * index.num_docs
-    if conj_lb >= BATCH_WINDOW_MIN_DOCS:
-        window = window_score_batch_udf(num_tokens)(F.col("qids"), F.col("ps"))
-    else:
-        window = window_score_expr("qids", "ps", num_tokens)
-    eps = WINDOW_SCORE_MULTIPLIER * num_tokens / U32_MAX
-    # one row per (qid, doc) upstream, so qids holds distinct ids
-    is_conj = F.size("qids") == num_tokens
-    score = F.when(is_conj, window).otherwise(F.lit(eps)) + bm_norm
-    return agg.select("doc_id", score.alias("score"))
+    text, rels = _candidates_sql(index, terms, blocks)
+    return index.spark.sql(text, **rels)
 
 
-TOPK_SCHEMA = "doc_id bigint, score double"
-
-
-def _with_urls(index, topk: DataFrame) -> DataFrame:
+def _with_urls_sql(top: str) -> str:
     """(doc_id, score) winners -> (doc_id, url, score), score-desc /
     doc_id-asc; the broadcast join touches only the k winners."""
     return (
-        index.doc_lengths.join(F.broadcast(topk), "doc_id")
-        .select("doc_id", "url", "score")
-        .orderBy(F.desc("score"), F.asc("doc_id"))
+        "SELECT /*+ BROADCAST(top) */ d.doc_id, d.url, top.score "
+        f"FROM {{docs}} d JOIN ({top}) top ON d.doc_id = top.doc_id "
+        "ORDER BY score DESC, doc_id"
+    )
+
+
+def empty_result(index) -> DataFrame:
+    """The (doc_id, url, score) answer of a query with no terms."""
+    return index.spark.sql(
+        "SELECT doc_id, url, 0.0D AS score FROM {docs} LIMIT 0",
+        docs=index.doc_lengths,
     )
 
 
 def materialize_topk(index, rows) -> DataFrame:
-    """k winner rows (driver-side) -> (doc_id, url, score) DataFrame."""
-    return _with_urls(
-        index,
-        index.spark.createDataFrame(
-            [(int(r["doc_id"]), float(r["score"])) for r in rows], TOPK_SCHEMA
-        ),
+    """k winner rows (driver-side) -> (doc_id, url, score) DataFrame,
+    the winners spliced as one VALUES literal."""
+    if not rows:
+        return empty_result(index)
+    values = ", ".join(
+        f"({int(r['doc_id'])}L, {sql_double(r['score'])})" for r in rows
     )
+    top = f"SELECT * FROM VALUES {values} AS t(doc_id, score)"
+    return index.spark.sql(_with_urls_sql(top), docs=index.doc_lengths)
 
 
 def free_query(index, query: str, k: int = NUM_RESULTS) -> DataFrame:
     """-> DataFrame (doc_id, url, score), score-desc / doc_id-asc, k rows.
 
-    One lazy plan at every corpus size: :func:`score_candidates`, a
-    distributed top-k, then urls for the k winners. Nothing runs until
-    the caller collects."""
+    One lazy plan at every corpus size, built as one ``spark.sql``
+    statement: :func:`score_candidates`, a distributed top-k, then urls
+    for the k winners. Nothing runs until the caller collects."""
     terms = resolve_query_terms(index, query)
     if not terms:
-        return (
-            index.doc_lengths.select("doc_id", "url", F.lit(0.0).alias("score")).limit(0)
-        )
-    return _with_urls(
-        index,
-        score_candidates(index, terms)
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k),
-    )
+        return empty_result(index)
+    scored, rels = _candidates_sql(index, terms, None)
+    top = f"SELECT doc_id, score FROM ({scored}) ORDER BY score DESC, doc_id LIMIT {int(k)}"
+    return index.spark.sql(_with_urls_sql(top), docs=index.doc_lengths, **rels)

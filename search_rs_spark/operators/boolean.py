@@ -14,17 +14,18 @@ Faithfully reproduced quirks (each pinned by a test):
   non-empty case is the complement over ``0..n`` (postings.rs:188-198);
 - every boolean hit scores a constant 1.0 (mod.rs:122-127).
 
-Evaluation is DataFrame set algebra — semi-join (AND), union + dedup
-(OR), anti-join complement (NOT) on doc-id columns — so operand lists
-never materialize on the driver; operands are duplicate-free by
-construction, which is what lets AND be a semi-join instead of a
-dedup-shuffling ``intersect``.
+Evaluation is SQL set algebra in one statement — semi-join (AND),
+union + dedup (OR), anti-join complement (NOT) on doc-id columns — so
+operand lists never materialize on the driver; operands are
+duplicate-free by construction, which is what lets AND be a semi-join
+instead of a dedup-shuffling ``intersect``.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+
+from .bm25 import sql_str
 
 PRECEDENCE = {"NOT": 3, "AND": 2, "OR": 1, "(": 0, ")": 0}  # mod.rs:30-36
 
@@ -52,9 +53,9 @@ def infix_to_postfix(query: str) -> list[str]:
     return res
 
 
-def _term_doc_ids(index, term: str) -> DataFrame:
-    """Spellcheck the verbatim operand, then fetch its sorted doc ids."""
-    spark = index.spark
+def _term_doc_ids(index, term: str) -> str:
+    """Spellcheck the verbatim operand, then select its sorted doc ids.
+    Only the corrected vocabulary term reaches the SQL text."""
     try:
         corrected = index.driver_vocab().spellcheck_term(term)
     except RuntimeError:  # vocabulary beyond driver threshold
@@ -62,72 +63,73 @@ def _term_doc_ids(index, term: str) -> DataFrame:
 
         corrected = spellcheck_distributed(index.vocabulary, [term]).get(term)
     if corrected is None:
-        return spark.range(0).select(F.col("id").cast("long").alias("doc_id"))
+        return "SELECT id AS doc_id FROM range(0)"
     return (
-        index.postings.filter(F.col("term") == corrected)
-        .select(F.explode("doc_ids").alias("doc_id"))
-        .select(F.col("doc_id").cast("long"))
+        "SELECT CAST(d AS BIGINT) AS doc_id FROM {postings} "
+        f"LATERAL VIEW explode(doc_ids) t AS d WHERE term = {sql_str(corrected)}"
     )
 
 
-def _not_operator(index, operand: DataFrame) -> DataFrame:
-    """Complement with the empty-input quirk (postings.rs:179-188),
-    decided INSIDE the plan — no eager emptiness probe, so a NOT node
-    costs zero extra Spark jobs:
+def _not_operator(index, operand: str) -> str:
+    """Complement of the relation named ``operand`` with the empty-input
+    quirk (postings.rs:179-188), decided INSIDE the plan — no eager
+    emptiness probe, so a NOT node costs zero extra Spark jobs:
 
     - non-empty operand: complement over 0..n-1 (postings.rs:188-198)
     - empty operand:     1..=n — includes the out-of-range id n and
                          excludes 0 (postings.rs:179-181)
 
     One extended universe 0..n is anti-joined (a no-op for the empty
-    case), then a broadcast 1-row count picks the branch per row.
+    case), then a broadcast 1-row count picks the branch per row; its
+    LIMIT 1 keeps the gate O(1) instead of counting the whole operand.
     """
-    spark = index.spark
     n = index.num_docs
-    # limit(1) keeps the gate O(1): CollectLimit early-exits instead of
-    # counting the whole operand
-    cnt = operand.limit(1).agg(F.count(F.lit(1)).alias("_n"))
     return (
-        spark.range(0, n + 1)
-        .select(F.col("id").alias("doc_id"))
-        .join(operand, "doc_id", "left_anti")
-        .crossJoin(F.broadcast(cnt))
-        .filter(
-            ((F.col("_n") > 0) & (F.col("doc_id") < n))
-            | ((F.col("_n") == 0) & (F.col("doc_id") >= 1))
-        )
-        .select("doc_id")
+        f"SELECT /*+ BROADCAST(c) */ u.id AS doc_id FROM range(0, {n + 1}) u "
+        f"LEFT ANTI JOIN {operand} o ON u.id = o.doc_id "
+        f"CROSS JOIN (SELECT count(1) AS _n FROM (SELECT * FROM {operand} LIMIT 1)) c "
+        f"WHERE (c._n > 0 AND u.id < {n}) OR (c._n = 0 AND u.id >= 1)"
     )
 
 
 def boolean_query(index, query: str) -> DataFrame:
     """-> DataFrame (doc_id, url, score=1.0) ordered by doc_id; a lazy
-    plan, built fresh per call."""
-    postfix = infix_to_postfix(query)
-    stack: list[DataFrame] = []
-    for p in postfix:
+    plan, built fresh per call as one ``spark.sql`` statement whose CTEs
+    are the postfix stack's nodes."""
+    ctes: list[str] = []
+    stack: list[str] = []
+
+    def push(select: str) -> None:
+        stack.append(f"b{len(ctes)}")
+        ctes.append(f"{stack[-1]} AS ({select})")
+
+    for p in infix_to_postfix(query):
         if p == "AND":
             a, b = stack.pop(), stack.pop()
-            # left_semi, not intersect: every operand is already
+            # left semi, not intersect: every operand is already
             # duplicate-free (posting lists hold one entry per doc,
             # postings.rs:81-113; NOT/OR outputs are deduped), so
             # intersection ≡ semi-join — without intersect's full
             # dedup-shuffle of BOTH sides per operator. AQE turns the
             # semi-join into a broadcast when one side is small.
-            stack.append(a.join(b, "doc_id", "left_semi"))
+            push(f"SELECT a.doc_id FROM {a} a LEFT SEMI JOIN {b} b ON a.doc_id = b.doc_id")
         elif p == "OR":
             a, b = stack.pop(), stack.pop()
-            # union still needs one dedup (overlapping operands), but
-            # dropDuplicates on the single doc_id column beats
-            # DataFrame.distinct-over-intersect's two-sided aggregate
-            stack.append(a.union(b).dropDuplicates(["doc_id"]))
+            # union still needs one dedup (overlapping operands): one
+            # aggregate on the single doc_id column
+            push(
+                "SELECT DISTINCT doc_id FROM "
+                f"(SELECT doc_id FROM {a} UNION ALL SELECT doc_id FROM {b})"
+            )
         elif p == "NOT":
-            stack.append(_not_operator(index, stack.pop()))
+            push(_not_operator(index, stack.pop()))
         else:
-            stack.append(_term_doc_ids(index, p))
+            push(_term_doc_ids(index, p))
     result = stack.pop()
-    return (
-        index.doc_lengths.join(result, "doc_id")
-        .select("doc_id", "url", F.lit(1.0).alias("score"))
-        .orderBy("doc_id")
+    return index.spark.sql(
+        f"WITH {', '.join(ctes)} "
+        "SELECT d.doc_id, d.url, 1.0D AS score "
+        f"FROM {{docs}} d JOIN {result} r ON d.doc_id = r.doc_id ORDER BY doc_id",
+        postings=index.postings,
+        docs=index.doc_lengths,
     )

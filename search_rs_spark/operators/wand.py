@@ -65,7 +65,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .bm25 import free_query, materialize_topk, resolve_query_terms, score_candidates
+from .bm25 import (
+    bind_terms,
+    empty_result,
+    free_query,
+    materialize_topk,
+    resolve_query_terms,
+    score_candidates,
+    sql_double,
+)
 from .window_score import U32_MAX, WINDOW_SCORE_MULTIPLIER
 
 COVERAGE_FACTOR = 4
@@ -105,10 +113,8 @@ MAX_LITERAL_BLOCKS = 2048
 def span_upper_bounds(index, terms: list[tuple[int, str, int]]) -> DataFrame:
     """(block_id, ub, max_docs) for every doc-id span touched by the
     query terms — metadata columns only, arrays never read."""
-    spark = index.spark
     num_tokens = len(terms)
-    distinct_terms = {t for _, t, _ in terms}
-    n_distinct = len(distinct_terms)
+    n_distinct = len({t for _, t, _ in terms})
 
     # duplicate query tokens score the same term twice (mod.rs:152-179),
     # so the bm25 side of the bound carries a multiplicity per distinct
@@ -118,41 +124,23 @@ def span_upper_bounds(index, terms: list[tuple[int, str, int]]) -> DataFrame:
     for _, t, d in terms:
         mult[t] = mult.get(t, 0) + 1
         idf_by_term[t] = float(index.idf(d))
-    # same one-call VALUES form as scored_hits (createDataFrame's py4j
-    # round trip costs ~0.15 s; terms are alnum-only, quotes escaped)
-    rows = ", ".join(
-        "('{}', CAST('{!r}' AS DOUBLE), {})".format(
-            t.replace("'", "''"), float(idf_by_term[t]), int(mult[t])
-        )
-        for t in mult
-    )
-    qdf = spark.sql(f"SELECT * FROM VALUES {rows} AS t(term, idf, mult)")
-
-    meta = (
-        index.postings.select("term", "block_id", "df_block", "block_max")
-        .filter(F.col("term").isin(sorted(distinct_terms)))
-        .join(F.broadcast(qdf), "term")
-    )
-    return meta.groupBy("block_id").agg(
-        F.sum(F.col("idf") * F.col("block_max") * F.col("mult")).alias("ub_bm"),
-        F.countDistinct("term").alias("n_terms"),
-        F.max("df_block").alias("max_docs"),
-    ).withColumn(
-        "ub",
-        F.col("ub_bm")
-        + F.when(
-            F.col("n_terms") == n_distinct,
-            F.lit(WINDOW_SCORE_MULTIPLIER * num_tokens / n_distinct),
-        ).otherwise(F.lit(WINDOW_SCORE_MULTIPLIER * num_tokens / U32_MAX)),
-    ).select(
-        "block_id",
-        "ub",
-        "max_docs",
+    structs = {
+        t: [f"struct({sql_double(idf_by_term[t])}, {mult[t]})"] for t in mult
+    }
+    full = sql_double(WINDOW_SCORE_MULTIPLIER * num_tokens / n_distinct)
+    eps = sql_double(WINDOW_SCORE_MULTIPLIER * num_tokens / U32_MAX)
+    return index.spark.sql(
+        f"SELECT block_id, ub_bm + CASE WHEN n_terms = {n_distinct} "
+        f"THEN {full} ELSE {eps} END AS ub, max_docs, "
         # all-terms flag kept for the blanket cost gate (free_query_wand):
         # spans holding every distinct term share one uniform window
         # bonus, so when (nearly) all spans do, the ub spread is
         # bm-only and pruning cannot bite
-        (F.col("n_terms") == n_distinct).alias("all_terms"),
+        f"n_terms = {n_distinct} AS all_terms FROM ("
+        "SELECT block_id, sum(idf * block_max * mult) AS ub_bm, "
+        "count(DISTINCT term) AS n_terms, max(df_block) AS max_docs "
+        f"FROM {bind_terms(structs, 'idf, mult')} GROUP BY block_id)",
+        postings=index.postings,
     )
 
 
@@ -206,9 +194,7 @@ def free_query_wand(
     """
     terms = resolve_query_terms(index, query)
     if not terms:
-        return (
-            index.doc_lengths.select("doc_id", "url", F.lit(0.0).alias("score")).limit(0)
-        )
+        return empty_result(index)
     if force_protocol is False:
         return free_query(index, query, k)
 

@@ -131,16 +131,15 @@ def min_window_sql(qids: str, ps: str, num_tokens: int) -> str:
     return f"aggregate({pairs}, {zero}, {step}, s -> s.best)"
 
 
-def window_score_expr(qids: str, ps: str, num_tokens: int):
-    """JVM-side window-score Column: ``3.0 * num_tokens / min_window``
+def window_score_sql(qids: str, ps: str, num_tokens: int) -> str:
+    """JVM-side window-score SQL text: ``3.0 * num_tokens / min_window``
     over the same (qids, ps) shape :func:`window_score_batch_udf`
     consumes — bit-identical to ``3.0 * nt / min_window`` (``3.0 * nt``
-    folds to one double literal; pinned in
-    tests/test_window_score_units.py)."""
-    from pyspark.sql import functions as F
-
-    return F.lit(WINDOW_SCORE_MULTIPLIER * num_tokens) / F.expr(
-        min_window_sql(qids, ps, num_tokens)
+    is one double literal, spliced as its shortest round-trip repr;
+    pinned in tests/test_window_score_units.py)."""
+    return (
+        f"{WINDOW_SCORE_MULTIPLIER * num_tokens!r}D / "
+        f"({min_window_sql(qids, ps, num_tokens)})"
     )
 
 

@@ -130,6 +130,29 @@ def test_rank_identity_boolean(synth, q):
     assert got == expected
 
 
+SPECIAL_QUERIES = [
+    "stat' AND {the}",
+    "peopl\\ OR {}",
+    "the AND NOT o'{time}\\",
+    "{x} OR NOT '\\'",
+]
+
+
+@pytest.mark.parametrize("q", SPECIAL_QUERIES)
+def test_operands_with_sql_and_format_characters(synth, q):
+    """Boolean operands are verbatim user text and ``spark.sql`` formats
+    its text with ``{}`` placeholders: quotes, braces and backslashes
+    in a query must reach neither the SQL parser nor the formatter, in
+    boolean and free-text queries alike."""
+    index, oracle = synth
+    expected = [d for d, u, s in oracle_boolean_query(oracle, q) if u is not None]
+    assert [r["doc_id"] for r in boolean_query(index, q).collect()] == expected
+    got = [
+        (r["doc_id"], r["url"], r["score"]) for r in free_query(index, q, 50).collect()
+    ]
+    _assert_rank_identical(got, oracle_free_query(oracle, q, k=50))
+
+
 def test_resume_skips_stages(spark, tmp_path):
     out = str(tmp_path / "idx")
     m1 = build_index(spark, reference_fixture(spark), out)

@@ -3,6 +3,7 @@ and snippet fetch."""
 
 import json
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -68,9 +69,13 @@ def test_physical_plan_properties(spark, small_index):
     """Pin the plan shapes the engine depends on at scale."""
     idx, _ = small_index
     terms = resolve_query_terms(idx, "the world time")
+    assert len({t for _, t, _ in terms}) == 3
     plan = scored_hits(idx, terms)._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan  # query terms broadcast, never shuffled
-    assert "term#" in plan and " IN (" in plan  # IN-filter reaches the scan
+    # query terms are bound inside the plan: no join, no exchange
+    assert "Join" not in plan and "Exchange" not in plan, plan
+    # the IN-filter reaches the scan
+    pushed = re.search(r"PushedFilters: \[(.*?)\], ReadSchema", plan)
+    assert pushed and "In(term, [" in pushed.group(1), plan
 
     # the distributed bounded top-k sits inside free_query's own lazy
     # plan, and the returned DataFrame joins only the k winners (broadcast)
@@ -158,5 +163,23 @@ def test_free_query_stays_lazy_at_corpus_scale(spark, small_index):
         assert len(df.collect()) == 10
         # the tracker does see this group's jobs once the caller collects
         assert list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc._jsc.clearJobGroup()
+
+
+def test_free_query_runs_two_jobs(spark, small_index):
+    """A multi-term free query is one statement with its terms bound
+    in-plan: collecting it runs exactly two Spark jobs (the scoring +
+    top-k broadcast, then the url join), with no query-terms broadcast
+    job of its own."""
+    idx, _ = small_index
+    terms = resolve_query_terms(idx, "the world time")
+    assert len({t for _, t, _ in terms}) == 3
+    sc = spark.sparkContext
+    group = "free_query_jobs"
+    sc.setJobGroup(group, "free_query job count")
+    try:
+        assert len(free_query(idx, "the world time", 10).collect()) == 10
+        assert len(list(sc.statusTracker().getJobIdsForGroup(group))) == 2
     finally:
         sc._jsc.clearJobGroup()

@@ -92,7 +92,9 @@ def test_hof_expr_equals_min_window_on_spark(spark):
     and duplicate positions."""
     import random
 
-    from search_rs_spark.operators.window_score import window_score_expr
+    from pyspark.sql import functions as F
+
+    from search_rs_spark.operators.window_score import window_score_sql
 
     rng = random.Random(1234)
     by_nt: dict[int, list] = {}
@@ -121,7 +123,7 @@ def test_hof_expr_equals_min_window_on_spark(spark):
             rows, "doc_id int, qids array<int>, ps array<array<int>>"
         )
         got = df.select(
-            "doc_id", window_score_expr("qids", "ps", nt).alias("hof")
+            "doc_id", F.expr(window_score_sql("qids", "ps", nt)).alias("hof")
         ).collect()
         expected = {i: _reference_score(q, ps, nt) for i, q, ps in rows}
         for r in got:
@@ -203,7 +205,7 @@ def test_batch_udf_equals_hof_and_min_window_on_spark(spark):
         got = df.select(
             "doc_id",
             ws.window_score_batch_udf(4)(F.col("qids"), F.col("ps")).alias("b"),
-            ws.window_score_expr("qids", "ps", 4).alias("h"),
+            F.expr(ws.window_score_sql("qids", "ps", 4)).alias("h"),
         ).collect()
     finally:
         ws._BATCH_MATRIX_CELLS = orig_cap
