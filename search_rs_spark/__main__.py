@@ -53,8 +53,6 @@ def _load_webtext(spark, inp: str):
 
 
 def main(argv: list[str]) -> int:
-    from .session import get_spark
-
     if len(argv) < 2:
         print(__doc__)
         return 2
@@ -65,6 +63,8 @@ def main(argv: list[str]) -> int:
 
         serve_main(argv[2], int(argv[3]) if len(argv) > 3 else 3000)
         return 0
+
+    from .session import get_spark
 
     spark = get_spark(app=f"search_rs_spark_{action}")
 

@@ -38,8 +38,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.tokenizer import tokenize, tokenize_and_stem
-from ..plans.build import BM25_B, BM25_K1, postings_shuffle_partitions
+from ..plans.build import postings_shuffle_partitions
 from .window_score import (
+    BM25_B,
+    BM25_K1,
     BM25_SCORE_MULTIPLIER,
     U32_MAX,
     WINDOW_SCORE_MULTIPLIER,

@@ -23,9 +23,10 @@ instead of a dedup-shuffling ``intersect``.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from typing import TYPE_CHECKING
 
-from .bm25 import sql_str
+if TYPE_CHECKING:
+    from pyspark.sql import DataFrame
 
 PRECEDENCE = {"NOT": 3, "AND": 2, "OR": 1, "(": 0, ")": 0}  # mod.rs:30-36
 
@@ -56,6 +57,8 @@ def infix_to_postfix(query: str) -> list[str]:
 def _term_doc_ids(index, term: str) -> str:
     """Spellcheck the verbatim operand, then select its sorted doc ids.
     Only the corrected vocabulary term reaches the SQL text."""
+    from .bm25 import sql_str
+
     try:
         corrected = index.driver_vocab().spellcheck_term(term)
     except RuntimeError:  # vocabulary beyond driver threshold

@@ -1,18 +1,27 @@
 """Driver-local serving mode: ms-latency queries over the same index.
 
-The DataFrame query path (operators/bm25.py) is the scale path; its
-latency floor is Spark job scheduling (~0.5-1 s). The reference, a
+The DataFrame query path (operators/bm25.py) is the scale path; each of
+its queries runs at least one Spark job. The reference, a
 single-process engine, answers in milliseconds at small scale
 (mod.rs:200-206 stamps time_ms). This module closes that gap for
 indexes that fit in RAM: :meth:`LocalEngine.load` reads the SAME
-parquet tables once through pyarrow (no Spark) and keeps the postings
-resident as Arrow list buffers. A query slices a term's rows out of
-those buffers as zero-copy numpy views and scores them with vectorised
-numpy: BM25 accumulated in query-token order, the batch window kernel
-(property-pinned equal to the reference's two-pointer sweep), and
-sorted-array set algebra for boolean queries. No per-posting Python
-object is ever built, so results equal the Spark engine's (pinned in
-tests/test_serving.py).
+parquet tables once with ``pyarrow.parquet`` (the serving process
+imports neither pyspark nor pandas) and keeps each postings file as
+zero-copy numpy views over its Arrow buffers: doc ids, per-posting
+position offsets and positions. There is no global sort: the build
+writes each postings file sorted by (term, block_id) with whole terms
+in it, so a term is one contiguous run of rows in one file, and
+``np.diff`` over ``term_id`` finds the runs. tf is the length of a
+posting's position list and dl comes from one per-doc array read from
+``tokens.doc_len``, so the stored ``tfs`` / ``dls`` columns are never
+read.
+
+A query slices its terms' runs out of those views and scores them with
+vectorised numpy: BM25 accumulated in query-token order, the batch
+window kernel (property-pinned equal to the reference's two-pointer
+sweep), and sorted-array set algebra for boolean queries. No Arrow call
+and no per-posting Python object runs per query, and results equal the
+Spark engine's (pinned in tests/test_serving.py).
 
 Use: serving replicas / interactive CLIs at small-to-medium scale;
 the Spark path for batch scoring and 100 TB-scale corpora.
@@ -26,11 +35,13 @@ import os
 from dataclasses import dataclass
 
 import numpy as np
+import pyarrow.parquet as pq
 
-from ..plans.build import BM25_B, BM25_K1
 from .boolean import infix_to_postfix
 from .spellcheck import DriverVocabulary
 from .window_score import (
+    BM25_B,
+    BM25_K1,
     BM25_SCORE_MULTIPLIER,
     WINDOW_SCORE_MULTIPLIER,
     # unused here, kept importable: perfbench/serve_traced.py counts calls to it
@@ -38,13 +49,72 @@ from .window_score import (
     min_windows_batch,
 )
 
-_LIST_COLUMNS = ("doc_ids", "tfs", "dls", "positions")
+_INTS = {"int32": np.int32, "int64": np.int64}
 
 
-def _i64(arr):
-    """numpy int64 view of an Arrow int array (a copy only where the
-    stored ints are narrower)."""
-    return np.asarray(arr).astype(np.int64, copy=False)
+def _parts(path: str) -> list[str]:
+    """The parquet part files of one index table, in name order."""
+    return sorted(
+        os.path.join(path, f)
+        for f in os.listdir(path)
+        if f.endswith(".parquet") and not f.startswith((".", "_"))
+    )
+
+
+def _read(path: str, columns: list[str]) -> list[dict]:
+    """-> per part file, {column: Arrow array} (one chunk per column)."""
+    out = []
+    for f in _parts(path):
+        t = pq.ParquetFile(f).read(columns=columns)
+        out.append(
+            {
+                c: col.chunk(0) if col.num_chunks == 1 else col.combine_chunks()
+                for c, col in zip(t.column_names, t.columns)
+            }
+        )
+    return out
+
+
+def _view(arr) -> np.ndarray:
+    """Zero-copy numpy view of a null-free Arrow int32/int64 array
+    (``np.asarray`` / ``to_numpy`` would import pandas)."""
+    if arr.null_count:
+        raise ValueError(f"null in an index column of type {arr.type}")
+    dtype = _INTS[str(arr.type)]
+    if len(arr) == 0:
+        return np.empty(0, dtype=dtype)
+    return np.frombuffer(arr.buffers()[1], dtype=dtype)[arr.offset : arr.offset + len(arr)]
+
+
+@dataclass
+class _Segment:
+    """One postings file's list columns, flattened to numpy views."""
+
+    doc_ids: np.ndarray  # posting -> doc id
+    offsets: np.ndarray  # posting -> first position; one more entry than postings
+    positions: np.ndarray  # int32 token positions
+
+
+def _segment(part: dict, where: str):
+    """-> (segment, run term_ids, run first postings, run end postings)
+    of one postings file. A run is a maximal block of rows with one
+    term_id; each must hold strictly ascending doc ids, as the build's
+    (term, block_id) file order and its sorted blocks give."""
+    tids = _view(part["term_id"])
+    docs, pos = part["doc_ids"], part["positions"]
+    row_at = _view(docs.offsets)  # row -> first posting
+    if not np.array_equal(row_at, _view(pos.offsets)):
+        raise ValueError(f"{where}: doc_ids and positions lists differ in length")
+    seg = _Segment(_view(docs.values), _view(pos.values.offsets), _view(pos.values.values))
+    starts = np.concatenate(([0], np.flatnonzero(tids[1:] != tids[:-1]) + 1))
+    lo = row_at[starts]
+    hi = row_at[np.append(starts[1:], tids.size)]
+    d = seg.doc_ids[row_at[0] : row_at[-1]]
+    down = d[1:] <= d[:-1]
+    down[lo[1:] - row_at[0] - 1] = False  # a new run may start lower
+    if down.any():
+        raise ValueError(f"{where}: a term's doc ids are not in ascending order")
+    return seg, tids[starts], lo, hi
 
 
 @dataclass
@@ -55,11 +125,12 @@ class LocalEngine:
     # doc_id -> url, plus a trailing None for id num_docs: the
     # reference's empty-NOT quirk answers ids 1..=n, and id n has no doc
     urls: list
-    # term -> [first, end) rows of its blocks, in block (= doc) order,
-    # in the resident postings list columns below
+    # term -> (segment, first posting, end posting): the term's run of
+    # postings, in block (= doc) order, in segments[segment]
     rows: dict
-    # name -> pyarrow ListArray over every postings row (_LIST_COLUMNS)
-    postings: dict
+    segments: list
+    # doc_id -> doc_len (tokens.doc_len), the BM25 dl of every posting
+    doc_lens: np.ndarray
     # query preprocessing must equal build preprocessing (Q1 ≡ B3):
     # a stem=False index gets the tokenize-only query path, same as
     # bm25.resolve_query_terms
@@ -67,61 +138,84 @@ class LocalEngine:
 
     @classmethod
     def load(cls, path: str) -> "LocalEngine":
-        import pyarrow.compute as pc
-        import pyarrow.dataset as ds
-
-        def read(table: str, columns: list[str]):
-            return ds.dataset(os.path.join(path, table), format="parquet").to_table(
-                columns=columns
-            )
-
         with open(os.path.join(path, "stats", "data.json")) as f:
             stats = json.load(f)
         n = stats["num_docs"]
 
-        v_tab = read("vocabulary", ["term", "term_id", "df"]).sort_by("term_id")
+        terms, dfs, term_ids = [], [], []
+        for part in _read(os.path.join(path, "vocabulary"), ["term", "term_id", "df"]):
+            terms += part["term"].to_pylist()
+            dfs += part["df"].to_pylist()
+            term_ids.append(_view(part["term_id"]))
+        by_id = np.argsort(np.concatenate(term_ids), kind="stable")
+        term_ids = np.concatenate(term_ids)[by_id]
+        terms = [terms[i] for i in by_id.tolist()]
+        dfs = [dfs[i] for i in by_id.tolist()]
 
-        d_tab = read("tokens", ["doc_id", "url"]).to_pydict()
         urls = [None] * (n + 1)
-        for d, u in zip(d_tab["doc_id"], d_tab["url"]):
-            urls[d] = u
+        doc_lens = np.zeros(n + 1, dtype=np.int32)
+        for part in _read(os.path.join(path, "tokens"), ["doc_id", "url", "doc_len"]):
+            ids = _view(part["doc_id"])
+            doc_lens[ids] = _view(part["doc_len"])
+            for d, u in zip(ids.tolist(), part["url"].to_pylist()):
+                urls[d] = u
 
-        p_tab = read("postings", ["term", "block_id", *_LIST_COLUMNS])
-        p_tab = p_tab.take(
-            pc.sort_indices(p_tab, [("term", "ascending"), ("block_id", "ascending")])
-        ).combine_chunks()
+        postings = os.path.join(path, "postings")
+        segments, runs = [], []
+        for part in _read(postings, ["term_id", "doc_ids", "positions"]):
+            if len(part["term_id"]):
+                seg, *run = _segment(part, postings)
+                runs.append((np.full(run[0].size, len(segments)), *run))
+                segments.append(seg)
         rows: dict = {}
-        for i, t in enumerate(p_tab["term"].to_pylist()):
-            rows[t] = (rows[t][0] if t in rows else i, i + 1)
+        if runs:
+            seg_no, run_ids, lo, hi = (np.concatenate(c) for c in zip(*runs))
+            at = np.searchsorted(term_ids, run_ids)
+            if (at >= term_ids.size).any() or (term_ids[at] != run_ids).any():
+                raise ValueError(f"{postings}: a term_id is missing from the vocabulary")
+            ids, counts = np.unique(run_ids, return_counts=True)
+            if (counts > 1).any():
+                term = terms[int(np.searchsorted(term_ids, ids[counts > 1][0]))]
+                raise ValueError(
+                    f"{postings}: term {term!r} has rows in two runs; "
+                    "each term's rows must be contiguous in one postings file"
+                )
+            rows = dict(
+                zip(
+                    [terms[i] for i in at.tolist()],
+                    zip(seg_no.tolist(), lo.tolist(), hi.tolist()),
+                )
+            )
 
         return cls(
             num_docs=n,
             avgdl=stats["avgdl"],
-            vocab=DriverVocabulary(
-                terms=v_tab["term"].to_pylist(), dfs=v_tab["df"].to_pylist()
-            ),
+            vocab=DriverVocabulary(terms=terms, dfs=dfs),
             urls=urls,
             rows=rows,
-            postings={c: p_tab[c].chunk(0) for c in _LIST_COLUMNS},
+            segments=segments,
+            doc_lens=doc_lens,
             stem=bool(stats.get("stem", True)),
         )
 
-    def _flat(self, name: str, term: str):
-        """One postings list column of ``term``, merged across its
-        blocks: a zero-copy slice of the resident buffer."""
-        r0, r1 = self.rows[term]
-        return self.postings[name].slice(r0, r1 - r0).flatten()
+    def _doc_ids(self, term: str) -> np.ndarray:
+        """The sorted doc ids of ``term``: a view of the resident buffer."""
+        s, p0, p1 = self.rows[term]
+        return self.segments[s].doc_ids[p0:p1]
 
     def _read_postings(self, term: str):
-        """-> (doc_ids, tfs, dls, positions, positions per posting) of
-        one term, as int64 numpy arrays."""
-        per_posting = self._flat("positions", term)
+        """-> (doc_ids, tfs, dls, positions) of one term: slices of the
+        resident views. A posting's tf is its position count, so the
+        positions split per posting by ``tfs``."""
+        s, p0, p1 = self.rows[term]
+        seg = self.segments[s]
+        docs = seg.doc_ids[p0:p1]
+        offs = seg.offsets[p0 : p1 + 1]
         return (
-            _i64(self._flat("doc_ids", term)),
-            _i64(self._flat("tfs", term)),
-            _i64(self._flat("dls", term)),
-            _i64(per_posting.flatten()),
-            np.diff(_i64(per_posting.offsets)),
+            docs,
+            np.diff(offs),
+            self.doc_lens[docs],
+            seg.positions[offs[0] : offs[-1]].astype(np.int64),
         )
 
     def free_query(self, query: str, k: int = 100):
@@ -162,7 +256,7 @@ class LocalEngine:
         # ids are unique within one term's postings, so fancy-index +=
         # is one add per doc per qid).
         for tok, idf in idfs:
-            _, tfs, dls, _, _ = read[tok]
+            _, tfs, dls, _ = read[tok]
             tf = tfs.astype(np.float64)
             dlf = dls.astype(np.float64)
             bm = (
@@ -179,8 +273,8 @@ class LocalEngine:
         # A token without postings keeps an id, so no window covers.
         wid = {t: i for i, t in enumerate(dict.fromkeys(tokens))}
         pair_doc, pair_pos, pair_qid = [], [], []
-        for tok, (_, _, _, flat, lens) in read.items():
-            pair_doc.append(np.repeat(at[tok], lens))
+        for tok, (_, tfs, _, flat) in read.items():
+            pair_doc.append(np.repeat(at[tok], tfs))
             pair_pos.append(flat)
             pair_qid.append(np.full(flat.size, wid[tok], dtype=np.int64))
         pdoc = np.concatenate(pair_doc)
@@ -227,5 +321,5 @@ class LocalEngine:
                 if c is None or c not in self.rows:
                     stack.append(np.empty(0, dtype=np.int64))
                 else:
-                    stack.append(_i64(self._flat("doc_ids", c)))
+                    stack.append(self._doc_ids(c))
         return [(d, self.urls[d], 1.0) for d in stack.pop().tolist()]

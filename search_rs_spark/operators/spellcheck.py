@@ -20,9 +20,10 @@ Two implementations:
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from typing import TYPE_CHECKING
 
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+if TYPE_CHECKING:
+    from pyspark.sql import DataFrame
 
 
 def levenshtein(s1: str, s2: str) -> int:
@@ -101,6 +102,8 @@ def spellcheck_distributed(vocabulary: DataFrame, terms: list[str]) -> dict[str,
     ``(first matching trigram position in the query term, term_id)`` —
     reproduced here as ``min_by (lev, -df, first_tg, term_id)``.
     """
+    from pyspark.sql import functions as F
+
     spark = vocabulary.sparkSession
     probe = spark.createDataFrame([(t,) for t in terms], ["q_term"])
 

@@ -20,8 +20,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text_analysis import DUCK_TOKENS, SPARK_TOKENS
-from ..plans.build import BM25_B, BM25_K1
 from ..plans.ranks import with_global_rank
+from .window_score import BM25_B, BM25_K1
 
 MIN_F = 1
 MAX_P = 0.8

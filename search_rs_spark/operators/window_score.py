@@ -18,6 +18,8 @@ U32_MAX = 4294967295
 
 WINDOW_SCORE_MULTIPLIER = 3.0  # mod.rs:24
 BM25_SCORE_MULTIPLIER = 1.0  # mod.rs:25
+BM25_K1 = 1.2  # mod.rs:27
+BM25_B = 0.75  # mod.rs:28
 
 
 def min_window(pairs: list[tuple[int, int]], num_tokens: int) -> int:

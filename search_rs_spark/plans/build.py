@@ -49,11 +49,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.tokenizer import term_pos_udf
+from ..operators.window_score import BM25_B, BM25_K1
 from .checkpoint import StageRunner, fingerprint
 from .ranks import with_global_rank
 
-BM25_K1 = 1.2  # mod.rs:27
-BM25_B = 0.75  # mod.rs:28
 DEFAULT_BLOCK_SPAN = 4096
 
 # the postings aggregate is the build's one memory-heavy shuffle: each

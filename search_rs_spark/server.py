@@ -10,13 +10,16 @@ Reference: /root/reference/server/src/main.rs —
   LRU query cache of size 10 keyed by the raw query string
   (main.rs:21,123-128).
 
-Implementation: stdlib ThreadingHTTPServer (no web framework in the
-sandbox) over :class:`operators.serving.LocalEngine` — the driver-local
+Implementation: stdlib ThreadingHTTPServer (no web framework needed)
+over :class:`operators.serving.LocalEngine` — the driver-local
 ms-latency engine that loads the same parquet tables once, keeps the
-postings resident and scores them with vectorised numpy; its results
-equal the Spark engine's (tests/test_serving.py). POST /query answers
-JSON when the client sends ``Accept: application/json``, HTML
-otherwise.
+postings resident as numpy views and scores them with vectorised
+numpy; its results equal the Spark engine's (tests/test_serving.py).
+The server process imports neither pyspark nor pandas. Handler threads
+share one engine (read-only after load) and one LRU (locked). POST
+/query answers JSON when the client sends ``Accept:
+application/json``, HTML otherwise; a missing, non-integer or negative
+``Content-Length`` gets 400.
 """
 
 from __future__ import annotations
@@ -24,6 +27,7 @@ from __future__ import annotations
 import html
 import json
 import os
+import threading
 import time
 import urllib.parse
 from collections import OrderedDict
@@ -37,27 +41,33 @@ SNIPPET_CHARS = 250
 
 
 class _LRU:
-    """Tiny LRU keyed by the raw query string (main.rs:123-128)."""
+    """Tiny LRU keyed by the raw query string (main.rs:123-128). One
+    lock serialises ``get`` and ``put``: handler threads run them
+    concurrently, and an eviction between ``get``'s lookup and its
+    ``move_to_end`` would raise KeyError and drop the request."""
 
     def __init__(self, size: int = CACHE_SIZE):
         self.size = size
         self.data: OrderedDict[str, dict] = OrderedDict()
         self.hits = 0
         self.misses = 0
+        self.lock = threading.Lock()
 
     def get(self, key: str):
-        if key in self.data:
-            self.data.move_to_end(key)
-            self.hits += 1
-            return self.data[key]
-        self.misses += 1
-        return None
+        with self.lock:
+            if key in self.data:
+                self.data.move_to_end(key)
+                self.hits += 1
+                return self.data[key]
+            self.misses += 1
+            return None
 
     def put(self, key: str, value: dict) -> None:
-        self.data[key] = value
-        self.data.move_to_end(key)
-        while len(self.data) > self.size:
-            self.data.popitem(last=False)
+        with self.lock:
+            self.data[key] = value
+            self.data.move_to_end(key)
+            while len(self.data) > self.size:
+                self.data.popitem(last=False)
 
 
 def _snippet(url: str) -> str:
@@ -152,7 +162,13 @@ def make_server(index_path: str, port: int = 3000, host: str = "127.0.0.1"):
             if self.path != "/query":
                 self._send(404, b"not found", "text/plain")
                 return
-            length = int(self.headers.get("Content-Length", "0"))
+            try:
+                length = int(self.headers["Content-Length"])
+            except (TypeError, ValueError):
+                length = -1
+            if length < 0:
+                self._send(400, b"bad Content-Length", "text/plain")
+                return
             form = urllib.parse.parse_qs(self.rfile.read(length).decode())
             raw = form.get("query", [""])[0]
             resp = cache.get(raw)

@@ -154,3 +154,74 @@ def test_row_group_pruning_bites(engines):
     one_term = pf0.read_row_group(0, columns=["term"])["term"][0].as_py()
     filtered = postings.to_table(columns=["term"], filter=pc.field("term") == one_term)
     assert 0 < filtered.num_rows < total_rows
+
+
+def _postings_parts(index_path):
+    d = os.path.join(index_path, "postings")
+    return sorted(os.path.join(d, f) for f in os.listdir(d) if f.endswith(".parquet"))
+
+
+def test_stored_tfs_and_dls_are_derivable(engines):
+    """LocalEngine reads neither ``tfs`` nor ``dls``: every stored tf is
+    its posting's position count and every stored dl is the doc's
+    ``tokens.doc_len``. The engine's own per-term reads agree."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    idx, local, _ = engines
+    p = pa.concat_tables(
+        pq.read_table(f, columns=["term", "block_id", "doc_ids", "tfs", "dls", "positions"])
+        for f in _postings_parts(idx.path)
+    )
+    t = pq.read_table(os.path.join(idx.path, "tokens"), columns=["doc_id", "doc_len"])
+    doc_len = dict(zip(t["doc_id"].to_pylist(), t["doc_len"].to_pylist()))
+    rows = p.to_pylist()
+    assert rows
+    for r in rows:
+        assert r["tfs"] == [len(x) for x in r["positions"]]
+        assert r["dls"] == [doc_len[d] for d in r["doc_ids"]]
+    by_term: dict = {}
+    for r in sorted(rows, key=lambda r: (r["term"], r["block_id"])):
+        got = by_term.setdefault(r["term"], ([], [], []))
+        got[0].extend(r["doc_ids"]), got[1].extend(r["tfs"]), got[2].extend(r["dls"])
+    assert set(by_term) == set(local.rows)
+    for term, (docs, tfs, dls) in by_term.items():
+        e_docs, e_tfs, e_dls, e_pos = local._read_postings(term)
+        assert e_docs.tolist() == docs and e_tfs.tolist() == tfs and e_dls.tolist() == dls
+        assert e_pos.size == sum(tfs)
+    assert np.all(local.doc_lens[: local.num_docs] > 0)
+
+
+def test_load_rejects_a_term_split_across_files(engines, tmp_path):
+    """The load trusts the build's layout (each term one contiguous run
+    of rows in one postings file) instead of sorting globally; a term
+    whose rows sit in two files must fail loudly, naming the term."""
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    idx, _, _ = engines
+    copy = str(tmp_path / "split")
+    shutil.copytree(idx.path, copy)
+    part = _postings_parts(copy)[0]
+    table = pq.read_table(part)
+    i = next(k for k, n in enumerate(table["df_block"].to_pylist()) if n >= 2)
+    row = table.slice(i, 1).to_pylist()[0]
+    h = len(row["doc_ids"]) // 2
+    lists = ("doc_ids", "tfs", "dls", "positions")
+    head = {**row, **{c: row[c][:h] for c in lists}, "df_block": h}
+    tail = {**row, **{c: row[c][h:] for c in lists}, "df_block": len(row["doc_ids"]) - h}
+    pq.write_table(
+        pa.concat_tables(
+            [table.slice(0, i), pa.Table.from_pylist([head], schema=table.schema), table.slice(i + 1)]
+        ),
+        part,
+    )
+    pq.write_table(
+        pa.Table.from_pylist([tail], schema=table.schema),
+        os.path.join(copy, "postings", "part-99999-split.parquet"),
+    )
+    with pytest.raises(ValueError, match=f"term '{row['term']}'"):
+        LocalEngine.load(copy)
