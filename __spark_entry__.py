@@ -7,11 +7,14 @@ full stemmed BM25+window free-text query.
 ``queries()`` / ``oracle_sql()`` — one entry per implemented operator
 family (SURVEY.md §2 + training-data ops): 44 queries, 41 of them
 DuckDB-oracle-checked. SQL-expressible operators use the no-stem
-tokenizer so DuckDB computes identical values; the REAL engine query
-path is additionally hash-gated via a ``stem=False`` index
-(engine_*_nostem), and every ANN probe path (LSH flat/layout, IVF
-flat/layout, LSH pairs) folds its deterministic hyperplanes/centroids
-into the SQL as literals. Rows-only (no oracle_sql entry, pinned by
+tokenizer so DuckDB computes identical values. The engine has one
+implementation of each core step, and the oracle checks that one: the
+core_* rows project the tables of a real ``build_index(stem=False)``
+index (doc lengths, df, the pruned and ranked vocabulary, postings
+shape, positions) or run the engine's scorer and boolean path on it;
+the engine_*_nostem rows run its query paths. Every ANN probe path
+(LSH flat/layout, IVF flat/layout, LSH pairs) folds its deterministic
+hyperplanes/centroids into the SQL as literals. Rows-only (no oracle_sql entry, pinned by
 pytest against the pure-Python reference oracle instead — see
 PARITY.md): the stemmed full engine (free/boolean/wand) and the
 multimodal stub plumbing (mm_*).
@@ -112,31 +115,83 @@ def _ivf_layout(spark: SparkSession, sf_dir: str) -> str:
     return _IVF_CACHE[sf_dir]
 
 
-def _index(spark: SparkSession, sf_dir: str, stem: bool = True):
+def _index(
+    spark: SparkSession,
+    sf_dir: str,
+    stem: bool = True,
+    min_f: int = 0,
+    max_p: float = 1.0,
+):
+    """The sf corpus's index, built once under /tmp. Non-default df
+    thresholds get their own directory, fingerprint and cache key, so
+    two indexes of one corpus never evict each other on resume."""
     from search_rs_spark.plans.build import build_index
     from search_rs_spark.plans.index import SearchIndex
     from search_rs_spark.session import ensure_workers_can_import
     from search_rs_spark.sources.webtext import webtext_from_documents
 
     key = sf_dir if stem else f"{sf_dir}::nostem"
+    prefix = "srs_index_" if stem else "srs_index_nostem_"
+    fp = f"documents:{sf_dir}:stem={stem}"
+    if (min_f, max_p) != (0, 1.0):
+        key += f"::min_f={min_f}:max_p={max_p}"
+        prefix += f"minf{min_f}_maxp{max_p}_"
+        fp += f":min_f={min_f}:max_p={max_p}"
     if key not in _INDEX_CACHE:
         ensure_workers_can_import(spark)
         out = os.path.join(
-            tempfile.gettempdir(),
-            ("srs_index_" if stem else "srs_index_nostem_")
-            + sf_dir.strip("/").replace("/", "_"),
+            tempfile.gettempdir(), prefix + sf_dir.strip("/").replace("/", "_")
         )
         build_index(
             spark,
             webtext_from_documents(spark, sf_dir),
             out,
-            min_f=0,
-            max_p=1.0,
+            min_f=min_f,
+            max_p=max_p,
             stem=stem,
-            corpus_fingerprint=f"documents:{sf_dir}:stem={stem}",
+            corpus_fingerprint=fp,
         )
         _INDEX_CACHE[key] = SearchIndex.load(spark, out)
     return _INDEX_CACHE[key]
+
+
+_TOKENS_CHECKED: set[str] = set()
+
+
+def _oracle_tokens_checked(sf_dir: str) -> None:
+    """The core_* oracles tokenise with DUCK_TOKENS (lowercase, then
+    extract); the engine strips non-alphanumerics before lowercasing,
+    as ENGINE_DUCK_TOKENS does. The two differ only on characters whose
+    lowercase form is ASCII. Self-protecting: on a corpus where any
+    document's two token lists differ, the core_* hooks raise instead
+    of hashing engine tables against an oracle that tokenised another
+    text."""
+    if sf_dir in _TOKENS_CHECKED:
+        return
+    import duckdb
+
+    from search_rs_spark.functions.text_analysis import DUCK_TOKENS
+    from search_rs_spark.operators.sql_parity import ENGINE_DUCK_TOKENS
+
+    bad = duckdb.sql(
+        f"SELECT doc_id FROM '{sf_dir}/documents.parquet' "
+        f"WHERE text IS NOT NULL AND {DUCK_TOKENS} <> {ENGINE_DUCK_TOKENS} "
+        "ORDER BY doc_id"
+    ).fetchall()
+    if bad:
+        raise RuntimeError(
+            f"core_* oracle precondition violated: {len(bad)} documents of "
+            f"{sf_dir} (first doc_id {bad[0][0]}) tokenise differently "
+            "under DUCK_TOKENS and the engine's tokenizer"
+        )
+    _TOKENS_CHECKED.add(sf_dir)
+
+
+def _core_index(spark: SparkSession, sf_dir: str, **thresholds):
+    """The no-stem index the core_* rows project, after the tokenizer
+    check."""
+    _oracle_tokens_checked(sf_dir)
+    return _index(spark, sf_dir, stem=False, **thresholds)
 
 
 def _nostem_index_checked(spark: SparkSession, sf_dir: str, terms: "list[str]"):
@@ -233,6 +288,8 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    from pyspark.sql import functions as F
+
     from search_rs_spark.functions import text_analysis as ta
     from search_rs_spark.operators import dedup, similarity, sql_parity as sp
     from search_rs_spark.operators.bm25 import free_query
@@ -242,14 +299,63 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     raw: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
     q = raw  # populated below, then wrapped
 
-    # core engine dataflow (no-stem, SQL-checkable)
-    q["core_doc_lengths"] = lambda s, d: sp.doc_lengths(_docs(s, d))
-    q["core_term_df"] = lambda s, d: sp.term_df(_docs(s, d))
-    q["core_vocabulary"] = lambda s, d: sp.vocabulary(_docs(s, d))
-    q["core_postings_stats"] = lambda s, d: sp.postings_stats(_docs(s, d))
-    q["core_bm25_topk"] = lambda s, d: sp.bm25_topk(_docs(s, d))
-    q["core_boolean"] = lambda s, d: sp.boolean_containment(_docs(s, d))
-    q["core_positions"] = lambda s, d: sp.positional_postings(_docs(s, d))
+    # core engine dataflow, hash-gated: each row projects the tables of
+    # a real no-stem index (tokens / vocabulary / postings) or runs the
+    # engine's scorer and boolean path on it. The engine's positions are
+    # 0-based, the oracle's 1-based.
+    q["core_doc_lengths"] = lambda s, d: _core_index(s, d).doc_lengths.selectExpr(
+        "doc_id", "CAST(doc_len AS BIGINT) AS doc_len"
+    )
+    q["core_term_df"] = lambda s, d: _core_index(s, d).vocabulary.selectExpr(
+        "term", "CAST(df AS BIGINT) AS df"
+    )
+    q["core_vocabulary"] = lambda s, d: _core_index(
+        s, d, min_f=sp.MIN_F, max_p=sp.MAX_P
+    ).vocabulary.selectExpr("term", "term_id", "CAST(df AS BIGINT) AS df")
+    q["core_postings_stats"] = lambda s, d: _core_index(s, d).postings.groupBy(
+        "term"
+    ).agg(
+        F.sum("df_block").alias("df"),
+        F.expr("sum(aggregate(positions, 0L, (a, p) -> a + size(p)))").alias("total_tf"),
+        F.expr("min(array_min(doc_ids))").alias("min_doc_id"),
+        F.expr("max(array_max(doc_ids))").alias("max_doc_id"),
+    )
+    q["core_positions"] = lambda s, d: (
+        _core_index(s, d)
+        .postings.filter(F.col("term").isin(sp.POSITION_TERMS))
+        .selectExpr("term", "inline(arrays_zip(doc_ids, positions)) AS (doc_id, p)")
+        .selectExpr(
+            "doc_id",
+            "term",
+            "CAST(size(p) AS BIGINT) AS tf",
+            "CAST(array_min(p) + 1 AS BIGINT) AS first_pos",
+            "CAST(array_max(p) + 1 AS BIGINT) AS last_pos",
+        )
+    )
+
+    def _core_bm25_topk(s, d):
+        from search_rs_spark.operators.bm25 import scored_hits
+
+        _oracle_tokens_checked(d)
+        idx = _nostem_index_checked(s, d, sp.BM25_QUERY_TERMS)
+        vocab = idx.driver_vocab()
+        terms = [(i, t, vocab.get(t)[1]) for i, t in enumerate(sp.BM25_QUERY_TERMS)]
+        return (
+            scored_hits(idx, terms)
+            .groupBy("doc_id", "dl")
+            .agg(F.sum("bm").alias("bm_sum"))
+            .select("doc_id", F.round(F.col("bm_sum") / F.col("dl"), 6).alias("score"))
+            .orderBy(F.desc("score"), F.asc("doc_id"))
+            .limit(sp.BM25_K)
+        )
+
+    def _core_boolean(s, d):
+        _oracle_tokens_checked(d)
+        idx = _nostem_index_checked(s, d, ["data", "query", "join"])
+        return boolean_query(idx, "data AND query AND NOT join").select("doc_id")
+
+    q["core_bm25_topk"] = _core_bm25_topk
+    q["core_boolean"] = _core_boolean
 
     # full engine (stemmed + window + spellcheck): rows-only checks
     q["engine_free_query"] = lambda s, d: free_query(
@@ -270,10 +376,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # the REAL engine path, DuckDB-hash-gated: a stem=False index makes
     # the engine's own join/aggregate/top-k plan SQL-expressible (the
     # single-term query's window component is the closed-form 3.0; the
-    # boolean path has no scores). These gate operators/bm25.py +
-    # operators/boolean.py themselves, not the sql_parity re-expression.
-    from pyspark.sql import functions as F
-
+    # boolean path has no scores).
     # NOSTEM_K far exceeds any sf's doc count, so the top-k LIMIT is
     # structurally vacuous on both sides: the engine and the oracle each
     # return ALL matching docs and near-tie boundary ordering can never

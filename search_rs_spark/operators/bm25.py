@@ -167,11 +167,11 @@ def _hits_sql(index, terms, blocks, hint: str = "") -> tuple[str, dict]:
     )
     text = (
         f"SELECT {hint}qid, idf, doc_id, tf, dl, positions, {bm} AS bm FROM ("
-        "SELECT qid, idf, doc_id, CAST(tf_i AS DOUBLE) AS tf, "
+        "SELECT qid, idf, doc_id, CAST(size(pos) AS DOUBLE) AS tf, "
         "CAST(dl_i AS DOUBLE) AS dl, pos AS positions "
         f"FROM {bind_terms(structs, 'qid, idf', where)} "
-        "LATERAL VIEW inline(arrays_zip(doc_ids, tfs, dls, positions)) p "
-        "AS doc_id, tf_i, dl_i, pos)"
+        "LATERAL VIEW inline(arrays_zip(doc_ids, dls, positions)) p "
+        "AS doc_id, dl_i, pos)"
     )
     return text, rels
 

@@ -1,26 +1,25 @@
-"""Core engine operators in SQL-oracle-checkable form.
+"""DuckDB oracle SQL for the core engine rows of the driver contract.
 
-Stemming is not expressible in ANSI SQL, so these run the engine's
-dataflow with the no-stem tokenizer (identical token extraction in both
-engines, see functions/text_analysis.py). Everything else — doc-length
-extraction (B6), df aggregation + vocabulary pruning (B7-B9), postings
-statistics, BM25 scoring with the reference's /doc_len renormalization
-(Q9/Q10) and top-k (Q13), boolean containment (Q5-Q8) — is the same
-arithmetic the stemmed engine runs, so the DuckDB comparison genuinely
-gates the engine's relational skeleton.
+This module holds SQL only: each ``*_SQL`` string or ``*_sql()``
+builder runs on a pre-registered ``documents`` view in DuckDB. The
+Spark side of every row is the engine itself. ``__spark_entry__.py``
+answers the ``core_*`` rows from the tables of a real
+``build_index(stem=False)`` index (tokens, vocabulary, postings) and
+from the engine's own scorer and boolean path, so there is one
+implementation of tokenize / df / prune / rank / BM25 / positions, and
+this oracle checks it.
 
-Each Spark function takes a ``documents``-shaped DataFrame
-(doc_id, text, ...); each ``*_SQL`` runs on the pre-registered
-``documents`` view.
+Stemming is not expressible in SQL, so the rows use the no-stem
+tokenizer. The ``core_*`` SQL tokenises with ``DUCK_TOKENS``
+(lowercase, then extract); the engine strips non-alphanumerics first,
+which ``ENGINE_DUCK_TOKENS`` reproduces. The entry hook checks that
+the two agree on every document of the corpus before it answers a
+``core_*`` row.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
-from ..functions.text_analysis import DUCK_TOKENS, SPARK_TOKENS
-from ..plans.ranks import with_global_rank
+from ..functions.text_analysis import DUCK_TOKENS
 from .window_score import BM25_B, BM25_K1
 
 MIN_F = 1
@@ -29,31 +28,10 @@ BM25_QUERY_TERMS = ["spark", "data", "query"]
 BM25_K = 20
 
 
-def _toks(docs: DataFrame) -> DataFrame:
-    return docs.filter(F.col("text").isNotNull()).select(
-        "doc_id", F.expr(SPARK_TOKENS).alias("toks")
-    )
-
-
-def doc_lengths(docs: DataFrame) -> DataFrame:
-    """(doc_id, doc_len) — B6 with the no-stem tokenizer."""
-    return _toks(docs).select("doc_id", F.size("toks").cast("long").alias("doc_len"))
-
-
 DOC_LENGTHS_SQL = f"""
 SELECT doc_id, len({DUCK_TOKENS}) AS doc_len
 FROM documents WHERE text IS NOT NULL
 """
-
-
-def term_df(docs: DataFrame) -> DataFrame:
-    """(term, df) — document frequency per term (B7 phase-1 projection)."""
-    e = _toks(docs).select("doc_id", F.explode("toks").alias("term"))
-    return (
-        e.dropDuplicates(["doc_id", "term"])
-        .groupBy("term")
-        .agg(F.count(F.lit(1)).alias("df"))
-    )
 
 
 TERM_DF_SQL = f"""
@@ -63,18 +41,6 @@ WITH raw AS (
 ), tok AS (SELECT DISTINCT doc_id, term FROM raw)
 SELECT term, count(*) AS df FROM tok GROUP BY term
 """
-
-
-def vocabulary(docs: DataFrame) -> DataFrame:
-    """(term, term_id, df) — df-threshold pruning (B8) + sorted rank (B9).
-
-    Keep iff ``min_f < df <= floor(num_docs * max_p)`` (builder.rs:115-123).
-    """
-    dfc = term_df(docs)
-    n = docs.filter(F.col("text").isNotNull()).count()
-    threshold = int(n * MAX_P)
-    kept = dfc.filter((F.col("df") > MIN_F) & (F.col("df") <= threshold))
-    return with_global_rank(kept, "term", "term_id").select("term", "term_id", "df")
 
 
 VOCABULARY_SQL = f"""
@@ -90,18 +56,6 @@ WHERE df > {MIN_F} AND df <= cast(floor(n * {MAX_P}) AS BIGINT)
 """
 
 
-def postings_stats(docs: DataFrame) -> DataFrame:
-    """(term, df, total_tf, min_doc_id, max_doc_id) — posting-list shape."""
-    e = _toks(docs).select("doc_id", F.explode("toks").alias("term"))
-    tf = e.groupBy("term", "doc_id").agg(F.count(F.lit(1)).alias("tf"))
-    return tf.groupBy("term").agg(
-        F.count(F.lit(1)).alias("df"),
-        F.sum("tf").alias("total_tf"),
-        F.min("doc_id").alias("min_doc_id"),
-        F.max("doc_id").alias("max_doc_id"),
-    )
-
-
 POSTINGS_STATS_SQL = f"""
 WITH raw AS (
   SELECT doc_id, unnest({DUCK_TOKENS}) AS term
@@ -111,45 +65,6 @@ SELECT term, count(*) AS df, sum(tf)::BIGINT AS total_tf,
        min(doc_id) AS min_doc_id, max(doc_id) AS max_doc_id
 FROM tf GROUP BY term
 """
-
-
-def bm25_topk(docs: DataFrame, terms: list[str] | None = None, k: int = BM25_K) -> DataFrame:
-    """(doc_id, score) — full reference BM25 (mod.rs:158-186) incl. the
-    /doc_len renormalization quirk, no-stem tokens, top-k by
-    (rounded score desc, doc_id asc)."""
-    terms = terms or BM25_QUERY_TERMS
-    t = _toks(docs).select("doc_id", F.size("toks").alias("dl"), "toks")
-    stats = t.agg(
-        F.count(F.lit(1)).alias("n"), F.avg("dl").alias("avgdl")
-    ).collect()[0]
-    n, avgdl = float(stats["n"]), float(stats["avgdl"])
-
-    e = t.select(
-        "doc_id", "dl", F.explode("toks").alias("term")
-    ).filter(F.col("term").isin(terms))
-    tf = e.groupBy("doc_id", "dl", "term").agg(F.count(F.lit(1)).alias("tf"))
-    dfc = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    scored = (
-        tf.join(F.broadcast(dfc), "term")
-        .withColumn(
-            "idf", F.log((F.lit(n) - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0)
-        )
-        .withColumn(
-            "bm",
-            F.col("idf")
-            * (F.col("tf") * (BM25_K1 + 1.0))
-            / (
-                F.col("tf")
-                + BM25_K1 * (1.0 - BM25_B + BM25_B * F.col("dl") / F.lit(avgdl))
-            ),
-        )
-        .groupBy("doc_id", "dl")
-        .agg(F.sum("bm").alias("bm_sum"))
-        .select(
-            "doc_id", F.round(F.col("bm_sum") / F.col("dl"), 6).alias("score")
-        )
-    )
-    return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
 
 def bm25_topk_sql(terms: list[str] | None = None, k: int = BM25_K) -> str:
@@ -197,7 +112,7 @@ ENGINE_DUCK_TOKENS = (
 
 def engine_free_query_nostem_sql(term: str, k: int) -> str:
     """DuckDB oracle for the REAL engine query path over a
-    ``build_index(stem=False)`` index (not the sql_parity re-expression):
+    ``build_index(stem=False)`` index:
     a single-term free query, whose combined score is fully closed-form —
     every matching doc contains the whole (one-term) query, so its
     minimal covering window is 1 and the window component is exactly
@@ -371,17 +286,6 @@ WHERE list_contains(toks, 'data') AND list_contains(toks, 'query')
 """
 
 
-def boolean_containment(docs: DataFrame) -> DataFrame:
-    """doc ids with 'data' AND 'query' AND NOT 'join' (Q5-Q8 semantics
-    over verbatim no-stem tokens)."""
-    t = _toks(docs)
-    return t.filter(
-        F.array_contains("toks", "data")
-        & F.array_contains("toks", "query")
-        & ~F.array_contains("toks", "join")
-    ).select("doc_id")
-
-
 BOOLEAN_SQL = f"""
 WITH t AS (
   SELECT doc_id, {DUCK_TOKENS} AS toks FROM documents WHERE text IS NOT NULL
@@ -393,32 +297,6 @@ WHERE list_contains(toks, 'data') AND list_contains(toks, 'query')
 
 
 POSITION_TERMS = ["data", "query", "spark"]
-
-
-def positional_postings(docs: DataFrame, terms: list[str] | None = None) -> DataFrame:
-    """(doc_id, term, tf, first_pos, last_pos) — the positional payload
-    of the inverted index (B7's positions lists), 1-based positions."""
-    terms = terms or POSITION_TERMS
-    t = _toks(docs)
-    rows = []
-    for term in terms:
-        pos = F.filter(
-            F.sequence(F.lit(1), F.size("toks")),
-            lambda i: F.element_at(F.col("toks"), i) == term,
-        )
-        rows.append(
-            t.select(
-                "doc_id",
-                F.lit(term).alias("term"),
-                F.size(pos).cast("long").alias("tf"),
-                F.array_min(pos).cast("long").alias("first_pos"),
-                F.array_max(pos).cast("long").alias("last_pos"),
-            ).filter(F.col("tf") > 0)
-        )
-    out = rows[0]
-    for r in rows[1:]:
-        out = out.unionAll(r)
-    return out
 
 
 def positional_postings_sql(terms: list[str] | None = None) -> str:

@@ -20,8 +20,10 @@ shuffle with a checkpointed parquet output:
                                                   of tokens — no stage, no
                                                   shuffle (B7)
   vocabulary   (term, term_id, df)                df filter + rank (B8/B9)
-  postings     (term_id, term, block_id, doc_ids, tfs, dls, positions,
-                df_block, block_max)              blocked posting lists (B10)
+  postings     (term_id, term, block_id, doc_ids, dls, positions,
+                df_block, block_max)              blocked posting lists (B10);
+                                                  a posting's tf is
+                                                  size(positions)
 
 Scale decisions:
 - doc_id / term_id are range-partitioned global ranks (plans/ranks.py),
@@ -297,7 +299,6 @@ def _build_downstream(
             "df",
             "block_id",
             F.expr("transform(plist, x -> x.doc_id)").alias("doc_ids"),
-            F.expr("transform(plist, x -> x.tf)").alias("tfs"),
             F.expr("transform(plist, x -> x.doc_len)").alias("dls"),
             F.expr("transform(plist, x -> x.positions)").alias("positions"),
             F.size("plist").alias("df_block"),

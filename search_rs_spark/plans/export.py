@@ -83,11 +83,6 @@ def export_reference_index(index, out_prefix: str) -> dict:
             ).alias("doc_ids"),
             F.flatten(
                 F.expr(
-                    "transform(sort_array(collect_list(struct(block_id, tfs))), x -> x.tfs)"
-                )
-            ).alias("tfs"),
-            F.flatten(
-                F.expr(
                     "transform(sort_array(collect_list(struct(block_id, positions))), x -> x.positions)"
                 )
             ).alias("positions"),
@@ -102,7 +97,7 @@ def export_reference_index(index, out_prefix: str) -> dict:
             for row in pdf.itertuples(index=False):
                 blob, bits = encode_postings_with_bitlen(
                     list(row.doc_ids),
-                    list(row.tfs),
+                    [len(p) for p in row.positions],
                     [list(p) for p in row.positions],
                 )
                 out["term_id"].append(row.term_id)

@@ -19,7 +19,9 @@ The server process imports neither pyspark nor pandas. Handler threads
 share one engine (read-only after load) and one LRU (locked). POST
 /query answers JSON when the client sends ``Accept:
 application/json``, HTML otherwise; a missing, non-integer or negative
-``Content-Length`` gets 400.
+``Content-Length`` gets 400. Each connection's socket times out after
+``REQUEST_TIMEOUT_S`` of silence, so a client that sends less body than
+it declared cannot pin a handler thread.
 """
 
 from __future__ import annotations
@@ -38,6 +40,9 @@ from .operators.serving import LocalEngine
 
 CACHE_SIZE = 10  # server/src/main.rs:21
 SNIPPET_CHARS = 250
+# per socket operation; a timed-out request is dropped and its
+# connection closed (BaseHTTPRequestHandler.handle_one_request)
+REQUEST_TIMEOUT_S = 5
 
 
 class _LRU:
@@ -141,6 +146,8 @@ def make_server(index_path: str, port: int = 3000, host: str = "127.0.0.1"):
     cache = _LRU()
 
     class Handler(BaseHTTPRequestHandler):
+        timeout = REQUEST_TIMEOUT_S
+
         def log_message(self, fmt, *args):  # quiet test runs
             pass
 

@@ -58,6 +58,14 @@ def _normalize(rows, cols):
 ORACLE_KEYS = sorted(entrymod.oracle_sql().keys())
 
 
+def test_contract_size():
+    """A refactor of the contract must not silently drop a row, least of
+    all a hash-gated one."""
+    assert len(entrymod.queries()) == 44
+    assert len(ORACLE_KEYS) == 41
+    assert set(ORACLE_KEYS) <= set(entrymod.queries())
+
+
 @pytest.mark.parametrize("name", ORACLE_KEYS)
 def test_query_matches_oracle(spark, duck, name):
     qfn = entrymod.queries()[name]
@@ -111,9 +119,10 @@ def test_nostem_oracle_corpus_preconditions(spark):
     that makes the nostem top-k LIMIT structurally vacuous."""
     idx = entrymod._index(spark, SF_DIR, stem=False)
     vocab = idx.driver_vocab()
-    for t in ["data", "query", "join"]:
+    for t in ["data", "query", "join", "spark"]:
         assert vocab.spellcheck_term(t) == t, f"{t} no longer verbatim in vocab"
     assert idx.num_docs < entrymod.NOSTEM_K
+    entrymod._oracle_tokens_checked(SF_DIR)  # raises if any doc differs
 
 
 def test_entry_smoke(spark):

@@ -7,6 +7,7 @@ import socket
 import subprocess
 import sys
 import threading
+import time
 import urllib.request
 
 import pytest
@@ -176,6 +177,19 @@ def test_bad_content_length_is_400(served, length):
     base, _ = served
     assert _raw_post(base, length).split()[1] == "400"
     json.loads(_post(base, "hello"))  # the server still answers
+
+
+def test_short_body_times_out_and_frees_the_handler(served):
+    """A body shorter than its ``Content-Length`` used to block the
+    handler thread in ``rfile.read`` until the client hung up; the
+    socket timeout now drops the connection, unanswered."""
+    from search_rs_spark.server import REQUEST_TIMEOUT_S
+
+    base, _ = served
+    t0 = time.monotonic()
+    assert _raw_post(base, 100) == ""  # 11 bytes sent; closed, no status line
+    assert time.monotonic() - t0 < REQUEST_TIMEOUT_S + 3
+    json.loads(_post(base, "hello"))  # a fresh connection still answers
 
 
 _IMPORT_PIN = """

@@ -161,17 +161,17 @@ def _postings_parts(index_path):
     return sorted(os.path.join(d, f) for f in os.listdir(d) if f.endswith(".parquet"))
 
 
-def test_stored_tfs_and_dls_are_derivable(engines):
-    """LocalEngine reads neither ``tfs`` nor ``dls``: every stored tf is
-    its posting's position count and every stored dl is the doc's
-    ``tokens.doc_len``. The engine's own per-term reads agree."""
+def test_stored_dls_are_derivable(engines):
+    """LocalEngine does not read ``dls``: every stored dl is the doc's
+    ``tokens.doc_len``. The engine's own per-term reads agree, with tf
+    taken as each posting's position count."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     idx, local, _ = engines
     p = pa.concat_tables(
-        pq.read_table(f, columns=["term", "block_id", "doc_ids", "tfs", "dls", "positions"])
+        pq.read_table(f, columns=["term", "block_id", "doc_ids", "dls", "positions"])
         for f in _postings_parts(idx.path)
     )
     t = pq.read_table(os.path.join(idx.path, "tokens"), columns=["doc_id", "doc_len"])
@@ -179,12 +179,12 @@ def test_stored_tfs_and_dls_are_derivable(engines):
     rows = p.to_pylist()
     assert rows
     for r in rows:
-        assert r["tfs"] == [len(x) for x in r["positions"]]
         assert r["dls"] == [doc_len[d] for d in r["doc_ids"]]
     by_term: dict = {}
     for r in sorted(rows, key=lambda r: (r["term"], r["block_id"])):
         got = by_term.setdefault(r["term"], ([], [], []))
-        got[0].extend(r["doc_ids"]), got[1].extend(r["tfs"]), got[2].extend(r["dls"])
+        got[0].extend(r["doc_ids"]), got[2].extend(r["dls"])
+        got[1].extend(len(x) for x in r["positions"])
     assert set(by_term) == set(local.rows)
     for term, (docs, tfs, dls) in by_term.items():
         e_docs, e_tfs, e_dls, e_pos = local._read_postings(term)
@@ -210,7 +210,7 @@ def test_load_rejects_a_term_split_across_files(engines, tmp_path):
     i = next(k for k, n in enumerate(table["df_block"].to_pylist()) if n >= 2)
     row = table.slice(i, 1).to_pylist()[0]
     h = len(row["doc_ids"]) // 2
-    lists = ("doc_ids", "tfs", "dls", "positions")
+    lists = ("doc_ids", "dls", "positions")
     head = {**row, **{c: row[c][:h] for c in lists}, "df_block": h}
     tail = {**row, **{c: row[c][h:] for c in lists}, "df_block": len(row["doc_ids"]) - h}
     pq.write_table(

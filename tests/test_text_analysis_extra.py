@@ -95,6 +95,22 @@ def test_winnow_disjoint_texts_share_nothing(spark):
     assert fps[0] and fps[1] and not (fps[0] & fps[1])
 
 
+def test_winnow_plan_hashes_each_gram_once(spark):
+    """Results cannot see the plan shape: the gram array must stay one
+    projection (CollapseProject inlining it would re-run md5 in every
+    consumer), with no per-character Window and only widen_scan's
+    Exchange. Counted in the AQE final plan; the string also prints
+    the initial plan."""
+    docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
+    df = winnow_fingerprints(docs)
+    assert df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Final Plan ==")[-1].split("== Initial Plan ==")[0]
+    assert final.count("md5(") == 1, final
+    assert "Window" not in final, final
+    assert final.count("Exchange") == 1, final
+
+
 def test_widen_scan_spreads_to_the_input_width_never_below_conf(spark, tmp_path):
     """The repartition target is max(shuffle conf, the input's scan
     width): a 3-file local parquet input at conf 1 is spread over 3
