@@ -221,14 +221,19 @@ def _streamed_index(spark: SparkSession, sf_dir: str):
     over the same sf corpus — stream-built == batch-built is pinned by
     tests/test_streaming.py; this handle lets the driver hash-gate the
     streamed build against the same DuckDB oracle as the batch index.
-    Built once per sf under /tmp with an explicit completion marker (a
-    partial prior run is wiped and rebuilt — the multi-step chain has
-    no single resume fingerprint)."""
+    Built once per sf under /tmp with an explicit completion marker
+    holding the finalizer's build fingerprint: a partial prior run, or
+    one whose marker names another fingerprint (a changed index
+    layout), is wiped and rebuilt — the multi-step chain has no single
+    resume fingerprint of its own."""
     key = f"{sf_dir}::streamed_nostem"
     if key not in _INDEX_CACHE:
         import shutil
 
-        from search_rs_spark.plans.build import build_index_from_term_doc
+        from search_rs_spark.plans.build import (
+            build_index_from_term_doc,
+            term_doc_fingerprint,
+        )
         from search_rs_spark.plans.index import SearchIndex
         from search_rs_spark.session import ensure_workers_can_import
         from search_rs_spark.sources.webtext import webtext_from_documents
@@ -241,7 +246,14 @@ def _streamed_index(spark: SparkSession, sf_dir: str):
         )
         marker = os.path.join(base, "_COMPLETE")
         out = os.path.join(base, "index")
-        if not os.path.exists(marker):
+        hint = f"streamed:{sf_dir}:stem=False"
+        fp = term_doc_fingerprint(hint, min_f=0, max_p=1.0, stem=False)
+        try:
+            with open(marker) as f:
+                complete = f.read().strip() == fp
+        except OSError:
+            complete = False
+        if not complete:
             shutil.rmtree(base, ignore_errors=True)
             in_dir = os.path.join(base, "in")
             webtext_from_documents(spark, sf_dir).write.parquet(in_dir)
@@ -271,10 +283,10 @@ def _streamed_index(spark: SparkSession, sf_dir: str):
                 min_f=0,
                 max_p=1.0,
                 stem=False,
-                fingerprint_hint=f"streamed:{sf_dir}:stem=False",
+                fingerprint_hint=hint,
             )
             with open(marker, "w") as f:
-                f.write("ok\n")
+                f.write(fp + "\n")
         _INDEX_CACHE[key] = SearchIndex.load(spark, out)
     return _INDEX_CACHE[key]
 

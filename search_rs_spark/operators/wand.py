@@ -25,21 +25,22 @@ of DISTINCT terms, and the true window component reaches
 distinct). A flat 3.0 would under-bound duplicate-token queries and
 make pruning unsafe.
 
-Exact-top-k protocol (two bounded passes, fully distributed — no
-full-metadata collect, no literal IN-lists):
+Exact-top-k protocol (two bounded passes; no full-metadata collect —
+the driver holds at most a bounded set of block ids):
 1. the coverage set = highest-ub spans whose cumulative doc coverage
    reaches COVERAGE_FACTOR * k, picked via distributed top-N
    (TakeOrderedAndProject over at most COVERAGE_FACTOR*k slim rows —
    every span holds >= 1 doc, so the top COVERAGE_FACTOR*k spans always
-   suffice) + a cumulative-sum window over that bounded set; score those
-   spans exactly and take the running k-th best score as theta (the only
-   driver-side value: k winner rows);
+   suffice) + a cumulative-sum window over that bounded set; its ids
+   are collected, the spans scored exactly, and the running k-th best
+   score is theta;
 2. exactly score every remaining span with ub >= theta (provably the
    only spans that could alter the top-k), merge, and take the top-k.
-   Surviving-span sets up to MAX_LITERAL_BLOCKS inline as a literal
-   scan filter (parquet row-group stats skip the pruned blocks' array
-   columns entirely — the IO win pruning exists for); larger sets fall
-   back to a broadcast semi join (prunes the explode, not the scan).
+   Block-id sets up to MAX_LITERAL_BLOCKS (the coverage set and the
+   survivors alike) are collected and inlined as a literal scan filter
+   (parquet row-group stats skip the pruned blocks' array columns
+   entirely — the IO win pruning exists for); larger sets stay a
+   broadcast semi join (prunes the explode, not the scan).
 
 Safety: every doc's true score <= its span's ub, so a span with
 ub < theta cannot contribute a doc at or above the k-th best
@@ -51,8 +52,9 @@ nearly every span holds all query terms, so the all-terms window bonus
 blankets the ub spread and ub >= theta keeps ~99% of spans (243/245
 measured): pruning cannot fire, and WAND would pay its pass structure
 for nothing. :func:`free_query_wand` therefore COST-GATES the
-protocol (see its docstring): two metadata-only checks route such
-queries to the exhaustive scorer, so a caller always gets within a
+protocol (see its docstring): exact bounds from the build-time
+per-term block counts (vocabulary ``n_blocks``) route such queries to
+the exhaustive scorer before any job, so a caller always gets within a
 hair of the better plan. The protocol's own regime is corpora where
 the per-span metadata scan is far smaller than the posting arrays
 (billions of docs / long head-term lists) or score mixes where the
@@ -79,29 +81,25 @@ from .window_score import U32_MAX, WINDOW_SCORE_MULTIPLIER
 COVERAGE_FACTOR = 4
 
 # cost gates (see free_query_wand): the block protocol only runs when
-# the span pool is big enough that pruning CAN pay (pre-gate), and is
-# abandoned when theta leaves too many spans alive for it to pay
-# (post-theta gate). Both consult only the slim persisted span-ub
-# metadata — one tiny aggregate each, never the posting arrays.
+# the span pool is big enough that pruning CAN pay (pre-gates, zero-job
+# from the dfs and per-term block counts), and is abandoned when theta
+# leaves too many spans alive for it to pay (post-theta gate, one
+# aggregate over the slim persisted span-ub table).
 SPAN_GATE_FACTOR = 2  # pre-gate: need > this x coverage target spans
 BLANKET_FRACTION = 0.95  # pre-gate: bail when >= this holds all terms
-# zero-job blanket-estimate guard: the uniform-placement estimate is
-# trusted only when every query term's df/N is at least this — below
-# it, spatial clustering can make the real span-miss fraction large
-# while the estimate says ~0, so mid-df queries go to the measured gate
-HEAD_DF_FRACTION = 0.2
 SURVIVOR_BAILOUT_FRACTION = 0.5  # post-gate: bail when >= this survives
 
 # pre-gate (absolute volume, zero-job): the exhaustive scorer explodes
 # exactly sum(df over distinct query terms) posting rows in ONE job
-# chain; the protocol's two bounded passes + gate aggregates are ~6
-# extra jobs of fixed structure. Below this volume the single pass is
-# cheaper than the structure even when pruning would skip 90% of spans
-# (measured: 1M-doc planted-rare-term corpus, sum_df ~= 1M, exhaustive
-# 3.4-4.1 s vs protocol 7.3 s despite ~10% survivors). Calibrated to
+# chain; the protocol's two bounded passes + the post-theta aggregate
+# are a handful of extra jobs of fixed structure. Below this volume the
+# single pass is cheaper than the structure even when pruning would
+# skip 90% of spans (measured: 1M-doc planted-rare-term corpus, sum_df
+# ~= 1M, exhaustive 3.4-4.1 s vs protocol 7.3 s despite ~10%
+# survivors). Calibrated to
 # ~1M rows/s/core single-pass scoring on this class of hardware; the
-# relative gates below handle the can-pruning-bite question, this one
-# handles is-there-enough-work-to-prune.
+# span bounds handle the can-pruning-bite question, this one handles
+# is-there-enough-work-to-prune.
 MIN_PRUNABLE_POSTINGS = 4_000_000
 
 # block restrictions at or under this many ids inline as a literal
@@ -131,12 +129,7 @@ def span_upper_bounds(index, terms: list[tuple[int, str, int]]) -> DataFrame:
     eps = sql_double(WINDOW_SCORE_MULTIPLIER * num_tokens / U32_MAX)
     return index.spark.sql(
         f"SELECT block_id, ub_bm + CASE WHEN n_terms = {n_distinct} "
-        f"THEN {full} ELSE {eps} END AS ub, max_docs, "
-        # all-terms flag kept for the blanket cost gate (free_query_wand):
-        # spans holding every distinct term share one uniform window
-        # bonus, so when (nearly) all spans do, the ub spread is
-        # bm-only and pruning cannot bite
-        f"n_terms = {n_distinct} AS all_terms FROM ("
+        f"THEN {full} ELSE {eps} END AS ub, max_docs FROM ("
         "SELECT block_id, sum(idf * block_max * mult) AS ub_bm, "
         "count(DISTINCT term) AS n_terms, max(df_block) AS max_docs "
         f"FROM {bind_terms(structs, 'idf, mult')} GROUP BY block_id)",
@@ -148,110 +141,65 @@ def free_query_wand(
     index,
     query: str,
     k: int = 100,
-    force_protocol: bool | None = None,
+    force_protocol: bool = False,
 ) -> DataFrame:
     """Rank-identical to operators.bm25.free_query, with block pruning.
 
     Cost-gated: the two-pass block protocol only pays when most spans
-    can be skipped, so two metadata-only gates route the query to the
-    plain exhaustive scorer (identical results by definition) when
-    pruning cannot win:
+    can be skipped, so the query goes to the plain exhaustive scorer
+    (identical results by definition) when pruning cannot win:
 
-    - pre-gate (absolute volume, zero-job): if sum(df) over the distinct
-      query terms — exactly the posting-row count the exhaustive scorer
-      explodes in its single pass — is under MIN_PRUNABLE_POSTINGS,
-      there is not enough work for pruning to repay the protocol's
-      multi-job structure no matter how well theta prunes (measured:
-      1M-doc rare-term corpus, ~10% survivors, protocol still 2x
-      slower). Bail before any job.
-    - pre-gate (span pool): if the query touches <= SPAN_GATE_FACTOR *
-      COVERAGE_FACTOR * k spans, the coverage set would swallow
-      (nearly) the whole pool and pass 2 could skip almost nothing —
-      the protocol is pure overhead (the measured 1M-doc regime:
-      245 spans vs a 400-span coverage target, 2.3x slower than
-      exhaustive). Zero-job when even the corpus's total block count
-      is under the gate; else part of the one-aggregate pre-gate.
-    - pre-gate (blanketing): if >= BLANKET_FRACTION of the spans
-      contain ALL distinct query terms, the window bonus is uniform
-      across (nearly) every span, the ub spread is bm-only, and
-      block-max slack keeps ~99% of spans above any reachable theta
-      (measured 243/245 at 1M docs; 10M-doc protocol run 10.6 s vs
-      6.5 s exhaustive) — bail before pass 1. Shares one slim
-      metadata aggregate with the span-pool gate. All-head-term
-      queries short-circuit this check zero-job via a driver-side
-      blanket estimate from the dfs (see inline comment) — the
-      metadata aggregate itself scans the query terms' postings,
-      which is exactly the work pruning was supposed to avoid.
-    - post-theta gate: if >= SURVIVOR_BAILOUT_FRACTION of spans have
-      ub >= theta after pass 1 (e.g. the all-terms window bonus
-      blankets the ub spread), restricting pass 2 to survivors still
-      scores almost everything while paying the two-pass structure —
-      fall through to the exhaustive scorer.
+    - volume (zero-job): if sum(df) over the distinct query terms —
+      exactly the posting-row count the exhaustive scorer explodes in
+      its single pass — is under MIN_PRUNABLE_POSTINGS, there is not
+      enough work for pruning to repay the protocol's multi-job
+      structure no matter how well theta prunes (measured: 1M-doc
+      rare-term corpus, ~10% survivors, protocol still 2x slower).
+    - span bounds (zero-job): with nb(t) the number of doc-id blocks
+      term t spans (vocabulary ``n_blocks``, recorded at build), B the
+      corpus's block count and m the distinct query terms, the span
+      pool is at most ``pool_hi = min(B, sum nb)`` and at least
+      ``full_lo = sum nb - (m-1)*B`` spans hold every term (Bonferroni).
+      Bail when ``pool_hi <= SPAN_GATE_FACTOR * COVERAGE_FACTOR * k``
+      (the coverage set would swallow (nearly) the whole pool — the
+      measured 1M-doc regime: 245 spans vs a 400-span coverage target,
+      2.3x slower than exhaustive) or when ``full_lo >=
+      BLANKET_FRACTION * pool_hi`` (the all-terms window bonus is
+      uniform across (nearly) every span, the ub spread is bm-only,
+      and block-max slack keeps ~99% of spans above any reachable
+      theta — measured 243/245 at 1M docs; 10M-doc protocol 10.6 s vs
+      6.5 s exhaustive). Single-term queries (full_lo = pool_hi) and
+      head terms (nb = B) always bail; clustered terms keep the
+      protocol by their real block counts. Both bounds are exact, so
+      neither bails where the measured span table would have kept the
+      protocol; the cases they cannot decide run it.
+    - post-theta (one aggregate over the persisted span-ub table): if
+      >= SURVIVOR_BAILOUT_FRACTION of spans have ub >= theta after pass
+      1, restricting pass 2 to survivors still scores almost
+      everything while paying the two-pass structure — fall through to
+      the exhaustive scorer.
 
-    ``force_protocol=True`` disables both gates (tests pin the
-    protocol's rank-identity directly); ``False`` forces the exhaustive
-    path; ``None`` (default) applies the gates.
+    ``force_protocol=True`` skips every gate (tests pin the protocol's
+    rank-identity directly).
     """
     terms = resolve_query_terms(index, query)
     if not terms:
         return empty_result(index)
-    if force_protocol is False:
-        return free_query(index, query, k)
 
-    if force_protocol is None:
-        # zero-job forms of the pre-gates:
-        # - single-distinct-term queries blanket trivially (every
-        #   touched span holds "all" terms, so the window bonus is
-        #   uniform and the ub spread is bm-only — the regime where
-        #   block-max slack keeps ~everything above theta);
-        # - the span pool can never exceed the corpus's total block
-        #   count (ceil(num_docs / block_span), both in the stats
-        #   json), so when even that ceiling is under the gate, bail
-        #   without running ANY metadata job.
-        import math
-
-        if len({t for _, t, _ in terms}) == 1:
+    target = COVERAGE_FACTOR * k
+    if not force_protocol:
+        # absolute-volume gate first: the dfs arrived with
+        # resolve_query_terms, so this costs nothing
+        dfs = {t: df for _, t, df in terms}
+        if sum(dfs.values()) <= MIN_PRUNABLE_POSTINGS:
             return free_query(index, query, k)
-        block_span = int(index.stats.get("block_span") or 1)
-        max_spans = math.ceil(index.num_docs / block_span)
-        if max_spans <= SPAN_GATE_FACTOR * COVERAGE_FACTOR * k:
-            return free_query(index, query, k)
-        # absolute-volume gate: dfs arrived with resolve_query_terms,
-        # so this costs nothing (see MIN_PRUNABLE_POSTINGS)
-        sum_df = sum({t: df for _, t, df in terms}.values())
-        if sum_df <= MIN_PRUNABLE_POSTINGS:
-            return free_query(index, query, k)
-        # blanket estimate (zero-job): the in-plan blanket gate below
-        # needs span_upper_bounds — a full postings scan of the query
-        # terms that pruning then throws away when it fires (measured
-        # 30M docs, 5 head terms: +40 s of discarded metadata pass,
-        # wand-auto 140.5 s vs 100.5 s straight free_query). Estimate
-        # the blanket fraction driver-side from the dfs instead: under
-        # a uniform doc-placement model a span of `block_span` docs
-        # misses term t with probability (1 - df_t/N)^block_span, so
-        # the expected fraction of spans missing ANY term is at most
-        # the sum over distinct terms (union bound). Head terms
-        # (df/N >= 0.2) drive this to ~0 and bail here with ZERO jobs;
-        # the paying planted-rare regime (df/N ~= 5e-5, block_span
-        # 4096 -> miss ~= 0.81 per BASELINE.md) sails past and keeps
-        # the protocol. For spatially CLUSTERED mid-df terms the
-        # uniform model UNDERestimates the miss fraction (a term
-        # confined to a doc-id range is absent from most spans even
-        # when (1-df/N)^B ~= 0), so an estimate-only gate would bail
-        # to the exhaustive scorer and forfeit a pruning win the
-        # measured in-plan gate would have kept. Guard: take the
-        # zero-job bail only when EVERY distinct term is unambiguously
-        # head (df/N >= HEAD_DF_FRACTION — a term occupying >= 20% of
-        # the corpus cannot be clustered out of most spans); anything
-        # with a mid-df term falls through to the measured in-plan
-        # gate below (the pre-round-5 status quo, rank-identical
-        # either way; tests/test_wand.py pins the clustered regime).
-        n = float(index.num_docs) or 1.0
-        dfs = {t: df for _, t, df in terms}.values()
-        miss_est = sum((1.0 - df / n) ** block_span for df in dfs)
+        nb_sum = sum(index.n_blocks(dfs).values())
+        corpus_blocks = -(-index.num_docs // int(index.stats["block_span"]))
+        pool_hi = min(corpus_blocks, nb_sum)
+        full_lo = nb_sum - (len(dfs) - 1) * corpus_blocks
         if (
-            min(dfs) / n >= HEAD_DF_FRACTION
-            and miss_est <= 1.0 - BLANKET_FRACTION
+            pool_hi <= SPAN_GATE_FACTOR * target
+            or full_lo >= BLANKET_FRACTION * pool_hi
         ):
             return free_query(index, query, k)
 
@@ -260,10 +208,9 @@ def free_query_wand(
         # ---- pass 1: coverage set, picked distributedly -------------------
         # top-N by ub is bounded by COVERAGE_FACTOR*k rows (each span
         # covers >= 1 doc), so the cumulative-sum window below runs over
-        # a tiny, driver-independent set; blocks stay in DataFrames end
-        # to end. Runs inside the try: the collect is a real Spark job,
-        # and a failure here must still unpersist span_ub.
-        target = COVERAGE_FACTOR * k
+        # a tiny, driver-independent set. Runs inside the try: the
+        # collect is a real Spark job, and a failure here must still
+        # unpersist span_ub.
         cand = span_ub.orderBy(F.desc("ub"), F.asc("block_id")).limit(target)
         # Unpartitioned window, intentionally: cand is capped at
         # COVERAGE_FACTOR*k rows by the limit above, so the single-task
@@ -296,17 +243,6 @@ def free_query_wand(
                 [(b,) for b in first_blocks], "block_id long"
             )
             first_rep = first_df
-        if force_protocol is None:
-            gate = span_ub.agg(
-                F.count(F.lit(1)).alias("n_spans"),
-                F.count_if(F.col("all_terms")).alias("n_full"),
-            ).collect()[0]
-            n_spans, n_full = gate["n_spans"], gate["n_full"]
-            if (
-                n_spans <= SPAN_GATE_FACTOR * target
-                or n_full >= BLANKET_FRACTION * n_spans
-            ):
-                return free_query(index, query, k)
         first_top = (
             score_candidates(index, terms, blocks=first_rep)
             .orderBy(F.desc("score"), F.asc("doc_id"))
@@ -316,11 +252,14 @@ def free_query_wand(
         theta = first_top[-1]["score"] if len(first_top) >= k else float("-inf")
 
         # ---- post-theta gate: does pruning actually bite? -----------------
-        # one count over the persisted slim span table; pass-1 work is
-        # discarded on bailout (it was bounded by the coverage target)
-        if force_protocol is None:
-            survivors = span_ub.filter(F.col("ub") >= F.lit(theta)).count()
-            if survivors >= SURVIVOR_BAILOUT_FRACTION * n_spans:
+        # one aggregate over the persisted slim span table; pass-1 work
+        # is discarded on bailout (it was bounded by the coverage target)
+        if not force_protocol:
+            gate = span_ub.agg(
+                F.count(F.lit(1)).alias("n_spans"),
+                F.count_if(F.col("ub") >= F.lit(theta)).alias("survivors"),
+            ).collect()[0]
+            if gate["survivors"] >= SURVIVOR_BAILOUT_FRACTION * gate["n_spans"]:
                 return free_query(index, query, k)
 
         # ---- pass 2: every other span that could still alter the top-k ----

@@ -19,7 +19,9 @@ shuffle with a checkpointed parquet output:
   term_doc     (doc_id, doc_len, term, tf, positions)  NARROW inline view
                                                   of tokens — no stage, no
                                                   shuffle (B7)
-  vocabulary   (term, term_id, df)                df filter + rank (B8/B9)
+  vocabulary   (term, term_id, df, n_blocks)      df filter + rank (B8/B9);
+                                                  n_blocks = the term's
+                                                  postings row count
   postings     (term_id, term, block_id, doc_ids, dls, positions,
                 df_block, block_max)              blocked posting lists (B10);
                                                   a posting's tf is
@@ -80,6 +82,24 @@ def postings_shuffle_partitions(n_fragments: int, conf_partitions: int) -> int:
     return max(int(conf_partitions), -(-int(n_fragments) // POSTINGS_FRAGMENTS_PER_PARTITION))
 
 
+def _block_id(block_span: int):
+    return (F.col("doc_id") / block_span).cast("long").alias("block_id")
+
+
+def _stats(num_docs, total_len, min_f, max_p, stem, block_span) -> dict:
+    """The stats json both builds write (documents.rs:21-38)."""
+    return {
+        "num_docs": int(num_docs),
+        "avgdl": (float(total_len or 0) / num_docs) if num_docs else 0.0,
+        "min_f": min_f,
+        "max_p": max_p,
+        "stem": stem,
+        "block_span": block_span,
+        # builder.rs:115 — note the integer truncation (`as u32`)
+        "df_threshold": int(num_docs * max_p),
+    }
+
+
 def build_index(
     spark: SparkSession,
     webtext: DataFrame,
@@ -124,7 +144,7 @@ def build_index(
             "stem": stem,
             "lang": lang,
             "block_span": block_span,
-            "layout": 7,
+            "layout": 8,
         }
     )
     runner = StageRunner(spark, out_dir, fp, resume=resume)
@@ -180,23 +200,11 @@ def build_index(
     else:
         if obs_holder:
             got = obs_holder[0].get
-            num_docs, total_len = got["n"], got["total_len"] or 0
         else:  # tokens stage was resumed; one aggregate over the table
-            agg = tokens.agg(
+            got = tokens.agg(
                 F.count(F.lit(1)).alias("n"), F.sum("doc_len").alias("total_len")
             ).collect()[0]
-            num_docs = agg["n"]
-            total_len = agg["total_len"] or 0
-        stats = {
-            "num_docs": int(num_docs),
-            "avgdl": (float(total_len) / num_docs) if num_docs else 0.0,
-            "min_f": min_f,
-            "max_p": max_p,
-            "stem": stem,
-            "block_span": block_span,
-            # builder.rs:115 — note the integer truncation (`as u32`)
-            "df_threshold": int(num_docs * max_p),
-        }
+        stats = _stats(got["n"], got["total_len"], min_f, max_p, stem, block_span)
         runner.write_json("stats", stats)
 
     # doc_lengths is served from the tokens table via parquet column
@@ -211,16 +219,17 @@ def build_index(
     # shuffle of one row per token occurrence is gone entirely). Both
     # consumers re-scan the checkpointed tokens parquet and do their own
     # term-keyed shuffle — the only all-to-all exchanges left in the
-    # build. The vocabulary df-count gets its own terms-only view so the
-    # parquet scan reads just the terms column (the positions arrays —
-    # the bulk of the table — stay on disk for that pass).
+    # build. The vocabulary count gets its own (block_id, term) view so
+    # the parquet scan reads just the doc_id and terms columns (the
+    # positions arrays — the bulk of the table — stay on disk for that
+    # pass).
     term_doc = tokens.select(
         "doc_id", "doc_len", F.inline(F.arrays_zip("terms", "tfs", "positions"))
     ).withColumnsRenamed({"terms": "term", "tfs": "tf"})
-    term_only = tokens.select(F.explode("terms").alias("term"))
+    term_blocks = tokens.select(_block_id(block_span), F.explode("terms").alias("term"))
 
     _build_downstream(
-        runner, spark, term_doc, stats, min_f, block_span, term_only=term_only
+        runner, spark, term_doc, stats, min_f, block_span, term_blocks=term_blocks
     )
     return runner.metrics
 
@@ -236,24 +245,40 @@ def _norm_expr(e, avgdl):
 
 
 def _build_downstream(
-    runner, spark, term_doc, stats, min_f, block_span, term_only=None
+    runner, spark, term_doc, stats, min_f, block_span, term_blocks=None
 ):
     """vocabulary (B8/B9) + blocked postings (B10) from a term_doc table —
     shared by the batch build and the streaming-delta finalizer.
 
-    ``term_only``: optional slim one-column (term) view carrying one row
-    per (term, doc) pair — lets the df-count scan skip the positions
+    ``term_blocks``: optional slim (block_id, term) view carrying one row
+    per (term, doc) pair — lets the vocabulary scan skip the positions
     arrays; defaults to projecting ``term_doc``."""
 
     persists: list = []
 
     def make_vocab():
-        src = term_only if term_only is not None else term_doc.select("term")
-        dfc = src.groupBy("term").agg(F.count(F.lit(1)).cast("int").alias("df"))
+        src = term_blocks
+        if src is None:
+            src = term_doc.select(_block_id(block_span), "term")
+        # two term-keyed aggregates, each with its map-side partial: the
+        # (term, block_id) one collapses a block's docs into one row, so
+        # the second exchange moves one row per (term, block) at most.
+        # df sums the per-block counts; n_blocks counts the blocks —
+        # exactly the term's postings rows, recorded here so the WAND
+        # cost gate can bound a query's span pool without a job.
+        dfc = (
+            src.groupBy("term", "block_id")
+            .agg(F.count(F.lit(1)).alias("n"))
+            .groupBy("term")
+            .agg(
+                F.sum("n").cast("int").alias("df"),
+                F.count(F.lit(1)).cast("int").alias("n_blocks"),
+            )
+        )
         kept = dfc.filter(
             (F.col("df") <= F.lit(stats["df_threshold"])) & (F.col("df") > F.lit(min_f))
         )
-        # persist the kept (term, df) table BEFORE ranking: the rank's
+        # persist the kept vocabulary table BEFORE ranking: the rank's
         # repartitionByRange samples its input for range boundaries, so
         # without the cache the full explode + df-count aggregation
         # over the corpus runs TWICE (once for sampling, once for the
@@ -264,7 +289,7 @@ def _build_downstream(
         persists.append(kept)
         return with_global_rank(
             kept, "term", "term_id", persist_tracker=persists
-        ).select("term", "term_id", "df")
+        ).select("term", "term_id", "df", "n_blocks")
 
     vocab = runner.run("vocabulary", make_vocab)
     for p in persists:
@@ -274,9 +299,7 @@ def _build_downstream(
     def make_postings():
         avgdl = stats["avgdl"] or 1.0
         kept = term_doc.join(vocab.select("term", "term_id", "df"), "term")
-        blocked = kept.withColumn(
-            "block_id", (F.col("doc_id") / block_span).cast("long")
-        )
+        blocked = kept.withColumn("block_id", _block_id(block_span))
         # size this stage's shuffle from the fragment count (sum of kept
         # dfs — one tiny scan of the checkpointed vocabulary) so each
         # task's collect_list state fits executor memory regardless of
@@ -315,6 +338,27 @@ def _build_downstream(
     runner.run("postings", make_postings)
 
 
+def term_doc_fingerprint(
+    fingerprint_hint: str,
+    min_f: int = 0,
+    max_p: float = 1.0,
+    block_span: int = DEFAULT_BLOCK_SPAN,
+    stem: bool = True,
+) -> str:
+    """The resume fingerprint of :func:`build_index_from_term_doc` — the
+    key a caller caching its output must compare too."""
+    return fingerprint(
+        {
+            "corpus": fingerprint_hint,
+            "min_f": min_f,
+            "max_p": max_p,
+            "block_span": block_span,
+            "stem": stem,
+            "layout": 7,
+        }
+    )
+
+
 def build_index_from_term_doc(
     spark: SparkSession,
     doc_lengths: DataFrame,
@@ -340,16 +384,7 @@ def build_index_from_term_doc(
     queries silently miss the vocabulary.
     """
     os.makedirs(out_dir, exist_ok=True)
-    fp = fingerprint(
-        {
-            "corpus": fingerprint_hint,
-            "min_f": min_f,
-            "max_p": max_p,
-            "block_span": block_span,
-            "stem": stem,
-            "layout": 6,
-        }
-    )
+    fp = term_doc_fingerprint(fingerprint_hint, min_f, max_p, block_span, stem)
     runner = StageRunner(spark, out_dir, fp, resume=True)
 
     # "tokens" table without the tokens column — SearchIndex.doc_lengths
@@ -362,16 +397,7 @@ def build_index_from_term_doc(
         agg = doc_lengths.agg(
             F.count(F.lit(1)).alias("n"), F.sum("doc_len").alias("total_len")
         ).collect()[0]
-        n = agg["n"]
-        stats = {
-            "num_docs": int(n),
-            "avgdl": (float(agg["total_len"] or 0) / n) if n else 0.0,
-            "min_f": min_f,
-            "max_p": max_p,
-            "stem": stem,
-            "block_span": block_span,
-            "df_threshold": int(n * max_p),
-        }
+        stats = _stats(agg["n"], agg["total_len"], min_f, max_p, stem, block_span)
         runner.write_json("stats", stats)
 
     td = runner.run(

@@ -54,13 +54,7 @@ class StageRunner:
             and os.path.exists(os.path.join(self.path(stage), "_SUCCESS"))
         )
 
-    def run(
-        self,
-        stage: str,
-        make_df,
-        sort_by: list[str] | None = None,
-        partition_hint: int | None = None,
-    ) -> DataFrame:
+    def run(self, stage: str, make_df) -> DataFrame:
         """Write ``make_df()`` to ``<out>/<stage>`` unless already done."""
         target = self.path(stage)
         if self.is_done(stage):

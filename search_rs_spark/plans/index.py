@@ -3,9 +3,10 @@
 Spark analogue of ``Engine::load_index``
 (/root/reference/search/src/engine/mod.rs:85-92): DataFrames for the
 big tables, a tiny stats dict, and a lazily-built driver-side
-vocabulary (term -> (term_id, df)) + trigram index used for
-spellchecking — the moral equivalent of the reference loading
-``idx.alphas`` into RAM (vocabulary.rs:44-97).
+vocabulary (term -> (term_id, df), plus each term's block count for
+the WAND cost gate) + trigram index used for spellchecking — the moral
+equivalent of the reference loading ``idx.alphas`` into RAM
+(vocabulary.rs:44-97).
 
 For corpora whose vocabulary is too large to hold driver-side, the
 spellcheck falls back to a distributed trigram join
@@ -21,6 +22,7 @@ import os
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from ..operators.spellcheck import DriverVocabulary
 
@@ -55,6 +57,7 @@ class SearchIndex:
     path: str
     stats: dict
     _driver_vocab: "DriverVocabulary | None" = field(default=None, repr=False)
+    _n_blocks: list = field(default_factory=list, repr=False)
     _stage_dfs: dict = field(default_factory=dict, repr=False)
 
     @classmethod
@@ -128,7 +131,7 @@ class SearchIndex:
             # (guide §2.4: an orderBy used only to make output
             # deterministic is an accidental shuffle)
             rows = sorted(
-                self.vocabulary.select("term", "term_id", "df").collect(),
+                self.vocabulary.select("term", "term_id", "df", "n_blocks").collect(),
                 key=lambda r: r["term_id"],
             )
             # defense-in-depth: a manifest with a stale/wrong rows field
@@ -143,7 +146,24 @@ class SearchIndex:
             self._driver_vocab = DriverVocabulary(
                 terms=[r["term"] for r in rows], dfs=[r["df"] for r in rows]
             )
+            self._n_blocks = [r["n_blocks"] for r in rows]
         return self._driver_vocab
+
+    def n_blocks(self, terms) -> "dict[str, int]":
+        """term -> the number of doc-id blocks it spans (its postings
+        rows), for vocabulary terms: from the driver vocabulary when it
+        fits, else one filtered vocabulary collect (the df fallback of
+        ``resolve_query_terms``)."""
+        try:
+            vocab = self.driver_vocab()
+        except RuntimeError:
+            return {
+                r["term"]: r["n_blocks"]
+                for r in self.vocabulary.filter(F.col("term").isin(sorted(terms)))
+                .select("term", "n_blocks")
+                .collect()
+            }
+        return {t: self._n_blocks[vocab.term_to_index[t]] for t in terms}
 
     def _vocab_row_count(self) -> int:
         """Vocabulary cardinality WITHOUT collecting it: the stage

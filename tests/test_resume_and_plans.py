@@ -183,3 +183,54 @@ def test_free_query_runs_two_jobs(spark, small_index):
         assert len(list(sc.statusTracker().getJobIdsForGroup(group))) == 2
     finally:
         sc._jsc.clearJobGroup()
+
+
+def test_vocabulary_stage_plan_pin(spark, tmp_path, monkeypatch):
+    """The vocabulary stage counts (term, block_id) pairs, then terms:
+    exactly three Exchanges — hash on (term, block_id), hash on term,
+    the rank's range partitioning — no Join, no Window, and a tokens
+    scan that reads doc_id and terms only (the positions arrays stay on
+    disk)."""
+    from search_rs_spark.sources import catalog
+
+    captured = {}
+    real = catalog.write_stage
+
+    def spy(df, path):
+        captured[os.path.basename(path)] = df
+        real(df, path)
+
+    monkeypatch.setattr(catalog, "write_stage", spy)
+    wt = synthesize_webtext(spark, 60, seed=3, vocab_size=80, mean_len=20)
+    build_index(spark, wt, str(tmp_path / "idx"), block_span=8)
+    # after the build the stage's caches are dropped, so this is the
+    # whole stage computation, not a scan of its persisted inputs
+    plan = captured["vocabulary"]._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Exchange ") == 3, plan
+    assert re.search(r"Exchange hashpartitioning\(term#\d+, block_id#\d+L?,", plan), plan
+    assert re.search(r"Exchange hashpartitioning\(term#\d+, \d+\)", plan), plan
+    assert "Exchange rangepartitioning(term#" in plan, plan
+    assert "Join" not in plan and "Window" not in plan, plan
+    (schema,) = re.findall(r"ReadSchema: (struct<[^ ]*>)", plan)
+    assert schema == "struct<doc_id:bigint,terms:array<string>>", plan
+
+
+def test_global_rank_plan_has_no_join_or_window(spark):
+    """with_global_rank folds the partition offsets in as one literal
+    array: its executed plan (the persisted intermediate included) has
+    no Join and no Window, and the ranks are the dense sort order."""
+    from search_rs_spark.plans.ranks import with_global_rank
+
+    persists: list = []
+    keys = spark.range(200).selectExpr("cast(id * 7919 % 1009 as string) AS k")
+    ranked = with_global_rank(keys, "k", "r", persist_tracker=persists)
+    try:
+        plan = ranked._jdf.queryExecution().executedPlan().toString()
+        assert "InMemoryRelation" in plan, plan
+        assert "Join" not in plan and "Window" not in plan, plan
+        got = sorted((r["r"], r["k"]) for r in ranked.collect())
+        want = sorted(r["k"] for r in keys.collect())
+        assert got == list(enumerate(want))
+    finally:
+        for p in persists:
+            p.unpersist(blocking=False)

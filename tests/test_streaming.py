@@ -67,6 +67,13 @@ def test_stream_equals_batch(spark, tmp_path):
     si = SearchIndex.load(spark, stream_out)
     bi = SearchIndex.load(spark, batch_out)
     assert si.num_docs == bi.num_docs and si.avgdl == bi.avgdl
+    # the finalizer records n_blocks from term_doc: the term's postings
+    # row count, and the same vocabulary the batch build writes
+    n_blocks = {r["term"]: r["n_blocks"] for r in si.vocabulary.collect()}
+    assert n_blocks == {
+        r["term"]: r["count"] for r in si.postings.groupBy("term").count().collect()
+    }
+    assert sorted(si.vocabulary.collect()) == sorted(bi.vocabulary.collect())
     for q in ["the world", "man time year"]:
         sr = [(r["doc_id"], r["score"]) for r in free_query(si, q, 20).collect()]
         br = [(r["doc_id"], r["score"]) for r in free_query(bi, q, 20).collect()]

@@ -41,6 +41,45 @@ def test_threshold_vocabulary_matches_oracle(thresholded):
     assert "the" not in got
 
 
+def test_df_filter_bounds_on_a_hand_built_corpus(spark, tmp_path):
+    """Both sides of ``min_f < df <= floor(N*max_p)`` (builder.rs:115-123)
+    at their edges: N = 20, min_f = 2, max_p = 0.55 -> threshold 11.
+    A term with df = min_f is dropped and df = min_f + 1 kept; df = 11
+    is kept and df = 12 dropped. The vocabulary, n_blocks included,
+    must equal the oracle's."""
+    from search_rs_spark.sources.webtext import WEBTEXT_SCHEMA, _EPOCH, wrap_html
+
+    n, min_f, max_p, block_span = 20, 2, 0.55, 4
+    planted = {"zebra": 2, "quokka": 3, "walrus": 11, "falcon": 12}
+    assert int(n * max_p) == 11
+    corpus = []
+    for i in range(n):
+        # spread each planted term over the docs so its blocks vary
+        words = [t for t, df in planted.items() if (i * 7) % n < df]
+        corpus.append((f"https://t.local/{i:04d}.txt", " ".join(["otter"] + words)))
+    rows = [(u, _EPOCH, wrap_html(t), t, "en") for u, t in corpus]
+    wt = spark.createDataFrame(rows, schema=WEBTEXT_SCHEMA)
+    out = str(tmp_path / "idx")
+    build_index(
+        spark, wt, out, min_f=min_f, max_p=max_p, block_span=block_span,
+        corpus_fingerprint="dfedges20",
+    )
+    idx = SearchIndex.load(spark, out)
+    oracle = build_oracle(corpus, min_f=min_f, max_p=max_p)
+
+    assert oracle.terms == ["quokka", "walrus"]
+    assert oracle.dfs == [3, 11]
+    want = {
+        t: (i, oracle.dfs[i], len({d // block_span for d, _, _ in oracle.postings[t]}))
+        for i, t in enumerate(oracle.terms)
+    }
+    got = {
+        r["term"]: (r["term_id"], r["df"], r["n_blocks"])
+        for r in idx.vocabulary.collect()
+    }
+    assert got == want
+
+
 @pytest.mark.parametrize("q", ["people know state", "the world time", "man year"])
 def test_threshold_rank_identity(thresholded, q):
     idx, oracle = thresholded

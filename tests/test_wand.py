@@ -87,10 +87,9 @@ def test_wand_pass1_over_literal_cap_uses_semijoin_and_stays_exact(
 def test_wand_cost_gate_routes_small_span_pools_to_exhaustive(
     wand_index, monkeypatch
 ):
-    """Auto mode (force_protocol=None): a corpus whose span pool is
-    below SPAN_GATE_FACTOR * COVERAGE_FACTOR * k must bail to the
-    exhaustive scorer (pre-gate) — and the bailout result must equal
-    the protocol's."""
+    """Auto mode: a corpus whose span pool is below SPAN_GATE_FACTOR *
+    COVERAGE_FACTOR * k must bail to the exhaustive scorer (pre-gate) —
+    and the bailout result must equal the protocol's."""
     from search_rs_spark.operators import wand as wand_mod
 
     calls = []
@@ -126,6 +125,29 @@ def test_wand_single_term_query_bails_with_zero_jobs(wand_index, monkeypatch):
     monkeypatch.setattr(wand_mod, "span_upper_bounds", boom)
     rows = free_query_wand(wand_index, "the the", 10).collect()
     assert len(rows) == 10
+
+
+def test_vocabulary_n_blocks_counts_postings_rows(wand_index, monkeypatch):
+    """n_blocks (the WAND gate's per-term statistic) is the term's
+    postings row count, for every vocabulary term, and the index
+    helper reads it back — from the driver vocabulary, and through the
+    filtered collect when the vocabulary is too large for the driver."""
+    from search_rs_spark.plans import index as index_mod
+
+    got = {
+        r["term"]: r["n_blocks"]
+        for r in wand_index.vocabulary.select("term", "n_blocks").collect()
+    }
+    want = {
+        r["term"]: r["count"]
+        for r in wand_index.postings.groupBy("term").count().collect()
+    }
+    assert got == want
+    sample = {t: want[t] for t in ("the", "world")}
+    assert wand_index.n_blocks(list(sample)) == sample
+    monkeypatch.setattr(index_mod, "DRIVER_VOCAB_MAX_TERMS", 0)
+    fresh = SearchIndex.load(wand_index.spark, wand_index.path)
+    assert fresh.n_blocks(list(sample)) == sample
 
 
 def test_wand_empty_query(wand_index):
@@ -358,7 +380,7 @@ def test_wand_protocol_fires_and_prunes_on_spread_corpus(
 
     exact = [
         (r["doc_id"], round(r["score"], 9))
-        for r in free_query_wand(spread_index, q, k, force_protocol=False).collect()
+        for r in free_query(spread_index, q, k).collect()
     ]
     assert auto == exact
 
@@ -381,7 +403,7 @@ def blanket_index(spark, tmp_path_factory):
     """Every doc holds both head terms ('alpha', 'beta'); 'bravo' is
     planted in 5 docs. The span pool (100 spans at block_span=4)
     passes the span-pool gate at k=10, so with the volume gate zeroed
-    the zero-job blanket ESTIMATE is the deciding pre-gate."""
+    the Bonferroni all-terms bound is the deciding pre-gate."""
     filler = [
         "red green blue", "iron wood glass",
         "north south east", "first second third",
@@ -399,16 +421,16 @@ def blanket_index(spark, tmp_path_factory):
     return SearchIndex.load(spark, out)
 
 
-def test_wand_blanket_estimate_bails_zero_job_on_all_head_queries(
+def test_wand_block_bound_bails_zero_job_on_all_head_queries(
     blanket_index, monkeypatch
 ):
     """An all-head-term query must route to the exhaustive scorer from
-    the driver-side blanket estimate alone — span_upper_bounds (a
-    postings scan of the query terms) must never be built: that
+    the vocabulary block counts alone — span_upper_bounds (a postings
+    scan of the query terms) must never be built: that
     discarded metadata pass measured +40% on wand-auto head queries at
     30M docs (BASELINE.md round 5). A planted-rare-term query on the
-    SAME index must still reach the metadata pass (the estimate keeps
-    the paying regime), with auto == exhaustive results."""
+    SAME index must still reach the metadata pass (the bound keeps the
+    paying regime), with auto == exhaustive results."""
     from search_rs_spark.operators import wand as wand_mod
 
     monkeypatch.setattr(wand_mod, "MIN_PRUNABLE_POSTINGS", 0)
@@ -436,20 +458,72 @@ def test_wand_blanket_estimate_bails_zero_job_on_all_head_queries(
     assert seen, "rare-term query bailed before the metadata pass"
     exact = [
         (r["doc_id"], round(r["score"], 9))
-        for r in free_query_wand(
-            blanket_index, "alpha bravo", 10, force_protocol=False
-        ).collect()
+        for r in free_query(blanket_index, "alpha bravo", 10).collect()
     ]
     assert auto == exact
+
+
+@pytest.fixture(scope="module")
+def uniform_middf_index(spark, tmp_path_factory):
+    """800 docs, block_span=8 -> 100 spans. 'alpha' in every doc with
+    i % 8 == 0, 'beta' in every doc with i % 8 == 3: each has df/N =
+    0.125 (mid-df) yet touches every span, so every span holds both
+    terms and the window bonus blankets the ub spread."""
+    filler = ["red green", "iron wood", "north south", "first second"]
+    rows = []
+    for i in range(800):
+        text = f"{filler[i % 4]} marker{i % 50}"
+        if i % 8 == 0:
+            text = text + " alpha"
+        if i % 8 == 3:
+            text = text + " beta"
+        u = f"https://example.org/uniform/{i:08d}.html"
+        rows.append((u, _EPOCH, wrap_html(text), text, "en"))
+    wt = spark.createDataFrame(rows, schema=WEBTEXT_SCHEMA)
+    out = str(tmp_path_factory.mktemp("idx_uniform"))
+    build_index(spark, wt, out, min_f=0, max_p=1.0, block_span=8)
+    return SearchIndex.load(spark, out)
+
+
+def test_wand_uniform_middf_terms_bail_without_metadata_pass(
+    uniform_middf_index, monkeypatch
+):
+    """Mid-df terms spread over every span have nb = B, so the
+    all-terms bound sum(nb) - (m-1)*B = B blankets the pool: auto mode
+    must route to the exhaustive scorer without building
+    span_upper_bounds (a scan of the query terms' postings), and
+    return its results."""
+    from search_rs_spark.operators import wand as wand_mod
+
+    idx = uniform_middf_index
+    terms = wand_mod.resolve_query_terms(idx, "alpha beta")
+    assert {t for _, t, _ in terms} == {"alpha", "beta"}
+    assert all(df / idx.num_docs < 0.2 for _, _, df in terms)
+    assert idx.n_blocks(["alpha", "beta"]) == {"alpha": 100, "beta": 100}
+
+    monkeypatch.setattr(wand_mod, "MIN_PRUNABLE_POSTINGS", 0)
+
+    def boom(index, terms):
+        raise AssertionError("span_upper_bounds built for a blanketing query")
+
+    monkeypatch.setattr(wand_mod, "span_upper_bounds", boom)
+    auto = [
+        (r["doc_id"], round(r["score"], 9))
+        for r in free_query_wand(idx, "alpha beta", 10).collect()
+    ]
+    exact = [
+        (r["doc_id"], round(r["score"], 9))
+        for r in free_query(idx, "alpha beta", 10).collect()
+    ]
+    assert len(auto) == 10 and auto == exact
 
 
 @pytest.fixture(scope="module")
 def clustered_index(spark, tmp_path_factory):
     """6400 docs, block_span=64 -> 100 spans. 'alpha' in every doc;
     'gamma' in docs 0..639 ONLY (df/N = 0.1, spatially clustered in the
-    first 10 spans). The uniform-placement blanket estimate for 'gamma'
-    is (1-0.1)^64 ~= 0.0012 — i.e. the estimate alone says "blankets,
-    bail" — while the REAL measured miss fraction is 90/100 spans."""
+    first 10 spans): a uniform-placement model would put it in ~every
+    span ((1-0.1)^64 ~= 0.0012 miss chance), while it really spans 10."""
     filler = ["red green", "iron wood", "north south", "first second"]
     rows = []
     for i in range(6400):
@@ -464,55 +538,42 @@ def clustered_index(spark, tmp_path_factory):
     return SearchIndex.load(spark, out)
 
 
-def test_wand_clustered_middf_term_reaches_measured_gate(
+def test_wand_clustered_middf_term_keeps_the_protocol(
     clustered_index, monkeypatch
 ):
-    """The zero-job blanket estimate's admitted blind spot, pinned: for
-    a spatially clustered mid-df term the uniform model UNDERestimates
-    the span-miss fraction, so an estimate-only pre-gate would bail to
-    the exhaustive scorer and forfeit pruning. The HEAD_DF_FRACTION
-    guard must route such queries past the estimate into the measured
-    in-plan gate, which must KEEP the protocol (measured blanket
-    fraction far below BLANKET_FRACTION), with auto == exhaustive."""
+    """A spatially clustered mid-df term gets its real block count, so
+    the all-terms bound sum(nb) - (m-1)*B = 10 of a 100-span pool is
+    far below the blanket line: auto mode must run the protocol (the
+    metadata pass is built, the exhaustive fallback never called), with
+    auto == exhaustive."""
     from search_rs_spark.operators import wand as wand_mod
-    from search_rs_spark.operators.wand import resolve_query_terms
 
     idx = clustered_index
+    assert idx.n_blocks(["alpha", "gamma"]) == {"alpha": 100, "gamma": 10}
     monkeypatch.setattr(wand_mod, "MIN_PRUNABLE_POSTINGS", 0)
 
-    terms = resolve_query_terms(idx, "alpha gamma")
-    n = float(idx.num_docs)
-    block_span = int(idx.stats["block_span"])
-    dfs = {t: df for _, t, df in terms}
-    # the blind spot is real on this fixture: the uniform estimate says
-    # "blankets" (would bail) AND gamma is mid-df (guard disagrees)
-    miss_est = sum((1.0 - df / n) ** block_span for df in dfs.values())
-    assert miss_est <= 1.0 - wand_mod.BLANKET_FRACTION, miss_est
-    assert min(dfs.values()) / n < wand_mod.HEAD_DF_FRACTION
-
-    # the guard must carry the query into the metadata pass...
     seen = []
     real = wand_mod.span_upper_bounds
     monkeypatch.setattr(
         wand_mod, "span_upper_bounds",
         lambda i, ts: seen.append(1) or real(i, ts),
     )
+    monkeypatch.setattr(
+        wand_mod,
+        "free_query",
+        lambda *a, **kw: (_ for _ in ()).throw(
+            AssertionError("auto mode bailed to exhaustive")
+        ),
+    )
     auto = [
         (r["doc_id"], round(r["score"], 9))
         for r in free_query_wand(idx, "alpha gamma", 10).collect()
     ]
-    assert seen, "clustered mid-df query bailed on the zero-job estimate"
-
-    # ...and the MEASURED in-plan gate must keep the protocol there:
-    # ~90% of spans miss gamma, nowhere near the blanket bail line
-    ub = real(idx, terms)
-    n_spans = ub.count()
-    n_full = ub.filter(F.col("all_terms")).count()
-    assert n_spans >= 100, n_spans
-    assert n_full / n_spans <= 0.15, (n_full, n_spans)
+    assert seen, "clustered mid-df query never reached the protocol"
+    monkeypatch.undo()
 
     exact = [
         (r["doc_id"], round(r["score"], 9))
-        for r in free_query_wand(idx, "alpha gamma", 10, force_protocol=False).collect()
+        for r in free_query(idx, "alpha gamma", 10).collect()
     ]
     assert auto == exact
