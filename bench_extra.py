@@ -65,7 +65,7 @@ def _noop(df):
 
 def run_queries() -> None:
     from search_rs_spark.operators import dedup, similarity
-    from search_rs_spark.operators.bm25 import free_query
+    from search_rs_spark.operators.bm25 import resolve_query_terms, top_k
     from search_rs_spark.operators.boolean import boolean_query
     from search_rs_spark.operators.ivf import ivf_topk
     from search_rs_spark.operators.wand import free_query_wand
@@ -178,9 +178,13 @@ def run_plans(plan_dir: str, suffix: str) -> None:
     ]
     emb = spark.read.parquet(emb_path)
 
+    # free_query returns a local relation; its plan is the top-k
+    # statement it collects
     plans = {
-        "free_q1": lambda: free_query(idx, "spark data query", k=100),
-        "free_q2": lambda: free_query(idx, "the fast merge sort window", k=100),
+        "free_q1": lambda: top_k(idx, resolve_query_terms(idx, "spark data query"), 100),
+        "free_q2": lambda: top_k(
+            idx, resolve_query_terms(idx, "the fast merge sort window"), 100
+        ),
         "boolean_q1": lambda: boolean_query(idx, "data AND query AND NOT join"),
         "dedup_lsh": lambda: dedup.minhash_lsh_pairs(docs),
         "dedup_exact": lambda: dedup.exact_dedup(docs),

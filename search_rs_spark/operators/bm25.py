@@ -6,9 +6,9 @@ Spark re-expression of ``Engine::free_query``
 1. tokenize+stem the query with the build-identical preprocessor, then
    spellcheck each token (dropping unmatched ones) — driver side.
 2. bind the query terms inside the plan: a pushed ``term IN (...)``
-   scan filter on the blocked postings table (parquet row-group
-   skipping) and a literal term -> [(qid, idf)] map looked up per
-   postings row (:func:`bind_terms`) — no join, no broadcast.
+   scan filter on the blocked postings table (parquet row-group and
+   page skipping) and a literal term -> [(qid, idf)] map looked up
+   per postings row (:func:`bind_terms`) — no join, no broadcast.
 3. explode postings; per-posting BM25 contribution
    ``idf * tf*(k1+1) / (tf + k1*(1-b+b*dl/avgdl))`` (mod.rs:162-169)
    with the idf computed driver-side from the vocabulary df.
@@ -18,22 +18,28 @@ Spark re-expression of ``Engine::free_query``
    (mod.rs:255-286), combined 3*window + bm25 (mod.rs:284-285).
 5. distributed top-k: ``ORDER BY score DESC, doc_id LIMIT k``
    (TakeOrderedAndProject — the heap of heap.rs:32-63; ties broken by
-   doc_id, which the reference leaves unspecified).
+   doc_id, which the reference leaves unspecified), collected: the
+   query's one Spark job.
+6. urls for the k winners only (``get_doc_path``, documents.rs:74-76):
+   a pyarrow read of the tokens row groups that hold the k ids, with
+   no job, returned as a local relation.
 
-One lazy plan at every corpus size, like the reference's single pass,
+One scoring plan at every corpus size, like the reference's single pass,
 built as ONE ``spark.sql`` statement over the handle's stage relations
 (~40 py4j round trips; the DataFrame-API form took ~800 per query);
 pruning at scale is block-max WAND's job (operators/wand.py). No RDDs,
-no driver-side scoring: the only collect is the final k rows.
+no driver-side scoring: the only collect is the k winner rows.
 ``doc_len`` rides inside the postings blocks, so scoring requires no
-join against doc_lengths; the url materialization joins only the k
-winners.
+join against doc_lengths. The postings are written with small pages
+(plans/build.py), so the ``term IN (...)`` scan decodes only the pages
+that hold the query's terms.
 """
 
 from __future__ import annotations
 
 import math
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -274,45 +280,51 @@ def score_candidates(
     return index.spark.sql(text, **rels)
 
 
-def _with_urls_sql(top: str) -> str:
-    """(doc_id, score) winners -> (doc_id, url, score), score-desc /
-    doc_id-asc; the broadcast join touches only the k winners."""
-    return (
-        "SELECT /*+ BROADCAST(top) */ d.doc_id, d.url, top.score "
-        f"FROM {{docs}} d JOIN ({top}) top ON d.doc_id = top.doc_id "
-        "ORDER BY score DESC, doc_id"
+def top_k(index, terms: list[tuple[int, str, int]], k: int) -> DataFrame:
+    """-> lazy (doc_id, score): the k winners of :func:`score_candidates`,
+    score-desc / doc_id-asc, as one statement whose top-k is a
+    distributed bounded heap (TakeOrderedAndProject)."""
+    scored, rels = _candidates_sql(index, terms, None)
+    return index.spark.sql(
+        f"SELECT doc_id, score FROM ({scored}) ORDER BY score DESC, doc_id LIMIT {int(k)}",
+        **rels,
     )
 
 
 def empty_result(index) -> DataFrame:
-    """The (doc_id, url, score) answer of a query with no terms."""
-    return index.spark.sql(
-        "SELECT doc_id, url, 0.0D AS score FROM {docs} LIMIT 0",
-        docs=index.doc_lengths,
-    )
+    """The (doc_id, url, score) answer of a query with no terms: an
+    empty local relation."""
+    return materialize_topk(index, [])
 
 
 def materialize_topk(index, rows) -> DataFrame:
-    """k winner rows (driver-side) -> (doc_id, url, score) DataFrame,
-    the winners spliced as one VALUES literal."""
-    if not rows:
-        return empty_result(index)
-    values = ", ".join(
-        f"({int(r['doc_id'])}L, {sql_double(r['score'])})" for r in rows
+    """k winner rows (driver-side, answer order) -> a local (doc_id,
+    url, score) DataFrame in the same order.
+
+    The urls are read for the k ids only (:meth:`SearchIndex.urls`, no
+    Spark job on a parquet index; a missing url raises), and the rows
+    become an Arrow local relation, so collecting the result runs no
+    job either."""
+    ids = [int(r["doc_id"]) for r in rows]
+    table = pa.table(
+        {
+            "doc_id": pa.array(ids, pa.int64()),
+            "url": pa.array(index.urls(ids) if ids else [], pa.string()),
+            "score": pa.array([float(r["score"]) for r in rows], pa.float64()),
+        }
     )
-    top = f"SELECT * FROM VALUES {values} AS t(doc_id, score)"
-    return index.spark.sql(_with_urls_sql(top), docs=index.doc_lengths)
+    return index.spark.createDataFrame(table)
 
 
 def free_query(index, query: str, k: int = NUM_RESULTS) -> DataFrame:
     """-> DataFrame (doc_id, url, score), score-desc / doc_id-asc, k rows.
 
-    One lazy plan at every corpus size, built as one ``spark.sql``
-    statement: :func:`score_candidates`, a distributed top-k, then urls
-    for the k winners. Nothing runs until the caller collects."""
+    One Spark job: :func:`top_k` (one ``spark.sql`` statement) is
+    collected here, and :func:`materialize_topk` attaches the k
+    winners' urls. The answer is only k rows, so it is materialized
+    before returning: the returned local relation's ``collect`` runs
+    no job."""
     terms = resolve_query_terms(index, query)
     if not terms:
         return empty_result(index)
-    scored, rels = _candidates_sql(index, terms, None)
-    top = f"SELECT doc_id, score FROM ({scored}) ORDER BY score DESC, doc_id LIMIT {int(k)}"
-    return index.spark.sql(_with_urls_sql(top), docs=index.doc_lengths, **rels)
+    return materialize_topk(index, top_k(index, terms, k).collect())

@@ -14,7 +14,9 @@ in it, so a term is one contiguous run of rows in one file, and
 ``np.diff`` over ``term_id`` finds the runs. tf is the length of a
 posting's position list and dl comes from one per-doc array read from
 ``tokens.doc_len``, so the stored ``tfs`` / ``dls`` columns are never
-read.
+read. Urls and doc lengths come through :func:`read_docs`, the tokens
+reader the Spark engine's k-winner url lookup shares; a doc id with no
+tokens row raises ``ValueError``.
 
 A query slices its terms' runs out of those views and scores them with
 vectorised numpy: BM25 accumulated in query-token order, the batch
@@ -73,6 +75,67 @@ def _read(path: str, columns: list[str]) -> list[dict]:
             }
         )
     return out
+
+
+def read_docs(tokens: str, doc_ids, columns: list[str]) -> list:
+    """-> [(part, rows)]: for each tokens file at ``tokens`` with a row
+    group that may hold an id of ``doc_ids``, ``part`` maps each of
+    ``columns`` (doc_id among them) to an Arrow array of those row
+    groups, and ``rows`` indexes the part's rows whose doc_id was
+    requested. Row groups whose doc_id min/max brackets no requested id
+    are not read; the build writes tokens files in doc-id order, so k
+    ids touch at most k row groups. (``pyarrow.dataset`` and
+    ``pyarrow.compute`` would import pandas.)"""
+    want = np.unique(np.asarray(doc_ids, dtype=np.int64))
+    out = []
+    for f in _parts(tokens):
+        pf = pq.ParquetFile(f)
+        md = pf.metadata
+        col = [md.schema.column(j).path for j in range(md.num_columns)].index("doc_id")
+        keep = []
+        for g in range(md.num_row_groups):
+            st = md.row_group(g).column(col).statistics
+            if (
+                st is None
+                or not st.has_min_max
+                or np.searchsorted(want, st.min) < np.searchsorted(want, st.max, "right")
+            ):
+                keep.append(g)
+        if keep:
+            t = pf.read_row_groups(keep, columns=columns)
+            part = {
+                c: a.chunk(0) if a.num_chunks == 1 else a.combine_chunks()
+                for c, a in zip(t.column_names, t.columns)
+            }
+            out.append((part, np.flatnonzero(np.isin(_view(part["doc_id"]), want))))
+    return out
+
+
+def _pick(arr, rows: np.ndarray) -> list:
+    """The values of Arrow ``arr`` at the sorted, distinct ``rows``."""
+    if rows.size == len(arr):
+        return arr.to_pylist()
+    return [arr[i].as_py() for i in rows.tolist()]
+
+
+def urls_in_order(where: str, doc_ids, got_ids, got_urls) -> list:
+    """The urls of ``doc_ids``, in their order, from the (got_ids,
+    got_urls) rows read out of ``where``. A requested id with no row
+    raises ``ValueError``: a result row must never carry a missing url."""
+    by_id = dict(zip(got_ids, got_urls))
+    for d in doc_ids:
+        if d not in by_id:
+            raise ValueError(f"{where}: no tokens row (url) for doc_id {d}")
+    return [by_id[d] for d in doc_ids]
+
+
+def read_urls(tokens: str, doc_ids: "list[int]") -> list:
+    """The urls of ``doc_ids``, in their order (see :func:`read_docs`)."""
+    got_ids, got_urls = [], []
+    for part, rows in read_docs(tokens, doc_ids, ["doc_id", "url"]):
+        got_ids += _view(part["doc_id"])[rows].tolist()
+        got_urls += _pick(part["url"], rows)
+    return urls_in_order(tokens, doc_ids, got_ids, got_urls)
 
 
 def _view(arr) -> np.ndarray:
@@ -152,13 +215,15 @@ class LocalEngine:
         terms = [terms[i] for i in by_id.tolist()]
         dfs = [dfs[i] for i in by_id.tolist()]
 
-        urls = [None] * (n + 1)
+        tokens = os.path.join(path, "tokens")
         doc_lens = np.zeros(n + 1, dtype=np.int32)
-        for part in _read(os.path.join(path, "tokens"), ["doc_id", "url", "doc_len"]):
-            ids = _view(part["doc_id"])
-            doc_lens[ids] = _view(part["doc_len"])
-            for d, u in zip(ids.tolist(), part["url"].to_pylist()):
-                urls[d] = u
+        got_ids, got_urls = [], []
+        for part, rows in read_docs(tokens, np.arange(n), ["doc_id", "url", "doc_len"]):
+            ids = _view(part["doc_id"])[rows]
+            doc_lens[ids] = _view(part["doc_len"])[rows]
+            got_ids += ids.tolist()
+            got_urls += _pick(part["url"], rows)
+        urls = urls_in_order(tokens, range(n), got_ids, got_urls) + [None]
 
         postings = os.path.join(path, "postings")
         segments, runs = [], []

@@ -25,7 +25,8 @@ shuffle with a checkpointed parquet output:
   postings     (term_id, term, block_id, doc_ids, dls, positions,
                 df_block, block_max)              blocked posting lists (B10);
                                                   a posting's tf is
-                                                  size(positions)
+                                                  size(positions); written
+                                                  with small pages
 
 Scale decisions:
 - doc_id / term_id are range-partitioned global ranks (plans/ranks.py),
@@ -37,6 +38,11 @@ Scale decisions:
   carry the per-block max score used by block-max WAND pruning.
 - ``doc_len`` is denormalized into the postings (dls) so BM25 scoring
   needs no query-time join against doc_lengths.
+- postings files hold 128-row / 16 KiB pages (POSTINGS_WRITE_OPTIONS),
+  so a query's pushed term / block_id filter skips whole pages through
+  the column index, not just whole row groups.
+- each stage's manifest records its schema, so reading a stage back
+  runs no schema-inference job (plans/checkpoint.py).
 - the (term, doc_id) accumulation happens map-side inside the tokenize
   UDF (a document is one row — its posting fragments need no exchange),
   so the build's only all-to-all shuffles are the term-keyed ones the
@@ -74,6 +80,19 @@ DEFAULT_BLOCK_SPAN = 4096
 # (~491 s). 4M fragments/partition ≈ a few hundred MB of aggregate
 # state — fits default executor memory with headroom.
 POSTINGS_FRAGMENTS_PER_PARTITION = 4_000_000
+
+
+# the postings stage is written with small parquet pages: a query's
+# pushed ``term IN (...)`` (and WAND's ``block_id IN (...)``) filter
+# meets the pages' min/max column index, so the scan decodes only the
+# pages holding those values instead of every page of a row group.
+# Measured on a 3k-doc index (4 cores, warm 3-term queries): free_query
+# p50 213 -> 190 ms, for postings of 1.57 -> 1.81 MB.
+POSTINGS_PAGE_ROWS = 128
+POSTINGS_WRITE_OPTIONS = {
+    "parquet.page.row.count.limit": str(POSTINGS_PAGE_ROWS),
+    "parquet.page.size": str(16 * 1024),
+}
 
 
 def postings_shuffle_partitions(n_fragments: int, conf_partitions: int) -> int:
@@ -144,7 +163,7 @@ def build_index(
             "stem": stem,
             "lang": lang,
             "block_span": block_span,
-            "layout": 8,
+            "layout": 9,
         }
     )
     runner = StageRunner(spark, out_dir, fp, resume=resume)
@@ -335,7 +354,7 @@ def _build_downstream(
             F.col("term"),
         ).sortWithinPartitions("term", "block_id")
 
-    runner.run("postings", make_postings)
+    runner.run("postings", make_postings, POSTINGS_WRITE_OPTIONS)
 
 
 def term_doc_fingerprint(
@@ -354,7 +373,7 @@ def term_doc_fingerprint(
             "max_p": max_p,
             "block_span": block_span,
             "stem": stem,
-            "layout": 7,
+            "layout": 8,
         }
     )
 

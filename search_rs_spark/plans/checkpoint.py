@@ -2,11 +2,11 @@
 
 Every build stage writes a parquet dataset plus a ``_MANIFEST.json``
 recording the stage name, an input/params fingerprint, row count,
-wall-clock, and per-partition lineage (file count). Re-running the
-build with the same fingerprint skips completed stages — the
-resumability the north rule requires (the reference has none; its
-build is a single in-RAM pass, /root/reference/search/src/engine/
-builder.rs:44-130).
+wall-clock, per-partition lineage (file count) and the written schema,
+so a reader needs no schema-inference job. Re-running the build with
+the same fingerprint skips completed stages — the resumability the
+north rule requires (the reference has none; its build is a single
+in-RAM pass, /root/reference/search/src/engine/builder.rs:44-130).
 """
 
 from __future__ import annotations
@@ -18,12 +18,25 @@ import time
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 MANIFEST = "_MANIFEST.json"
 
 
 def fingerprint(obj) -> str:
     return hashlib.sha256(json.dumps(obj, sort_keys=True, default=str).encode()).hexdigest()[:16]
+
+
+def stage_schema(path: str) -> "StructType | None":
+    """The schema the stage at ``path`` was written with, from its
+    manifest; None for a manifest without one (older layouts) or none
+    at all, which leaves the reader to infer it."""
+    try:
+        with open(os.path.join(path, MANIFEST)) as f:
+            schema = json.load(f).get("schema")
+    except (OSError, json.JSONDecodeError):
+        return None
+    return StructType.fromJson(json.loads(schema)) if schema else None
 
 
 @dataclass
@@ -54,23 +67,24 @@ class StageRunner:
             and os.path.exists(os.path.join(self.path(stage), "_SUCCESS"))
         )
 
-    def run(self, stage: str, make_df) -> DataFrame:
-        """Write ``make_df()`` to ``<out>/<stage>`` unless already done."""
+    def run(
+        self, stage: str, make_df, write_options: "dict[str, str] | None" = None
+    ) -> DataFrame:
+        """Write ``make_df()`` to ``<out>/<stage>`` (``write_options`` go
+        to the writer) unless already done."""
+        from ..sources.catalog import read_stage, write_stage
+
         target = self.path(stage)
         if self.is_done(stage):
-            from ..sources.catalog import read_stage
-
             self.metrics.append({"stage": stage, "skipped": True})
-            return read_stage(self.spark, target)
-
-        from ..sources.catalog import read_stage, write_stage
+            return read_stage(self.spark, target, stage_schema(target))
 
         t0 = time.time()
         df = make_df()
-        write_stage(df, target)
+        write_stage(df, target, write_options)
         elapsed = time.time() - t0
 
-        written = read_stage(self.spark, target)
+        written = read_stage(self.spark, target, df.schema)
         # row count from parquet footers when possible (no Spark job)
         files = [f for f in os.listdir(target) if f.endswith(".parquet")]
         if files:
@@ -88,6 +102,7 @@ class StageRunner:
             "fingerprint": self.build_fingerprint,
             "rows": n_rows,
             "files": n_files,
+            "schema": df.schema.json(),
             "seconds": round(elapsed, 3),
             "finished_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
         }

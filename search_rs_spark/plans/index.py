@@ -70,12 +70,14 @@ class SearchIndex:
         """One analyzed relation per stage per handle: the stages are
         immutable checkpoints, so re-running file listing + footer reads
         on every property access (two driver jobs per query) is waste.
-        Small stages additionally coalesce their scan (SMALL_SCAN_BYTES)."""
+        Small stages additionally coalesce their scan (SMALL_SCAN_BYTES).
+        The manifest's schema spares the read its schema-inference job."""
         if stage not in self._stage_dfs:
             from ..sources.catalog import read_stage
+            from .checkpoint import stage_schema
 
             path = os.path.join(self.path, stage)
-            df = read_stage(self.spark, path)
+            df = read_stage(self.spark, path, stage_schema(path))
             # only local directories are sizeable via os.walk; for any
             # other URI scheme (or an unreadable path) keep Spark's
             # natural split parallelism rather than treating the
@@ -93,6 +95,14 @@ class SearchIndex:
         """(doc_id, url, doc_len) — a pruned view over the tokens table
         (columnar read skips the tokens arrays; no duplicate storage)."""
         return self._stage_df("tokens").select("doc_id", "url", "doc_len")
+
+    def urls(self, doc_ids: "list[int]") -> "list[str]":
+        """The urls of ``doc_ids``, in their order, read from the tokens
+        stage without a Spark job when it is parquet
+        (sources.catalog.stage_urls); a missing id raises ValueError."""
+        from ..sources.catalog import stage_urls
+
+        return stage_urls(self.spark, os.path.join(self.path, "tokens"), doc_ids)
 
     @property
     def vocabulary(self) -> DataFrame:

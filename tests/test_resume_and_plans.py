@@ -8,7 +8,7 @@ import re
 import pytest
 from pyspark.sql import functions as F
 
-from search_rs_spark.operators.bm25 import free_query, resolve_query_terms, scored_hits
+from search_rs_spark.operators.bm25 import free_query, resolve_query_terms, scored_hits, top_k
 from search_rs_spark.operators.snippets import with_snippets
 from search_rs_spark.operators.spellcheck import DriverVocabulary, spellcheck_distributed
 from search_rs_spark.plans.build import build_index
@@ -77,16 +77,12 @@ def test_physical_plan_properties(spark, small_index):
     pushed = re.search(r"PushedFilters: \[(.*?)\], ReadSchema", plan)
     assert pushed and "In(term, [" in pushed.group(1), plan
 
-    # the distributed bounded top-k sits inside free_query's own lazy
-    # plan, and the returned DataFrame joins only the k winners (broadcast)
-    result_plan = (
-        free_query(idx, "the world time", 10)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "TakeOrderedAndProject" in result_plan  # distributed bounded top-k
-    assert "BroadcastHashJoin" in result_plan
+    # the statement free_query collects is a distributed bounded top-k
+    # over the scored postings: no join (urls are read for the k
+    # winners afterwards) and, on this one-partition scan, no exchange
+    top_plan = top_k(idx, terms, 10)._jdf.queryExecution().executedPlan().toString()
+    assert "TakeOrderedAndProject" in top_plan, top_plan
+    assert "Join" not in top_plan and "Exchange" not in top_plan, top_plan
 
 
 def test_snippets(spark, small_index):
@@ -140,10 +136,24 @@ def test_postings_aggregate_reuses_explicit_partitioning(spark):
     assert plan.count("Exchange hashpartitioning") == 1, plan
 
 
-def test_free_query_stays_lazy_at_corpus_scale(spark, small_index):
-    """free_query is one lazy plan at every corpus size: on a handle
-    claiming 1M docs no Spark job runs before the caller collects, and
-    nothing is persisted (no InMemoryTableScan in the executed plan)."""
+def _jobs(spark, fn, group):
+    """-> (fn(), the number of Spark jobs it ran), counted by job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    # the tracker is filled from the listener bus, asynchronously
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(list(sc.statusTracker().getJobIdsForGroup(group)))
+
+
+def test_free_query_runs_one_job_at_corpus_scale(spark, small_index):
+    """free_query is one Spark job at every corpus size: on a handle
+    claiming 1M docs the top-k statement persists nothing (no
+    InMemoryTableScan), the call runs exactly one job, and collecting
+    the returned k rows runs none."""
     idx, _ = small_index
     big = SearchIndex(
         spark=spark, path=idx.path, stats={**idx.stats, "num_docs": 1_000_000}
@@ -151,38 +161,55 @@ def test_free_query_stays_lazy_at_corpus_scale(spark, small_index):
     # driver-side vocabulary + stage relations load once per handle;
     # those jobs are not the query's
     big.driver_vocab()
-    _ = (big.postings, big.doc_lengths)
-    sc = spark.sparkContext
-    group = "free_query_lazy"
-    sc.setJobGroup(group, "free_query laziness")
-    try:
-        df = free_query(big, "the world time", 10)
-        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "InMemoryTableScan" not in plan, plan
-        assert len(df.collect()) == 10
-        # the tracker does see this group's jobs once the caller collects
-        assert list(sc.statusTracker().getJobIdsForGroup(group))
-    finally:
-        sc._jsc.clearJobGroup()
+    _ = big.postings
+    terms = resolve_query_terms(big, "the world time")
+    plan = top_k(big, terms, 10)._jdf.queryExecution().executedPlan().toString()
+    assert "InMemoryTableScan" not in plan, plan
+    df, n = _jobs(spark, lambda: free_query(big, "the world time", 10), "fq_big_call")
+    assert n == 1
+    rows, n = _jobs(spark, df.collect, "fq_big_collect")
+    assert n == 0 and len(rows) == 10
 
 
-def test_free_query_runs_two_jobs(spark, small_index):
+def test_free_query_runs_one_job(spark, small_index):
     """A multi-term free query is one statement with its terms bound
-    in-plan: collecting it runs exactly two Spark jobs (the scoring +
-    top-k broadcast, then the url join), with no query-terms broadcast
-    job of its own."""
+    in-plan: exactly one Spark job (the scoring + top-k) runs, with no
+    query-terms broadcast job and no url job; the result is a local
+    relation whose collect runs no job and keeps the score-desc /
+    doc_id-asc order."""
     idx, _ = small_index
     terms = resolve_query_terms(idx, "the world time")
     assert len({t for _, t, _ in terms}) == 3
-    sc = spark.sparkContext
-    group = "free_query_jobs"
-    sc.setJobGroup(group, "free_query job count")
-    try:
-        assert len(free_query(idx, "the world time", 10).collect()) == 10
-        assert len(list(sc.statusTracker().getJobIdsForGroup(group))) == 2
-    finally:
-        sc._jsc.clearJobGroup()
+    df, n = _jobs(spark, lambda: free_query(idx, "the world time", 10), "fq_call")
+    assert n == 1
+    rows, n = _jobs(spark, df.collect, "fq_collect")
+    assert n == 0 and len(rows) == 10
+    keys = [(-r["score"], r["doc_id"]) for r in rows]
+    assert keys == sorted(keys)
+    assert [r["url"] for r in rows] == idx.urls([r["doc_id"] for r in rows])
+
+
+def test_no_term_query_runs_no_job(spark, small_index):
+    """A query with no vocabulary term answers an empty local relation
+    of the result schema without a Spark job."""
+    idx, _ = small_index
+    df, n = _jobs(spark, lambda: free_query(idx, "", 10), "fq_empty_call")
+    rows, m = _jobs(spark, df.collect, "fq_empty_collect")
+    assert (n, m, rows) == (0, 0, [])
+    assert df.columns == ["doc_id", "url", "score"]
+
+
+def test_wand_materialization_runs_no_job(spark, small_index):
+    """free_query_wand's protocol path ends in materialize_topk: the
+    returned relation is local (its collect runs no job) and equals
+    the exhaustive answer."""
+    from search_rs_spark.operators.wand import free_query_wand
+
+    idx, _ = small_index
+    df = free_query_wand(idx, "the world time", 10, force_protocol=True)
+    rows, n = _jobs(spark, df.collect, "wand_collect")
+    assert n == 0
+    assert rows == free_query(idx, "the world time", 10).collect()
 
 
 def test_vocabulary_stage_plan_pin(spark, tmp_path, monkeypatch):
@@ -196,9 +223,9 @@ def test_vocabulary_stage_plan_pin(spark, tmp_path, monkeypatch):
     captured = {}
     real = catalog.write_stage
 
-    def spy(df, path):
+    def spy(df, path, options=None):
         captured[os.path.basename(path)] = df
-        real(df, path)
+        real(df, path, options)
 
     monkeypatch.setattr(catalog, "write_stage", spy)
     wt = synthesize_webtext(spark, 60, seed=3, vocab_size=80, mean_len=20)
