@@ -280,11 +280,17 @@ def score_candidates(
     return index.spark.sql(text, **rels)
 
 
-def top_k(index, terms: list[tuple[int, str, int]], k: int) -> DataFrame:
-    """-> lazy (doc_id, score): the k winners of :func:`score_candidates`,
-    score-desc / doc_id-asc, as one statement whose top-k is a
-    distributed bounded heap (TakeOrderedAndProject)."""
-    scored, rels = _candidates_sql(index, terms, None)
+def top_k(
+    index,
+    terms: list[tuple[int, str, int]],
+    k: int,
+    blocks: "DataFrame | list[int] | None" = None,
+) -> DataFrame:
+    """-> lazy (doc_id, score): the k winners of :func:`score_candidates`
+    (restricted to ``blocks``, see :func:`scored_hits`), score-desc /
+    doc_id-asc, as one statement whose top-k is a distributed bounded
+    heap (TakeOrderedAndProject)."""
+    scored, rels = _candidates_sql(index, terms, blocks)
     return index.spark.sql(
         f"SELECT doc_id, score FROM ({scored}) ORDER BY score DESC, doc_id LIMIT {int(k)}",
         **rels,

@@ -27,24 +27,23 @@ make pruning unsafe.
 
 Exact-top-k protocol (two bounded passes; no full-metadata collect —
 the driver holds at most a bounded set of block ids):
-1. the coverage set = highest-ub spans whose cumulative doc coverage
-   reaches COVERAGE_FACTOR * k, picked via distributed top-N
-   (TakeOrderedAndProject over at most COVERAGE_FACTOR*k slim rows —
-   every span holds >= 1 doc, so the top COVERAGE_FACTOR*k spans always
-   suffice) + a cumulative-sum window over that bounded set; its ids
-   are collected, the spans scored exactly, and the running k-th best
-   score is theta;
-2. exactly score every remaining span with ub >= theta (provably the
-   only spans that could alter the top-k), merge, and take the top-k.
+1. coverage: the highest-ub spans, taken in ub order until they hold
+   COVERAGE_FACTOR * k docs of their rarest present query term (a head
+   term's docs would drag theta down to head-only scores), are scored
+   exactly by free_query's own top-k statement (:func:`bm25.top_k`);
+   the k-th best score is theta;
+2. every other span whose ub clears theta (see :func:`theta_floor`) is
+   scored the same way, and the two top-ks merge.
    Block-id sets up to MAX_LITERAL_BLOCKS (the coverage set and the
-   survivors alike) are collected and inlined as a literal scan filter
-   (parquet row-group stats skip the pruned blocks' array columns
-   entirely — the IO win pruning exists for); larger sets stay a
-   broadcast semi join (prunes the explode, not the scan).
+   survivors alike) are inlined as a literal ``block_id IN`` scan
+   filter (parquet page and row-group stats skip the pruned blocks'
+   array columns entirely — the IO win pruning exists for); larger
+   sets stay a broadcast semi join (prunes the explode, not the scan).
 
 Safety: every doc's true score <= its span's ub, so a span with
 ub < theta cannot contribute a doc at or above the k-th best
-(>= keeps spans that could win a doc_id tie-break at exactly theta).
+(>= keeps spans that could win a doc_id tie-break at exactly theta) —
+up to rounding, which :func:`theta_floor` absorbs.
 
 Measured regime (1M-doc Zipfian corpus, local[16]): the two bounded
 passes cost ~8 s vs ~3.6 s for the exhaustive scorer — on this corpus
@@ -64,7 +63,7 @@ exhaustive path holds everywhere (tests/test_wand.py).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .bm25 import (
@@ -73,8 +72,8 @@ from .bm25 import (
     free_query,
     materialize_topk,
     resolve_query_terms,
-    score_candidates,
     sql_double,
+    top_k,
 )
 from .window_score import U32_MAX, WINDOW_SCORE_MULTIPLIER
 
@@ -84,7 +83,8 @@ COVERAGE_FACTOR = 4
 # the span pool is big enough that pruning CAN pay (pre-gates, zero-job
 # from the dfs and per-term block counts), and is abandoned when theta
 # leaves too many spans alive for it to pay (post-theta gate, one
-# aggregate over the slim persisted span-ub table).
+# aggregate over the slim persisted span-ub table, run only when the
+# survivors exceed MAX_LITERAL_BLOCKS).
 SPAN_GATE_FACTOR = 2  # pre-gate: need > this x coverage target spans
 BLANKET_FRACTION = 0.95  # pre-gate: bail when >= this holds all terms
 SURVIVOR_BAILOUT_FRACTION = 0.5  # post-gate: bail when >= this survives
@@ -107,10 +107,25 @@ MIN_PRUNABLE_POSTINGS = 4_000_000
 # broadcast semi-join (see scored_hits). Bounds plan-compile cost.
 MAX_LITERAL_BLOCKS = 2048
 
+# relative margin under theta that a span's ub may sit and still be
+# scored: the bound and the score it bounds round differently
+# (block_max divides each posting's contribution by doc_len before idf
+# multiplies it; the scorer multiplies by idf, sums, then divides by
+# doc_len), so a span's ub can come out an ulp below its best doc's
+# score. Far above double epsilon; a span kept by the margin alone
+# costs only work, never rank identity.
+THETA_REL_EPS = 1e-12
+
+
+def theta_floor(theta: float) -> float:
+    """The protocol's keep line: a span is scored iff its ub >= this."""
+    return theta - THETA_REL_EPS * abs(theta)
+
 
 def span_upper_bounds(index, terms: list[tuple[int, str, int]]) -> DataFrame:
-    """(block_id, ub, max_docs) for every doc-id span touched by the
-    query terms — metadata columns only, arrays never read."""
+    """(block_id, ub, cover) for every doc-id span touched by the query
+    terms — metadata columns only, arrays never read. ``cover`` is the
+    doc count (df_block) of the span's rarest present query term."""
     num_tokens = len(terms)
     n_distinct = len({t for _, t, _ in terms})
 
@@ -129,9 +144,9 @@ def span_upper_bounds(index, terms: list[tuple[int, str, int]]) -> DataFrame:
     eps = sql_double(WINDOW_SCORE_MULTIPLIER * num_tokens / U32_MAX)
     return index.spark.sql(
         f"SELECT block_id, ub_bm + CASE WHEN n_terms = {n_distinct} "
-        f"THEN {full} ELSE {eps} END AS ub, max_docs FROM ("
+        f"THEN {full} ELSE {eps} END AS ub, cover FROM ("
         "SELECT block_id, sum(idf * block_max * mult) AS ub_bm, "
-        "count(DISTINCT term) AS n_terms, max(df_block) AS max_docs "
+        "count(DISTINCT term) AS n_terms, min(df_block) AS cover "
         f"FROM {bind_terms(structs, 'idf, mult')} GROUP BY block_id)",
         postings=index.postings,
     )
@@ -173,11 +188,12 @@ def free_query_wand(
       protocol by their real block counts. Both bounds are exact, so
       neither bails where the measured span table would have kept the
       protocol; the cases they cannot decide run it.
-    - post-theta (one aggregate over the persisted span-ub table): if
-      >= SURVIVOR_BAILOUT_FRACTION of spans have ub >= theta after pass
-      1, restricting pass 2 to survivors still scores almost
-      everything while paying the two-pass structure — fall through to
-      the exhaustive scorer.
+    - post-theta, only past MAX_LITERAL_BLOCKS survivors: pass 2 is
+      then a semi join that reads every array, so one aggregate over
+      the persisted span-ub table bails when >= SURVIVOR_BAILOUT_FRACTION
+      of spans have ub >= theta. Under the cap pass 2 is a literal
+      ``block_id IN`` scan that reads a subset of what the exhaustive
+      scorer would, so it never costs more than bailing.
 
     ``force_protocol=True`` skips every gate (tests pin the protocol's
     rank-identity directly).
@@ -205,95 +221,60 @@ def free_query_wand(
 
     span_ub = span_upper_bounds(index, terms).persist()
     try:
-        # ---- pass 1: coverage set, picked distributedly -------------------
-        # top-N by ub is bounded by COVERAGE_FACTOR*k rows (each span
-        # covers >= 1 doc), so the cumulative-sum window below runs over
-        # a tiny, driver-independent set. Runs inside the try: the
-        # collect is a real Spark job, and a failure here must still
-        # unpersist span_ub.
-        cand = span_ub.orderBy(F.desc("ub"), F.asc("block_id")).limit(target)
-        # Unpartitioned window, intentionally: cand is capped at
-        # COVERAGE_FACTOR*k rows by the limit above, so the single-task
-        # window is bounded and the `WindowExec: No Partition Defined`
-        # warning it emits is expected.
-        w = (
-            Window.orderBy(F.desc("ub"), F.asc("block_id"))
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        # the coverage set is bounded by COVERAGE_FACTOR*k rows
-        # (collecting the ids is the protocol's pass-1 driver contact,
-        # same order of bytes as the k winner rows) — but for k > 512
-        # that exceeds MAX_LITERAL_BLOCKS, so the SCAN-side form
-        # switches from an inlined IN filter to a broadcast semi-join
-        # on a driver-local DataFrame (same ids, no plan-compile or
-        # parquet inFilterThreshold blowup); the pass-2 exclusion
-        # switches to an anti-join off the same table.
-        first_blocks = sorted(
-            int(r["block_id"])
-            for r in cand.withColumn("cum", F.sum("max_docs").over(w))
-            .filter(F.col("cum") - F.col("max_docs") < target)
-            .select("block_id")
+        # ---- pass 1: the coverage set ------------------------------------
+        # every span covers >= 1 doc, so the top `target` spans by ub
+        # reach the target. Inside the try: the collect is a Spark job,
+        # and a failure here must still unpersist span_ub.
+        first_blocks: list[int] = []
+        covered = 0
+        for r in (
+            span_ub.orderBy(F.desc("ub"), F.asc("block_id"))
+            .select("block_id", "cover")
+            .limit(target)
             .collect()
-        )
-        if len(first_blocks) <= MAX_LITERAL_BLOCKS:
-            first_rep: "list[int] | DataFrame" = first_blocks
-            first_df = None
-        else:
-            first_df = index.spark.createDataFrame(
+        ):
+            if covered >= target:
+                break
+            first_blocks.append(int(r["block_id"]))
+            covered += int(r["cover"])
+        first_blocks.sort()
+        # past MAX_LITERAL_BLOCKS (k > 512 at the default constants) the
+        # ids become a driver-local table: a broadcast semi join for the
+        # scan, an anti join for the pass-2 exclusion
+        first: "list[int] | DataFrame" = first_blocks
+        if len(first_blocks) > MAX_LITERAL_BLOCKS:
+            first = index.spark.createDataFrame(
                 [(b,) for b in first_blocks], "block_id long"
             )
-            first_rep = first_df
-        first_top = (
-            score_candidates(index, terms, blocks=first_rep)
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
-            .collect()
-        )
+        first_top = top_k(index, terms, k, first).collect()
         theta = first_top[-1]["score"] if len(first_top) >= k else float("-inf")
-
-        # ---- post-theta gate: does pruning actually bite? -----------------
-        # one aggregate over the persisted slim span table; pass-1 work
-        # is discarded on bailout (it was bounded by the coverage target)
-        if not force_protocol:
-            gate = span_ub.agg(
-                F.count(F.lit(1)).alias("n_spans"),
-                F.count_if(F.col("ub") >= F.lit(theta)).alias("survivors"),
-            ).collect()[0]
-            if gate["survivors"] >= SURVIVOR_BAILOUT_FRACTION * gate["n_spans"]:
-                return free_query(index, query, k)
+        keep = F.col("ub") >= F.lit(theta_floor(theta))
 
         # ---- pass 2: every other span that could still alter the top-k ----
-        # >= (not >): a doc could score exactly theta and win a doc_id
-        # tie-break. The two passes score disjoint span sets exactly, so
-        # the merged top-k of their top-ks is the exact top-k.
-        remaining = span_ub.filter(F.col("ub") >= F.lit(theta))
-        if first_df is None:
-            remaining = remaining.filter(~F.col("block_id").isin(first_blocks))
+        # The two passes score disjoint span sets exactly, so the merged
+        # top-k of their top-ks is the exact top-k.
+        remaining = span_ub.filter(keep)
+        if isinstance(first, list):
+            remaining = remaining.filter(~F.col("block_id").isin(first))
         else:
-            remaining = remaining.join(
-                F.broadcast(first_df), "block_id", "left_anti"
-            )
+            remaining = remaining.join(F.broadcast(first), "block_id", "left_anti")
         remaining = remaining.select("block_id")
-        # survivor ids: up to MAX_LITERAL_BLOCKS collect as literals so
-        # the pass-2 scan row-group-prunes the skipped blocks (their
-        # positions arrays are never read); beyond that, stay a
-        # DataFrame semi-join. The limit bounds the driver contact.
-        # An empty survivor set also skips pass 2's job chain entirely.
+        # the limit bounds the driver contact; an empty survivor set
+        # skips pass 2's job entirely
         surv = remaining.limit(MAX_LITERAL_BLOCKS + 1).collect()
-        if not surv:
-            second_top = []
-        else:
-            blocks2 = (
-                sorted(int(r["block_id"]) for r in surv)
-                if len(surv) <= MAX_LITERAL_BLOCKS
-                else remaining
-            )
-            second_top = (
-                score_candidates(index, terms, blocks=blocks2)
-                .orderBy(F.desc("score"), F.asc("doc_id"))
-                .limit(k)
-                .collect()
-            )
+        second: "list[int] | DataFrame" = sorted(int(r["block_id"]) for r in surv)
+        if len(surv) > MAX_LITERAL_BLOCKS:
+            # only the semi join (it reads every array) can cost more
+            # than the exhaustive scorer
+            if not force_protocol:
+                gate = span_ub.agg(
+                    F.count(F.lit(1)).alias("n_spans"),
+                    F.count_if(keep).alias("survivors"),
+                ).collect()[0]
+                if gate["survivors"] >= SURVIVOR_BAILOUT_FRACTION * gate["n_spans"]:
+                    return free_query(index, query, k)
+            second = remaining
+        second_top = top_k(index, terms, k, second).collect() if surv else []
     finally:
         span_ub.unpersist(blocking=False)
 

@@ -14,7 +14,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from search_rs_spark.operators.bm25 import free_query
-from search_rs_spark.operators.wand import free_query_wand, span_upper_bounds
+from search_rs_spark.operators.wand import (
+    free_query_wand,
+    span_upper_bounds,
+    theta_floor,
+)
 from search_rs_spark.oracle import build_oracle, oracle_free_query
 from search_rs_spark.plans.build import build_index
 from search_rs_spark.plans.index import SearchIndex
@@ -247,29 +251,86 @@ def dup_index(spark, tmp_path_factory):
 DUP_QUERY = "xerxes xerxes yaw"
 
 
-def test_block_upper_bounds_dominate_true_scores(spark, dup_index):
-    """Safety invariant: for every block, ub >= the max true combined
-    score of any doc in it. Fails if the all-terms-present window bonus
-    is capped at 3.0 instead of 3*num_tokens/n_distinct."""
+@pytest.fixture(scope="module")
+def tie_index(spark, tmp_path_factory):
+    """36 docs, block_span=4. X docs (0, 4, 8) tie on the top score;
+    C docs (5, 9) raise the alpha block_max of spans 1-2 above span
+    0's, so the coverage walk meets spans 1-2 first. Span 0's computed
+    ub lands one ulp below doc 0's score: the bound divides each
+    contribution by doc_len before idf multiplies it, the scorer
+    multiplies first and divides the sum last."""
+    x = "alpha bravo " + " ".join(f"pad{i}" for i in range(24))
+    c, f = "alpha alpha alpha", "zulu yankee"
+    texts = [x, f, f, f] + [x, c, f, f] * 2 + [f] * 24
+    rows = [
+        (f"https://t.local/{i:06d}.txt", _EPOCH, wrap_html(t), t, "en")
+        for i, t in enumerate(texts)
+    ]
+    wt = spark.createDataFrame(rows, schema=WEBTEXT_SCHEMA)
+    out = str(tmp_path_factory.mktemp("idx_tie"))
+    build_index(spark, wt, out, min_f=0, max_p=1.0, block_span=4)
+    return SearchIndex.load(spark, out)
+
+
+TIE_QUERY = "alpha bravo"
+
+
+@pytest.mark.parametrize("k", [1, 2])
+@pytest.mark.parametrize("coverage_factor", [None, 1])
+def test_wand_keeps_ties_at_theta(tie_index, monkeypatch, k, coverage_factor):
+    """Rank identity when the k-th score is a tie: the protocol's answer
+    equals free_query's in doc ids and score bits. COVERAGE_FACTOR=1
+    leaves span 0 out of the coverage set, so pass 2 must keep it
+    although its ub sits one ulp below theta."""
+    from search_rs_spark.operators import wand as wand_mod
+
+    if coverage_factor is not None:
+        monkeypatch.setattr(wand_mod, "COVERAGE_FACTOR", coverage_factor)
+    exact = [
+        (r["doc_id"], r["score"].hex())
+        for r in free_query(tie_index, TIE_QUERY, k).collect()
+    ]
+    wand = [
+        (r["doc_id"], r["score"].hex())
+        for r in free_query_wand(
+            tie_index, TIE_QUERY, k, force_protocol=True
+        ).collect()
+    ]
+    assert exact[0][0] == 0
+    assert wand == exact
+
+
+def _assert_protocol_keeps_every_scored_span(index, query):
+    """For every scored doc, the protocol's own keep predicate (ub >=
+    theta_floor(theta)) holds for its span with theta = the doc's
+    score: pass 2 never prunes a span holding a doc at theta."""
     from search_rs_spark.operators.bm25 import resolve_query_terms
 
-    terms = resolve_query_terms(dup_index, DUP_QUERY)
+    terms = resolve_query_terms(index, query)
     ub = {
-        r["block_id"]: r["ub"]
-        for r in span_upper_bounds(dup_index, terms).collect()
+        r["block_id"]: r["ub"] for r in span_upper_bounds(index, terms).collect()
     }
-    scores = free_query(dup_index, DUP_QUERY, k=10_000).collect()
+    scores = free_query(index, query, k=10_000).collect()
     assert scores
-    span = dup_index.stats["block_span"]
-    saw_above_flat3_bm = False
+    span = index.stats["block_span"]
     for r in scores:
         b = r["doc_id"] // span
         assert b in ub, f"doc {r['doc_id']} scored but block {b} unbounded"
-        assert ub[b] >= r["score"] - 1e-9, (b, ub[b], r["score"])
-        if r["score"] > 4.0:
-            saw_above_flat3_bm = True
+        assert ub[b] >= theta_floor(r["score"]), (b, ub[b].hex(), r["score"].hex())
+    return scores
+
+
+def test_block_upper_bounds_dominate_true_scores(dup_index, tie_index):
+    """Safety invariant: for every block, ub >= the max true combined
+    score of any doc in it, as the protocol tests it. Fails if the
+    all-terms-present window bonus is capped at 3.0 instead of
+    3*num_tokens/n_distinct (dup corpus), or if the keep line has no
+    margin for the bound's rounding (tie corpus: span 0's ub comes out
+    one ulp below doc 0's score)."""
+    scores = _assert_protocol_keeps_every_scored_span(dup_index, DUP_QUERY)
     # the corpus must actually exercise the >3.0 window region
-    assert saw_above_flat3_bm
+    assert any(r["score"] > 4.0 for r in scores)
+    _assert_protocol_keeps_every_scored_span(tie_index, TIE_QUERY)
 
 
 def test_wand_duplicate_tokens_with_pruning_firing(dup_index):
@@ -577,3 +638,91 @@ def test_wand_clustered_middf_term_keeps_the_protocol(
         for r in free_query(idx, "alpha gamma", 10).collect()
     ]
     assert auto == exact
+
+
+@pytest.fixture(scope="module")
+def head_rare_index(spark, tmp_path_factory):
+    """3,200 docs, block_span=16 -> 200 spans. 'the' is in every doc
+    (2-4 tokens long, so 'the'-only scores spread); 'rare' is in one
+    doc of each of 60 spans, all alike, so the 60 rare docs tie and
+    pass 2 has survivors. A span's max df_block is 16 (the head term),
+    its rarest-term df_block is 1."""
+    words = ["red", "green", "iron", "wood"]
+    rows = []
+    for i in range(3200):
+        span, slot = divmod(i, 16)
+        dl = 2 if i % 8 == 0 else 3 + i % 2
+        text = " ".join(["the"] + words[: dl - 1])
+        if span % 10 in (0, 3, 6) and slot == 5:
+            text = "the rare iron wood"
+        u = f"https://example.org/headrare/{i:08d}.html"
+        rows.append((u, _EPOCH, wrap_html(text), text, "en"))
+    wt = spark.createDataFrame(rows, schema=WEBTEXT_SCHEMA)
+    out = str(tmp_path_factory.mktemp("idx_headrare"))
+    build_index(spark, wt, out, min_f=0, max_p=1.0, block_span=16)
+    return SearchIndex.load(spark, out)
+
+
+@pytest.mark.parametrize("max_literal", [None, 0])
+def test_wand_coverage_counts_the_rarest_term(
+    head_rare_index, monkeypatch, max_literal
+):
+    """A head term next to a rare one: coverage counts each span's
+    rarest-term docs, so theta is a real k-th score and auto mode keeps
+    the protocol, with free_query's answer. Counting the head term's
+    docs fills coverage with 'the'-only docs, theta falls to their
+    scores, every span survives and the post-theta gate bails.
+    MAX_LITERAL_BLOCKS=0 makes the gate run on any survivor."""
+    from search_rs_spark.operators import wand as wand_mod
+
+    idx, q, k = head_rare_index, "rare the", 10
+    assert idx.n_blocks(["the", "rare"]) == {"the": 200, "rare": 60}
+    monkeypatch.setattr(wand_mod, "MIN_PRUNABLE_POSTINGS", 0)
+    if max_literal is not None:
+        monkeypatch.setattr(wand_mod, "MAX_LITERAL_BLOCKS", max_literal)
+    monkeypatch.setattr(
+        wand_mod,
+        "free_query",
+        lambda *a, **kw: (_ for _ in ()).throw(
+            AssertionError("auto mode bailed to exhaustive")
+        ),
+    )
+    auto = [
+        (r["doc_id"], r["score"].hex()) for r in free_query_wand(idx, q, k).collect()
+    ]
+    monkeypatch.undo()
+    exact = [(r["doc_id"], r["score"].hex()) for r in free_query(idx, q, k).collect()]
+    assert auto == exact
+
+
+def test_wand_survivor_gate_runs_only_past_the_literal_cap(
+    head_rare_index, monkeypatch
+):
+    """With SURVIVOR_BAILOUT_FRACTION at 0 the post-theta gate bails
+    whenever it runs. Survivors that fit MAX_LITERAL_BLOCKS must not
+    run it (the literal pass 2 never costs more than the exhaustive
+    scorer); past the cap it runs and bails."""
+    from search_rs_spark.operators import wand as wand_mod
+
+    idx, q, k = head_rare_index, "rare the", 10
+    monkeypatch.setattr(wand_mod, "MIN_PRUNABLE_POSTINGS", 0)
+    monkeypatch.setattr(wand_mod, "SURVIVOR_BAILOUT_FRACTION", 0)
+    calls = []
+    real = wand_mod.free_query
+
+    def spy(index, query, kk):
+        calls.append((query, kk))
+        return real(index, query, kk)
+
+    monkeypatch.setattr(wand_mod, "free_query", spy)
+    auto = [
+        (r["doc_id"], r["score"].hex()) for r in free_query_wand(idx, q, k).collect()
+    ]
+    assert not calls, "survivor gate ran under the literal cap"
+
+    monkeypatch.setattr(wand_mod, "MAX_LITERAL_BLOCKS", 0)
+    bailed = [
+        (r["doc_id"], r["score"].hex()) for r in free_query_wand(idx, q, k).collect()
+    ]
+    assert calls == [(q, k)], "survivor gate did not run past the literal cap"
+    assert auto == bailed
