@@ -1,4 +1,4 @@
-"""Boolean queries: shunting-yard parse + set-algebra evaluation (Q4-Q8, Q15).
+"""Boolean queries: shunting-yard parse + block-local set algebra (Q4-Q8, Q15).
 
 Reference: ``Engine::boolean_query`` + ``infix_to_postfix_boolean``
 (/root/reference/search/src/engine/mod.rs:94-136,215-247) and the
@@ -14,11 +14,13 @@ Faithfully reproduced quirks (each pinned by a test):
   non-empty case is the complement over ``0..n`` (postings.rs:188-198);
 - every boolean hit scores a constant 1.0 (mod.rs:122-127).
 
-Evaluation is SQL set algebra in one statement — semi-join (AND),
-union + dedup (OR), anti-join complement (NOT) on doc-id columns — so
-operand lists never materialize on the driver; operands are
-duplicate-free by construction, which is what lets AND be a semi-join
-instead of a dedup-shuffling ``intersect``.
+The postings are blocked by doc id (``block_id = doc_id //
+block_span``), so every set operation stays inside one block, as in
+HERO's (SIGMOD'24) partition-wise intersection: one postings scan, one
+``GROUP BY block_id``, and per block one array expression —
+``array_intersect`` (AND), ``array_union`` (OR), ``array_except`` from
+the block's ids (NOT). No set operator is a join, and no operand list
+reaches the driver.
 """
 
 from __future__ import annotations
@@ -54,85 +56,71 @@ def infix_to_postfix(query: str) -> list[str]:
     return res
 
 
-def _term_doc_ids(index, term: str) -> str:
-    """Spellcheck the verbatim operand, then select its sorted doc ids.
-    Only the corrected vocabulary term reaches the SQL text."""
+def boolean_query(index, query: str) -> DataFrame:
+    """-> DataFrame (doc_id, url, score=1.0) ordered by doc_id; a lazy
+    plan, built fresh per call as one ``spark.sql`` statement:
+
+    - the postings rows of the spellchecked operand terms, plus one row
+      per block when the query negates, so that a block holding no
+      operand still gets a row;
+    - ``GROUP BY block_id`` with one doc-id array column per term;
+    - the postfix stack as array expressions over those columns. The
+      empty-operand quirk of NOT is decided without a job: an unmatched
+      term is known empty on the driver, and a compound operand is
+      projected as a column whose ``max(size(x)) OVER ()`` spans the
+      at most nblocks rows;
+    - ``explode``, the url join and the doc_id sort.
+    Only vocabulary terms and numbers reach the SQL text."""
     from .bm25 import sql_str
 
+    postfix = infix_to_postfix(query)
+    operands = sorted({p for p in postfix if p not in PRECEDENCE})
     try:
-        corrected = index.driver_vocab().spellcheck_term(term)
+        corrected = {t: index.driver_vocab().spellcheck_term(t) for t in operands}
     except RuntimeError:  # vocabulary beyond driver threshold
         from .spellcheck import spellcheck_distributed
 
-        corrected = spellcheck_distributed(index.vocabulary, [term]).get(term)
-    if corrected is None:
-        return "SELECT id AS doc_id FROM range(0)"
-    return (
-        "SELECT CAST(d AS BIGINT) AS doc_id FROM {postings} "
-        f"LATERAL VIEW explode(doc_ids) t AS d WHERE term = {sql_str(corrected)}"
+        corrected = spellcheck_distributed(index.vocabulary, operands) if operands else {}
+    column = {t: f"t{i}" for i, t in enumerate(sorted(set(corrected.values()) - {None}))}
+    n, span = index.num_docs, int(index.stats["block_span"])
+    # the block's own doc ids, block_id·span .. min((block_id+1)·span, n) - 1
+    ids = f"sequence(block_id * {span}, least((block_id + 1) * {span}, {n}) - 1)"
+
+    where = f"term IN ({', '.join(sql_str(t) for t in column)})" if column else "FALSE"
+    rows = f"SELECT term, block_id, doc_ids FROM {{postings}} WHERE {where}"
+    if "NOT" in postfix:  # one split: beside a one-task scan, no exchange
+        rows += f" UNION ALL SELECT NULL, id, NULL FROM range(0, {-(-n // span)}, 1, 1)"
+    arrays = "".join(
+        f", flatten(collect_list(CASE WHEN term = {sql_str(t)} THEN doc_ids END)) AS {c}"
+        for t, c in column.items()
     )
+    layer = f"SELECT block_id{arrays} FROM ({rows}) GROUP BY block_id"
 
-
-def _not_operator(index, operand: str) -> str:
-    """Complement of the relation named ``operand`` with the empty-input
-    quirk (postings.rs:179-188), decided INSIDE the plan — no eager
-    emptiness probe, so a NOT node costs zero extra Spark jobs:
-
-    - non-empty operand: complement over 0..n-1 (postings.rs:188-198)
-    - empty operand:     1..=n — includes the out-of-range id n and
-                         excludes 0 (postings.rs:179-181)
-
-    One extended universe 0..n is anti-joined (a no-op for the empty
-    case), then a broadcast 1-row count picks the branch per row; its
-    LIMIT 1 keeps the gate O(1) instead of counting the whole operand.
-    """
-    n = index.num_docs
-    return (
-        f"SELECT /*+ BROADCAST(c) */ u.id AS doc_id FROM range(0, {n + 1}) u "
-        f"LEFT ANTI JOIN {operand} o ON u.id = o.doc_id "
-        f"CROSS JOIN (SELECT count(1) AS _n FROM (SELECT * FROM {operand} LIMIT 1)) c "
-        f"WHERE (c._n > 0 AND u.id < {n}) OR (c._n = 0 AND u.id >= 1)"
-    )
-
-
-def boolean_query(index, query: str) -> DataFrame:
-    """-> DataFrame (doc_id, url, score=1.0) ordered by doc_id; a lazy
-    plan, built fresh per call as one ``spark.sql`` statement whose CTEs
-    are the postfix stack's nodes."""
-    ctes: list[str] = []
-    stack: list[str] = []
-
-    def push(select: str) -> None:
-        stack.append(f"b{len(ctes)}")
-        ctes.append(f"{stack[-1]} AS ({select})")
-
-    for p in infix_to_postfix(query):
-        if p == "AND":
-            a, b = stack.pop(), stack.pop()
-            # left semi, not intersect: every operand is already
-            # duplicate-free (posting lists hold one entry per doc,
-            # postings.rs:81-113; NOT/OR outputs are deduped), so
-            # intersection ≡ semi-join — without intersect's full
-            # dedup-shuffle of BOTH sides per operator. AQE turns the
-            # semi-join into a broadcast when one side is small.
-            push(f"SELECT a.doc_id FROM {a} a LEFT SEMI JOIN {b} b ON a.doc_id = b.doc_id")
-        elif p == "OR":
-            a, b = stack.pop(), stack.pop()
-            # union still needs one dedup (overlapping operands): one
-            # aggregate on the single doc_id column
-            push(
-                "SELECT DISTINCT doc_id FROM "
-                f"(SELECT doc_id FROM {a} UNION ALL SELECT doc_id FROM {b})"
-            )
+    stack: list[tuple[str, str]] = []  # (array expression, "term" | "empty" | "compound")
+    n_layers = 0
+    for p in postfix:
+        if p in ("AND", "OR"):
+            (b, _), (a, _) = stack.pop(), stack.pop()
+            op = "array_intersect" if p == "AND" else "array_union"
+            stack.append((f"{op}({a}, {b})", "compound"))
         elif p == "NOT":
-            push(_not_operator(index, stack.pop()))
+            x, kind = stack.pop()
+            if kind == "empty":  # 1..=n (postings.rs:179-181); id n has no url
+                x = "array(0L)"
+            elif kind == "compound":  # a vocabulary term is never empty
+                n_layers += 1
+                layer = f"SELECT *, {x} AS s{n_layers} FROM ({layer})"
+                x = f"IF(max(size(s{n_layers})) OVER () > 0, s{n_layers}, array(0L))"
+            stack.append((f"array_except({ids}, {x})", "compound"))
+        elif corrected[p] is None:
+            stack.append(("CAST(array() AS ARRAY<BIGINT>)", "empty"))
         else:
-            push(_term_doc_ids(index, p))
-    result = stack.pop()
+            stack.append((column[corrected[p]], "term"))
+    # a window may not share its SELECT with the generator
+    hits = f"SELECT explode(r) AS doc_id FROM (SELECT {stack.pop()[0]} AS r FROM ({layer}))"
     return index.spark.sql(
-        f"WITH {', '.join(ctes)} "
         "SELECT d.doc_id, d.url, 1.0D AS score "
-        f"FROM {{docs}} d JOIN {result} r ON d.doc_id = r.doc_id ORDER BY doc_id",
+        f"FROM {{docs}} d JOIN ({hits}) h ON d.doc_id = h.doc_id ORDER BY doc_id",
         postings=index.postings,
         docs=index.doc_lengths,
     )

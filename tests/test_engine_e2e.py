@@ -73,12 +73,14 @@ def test_free_query_matches_oracle_on_fixture(fixture_index):
 
 @pytest.fixture(scope="module")
 def synth(spark, tmp_path_factory):
-    """200-doc seeded Zipfian corpus: Spark index + oracle index."""
+    """200-doc seeded Zipfian corpus: Spark index + oracle index. Its
+    block_span of 16 splits the doc ids into 13 blocks, the last one
+    partial, so per-block boolean faults show."""
     wt = synthesize_webtext(spark, 200, seed=7, vocab_size=300, mean_len=40)
     rows = wt.select("url", "text").collect()
     corpus = [(r["url"], r["text"]) for r in rows]
     out = str(tmp_path_factory.mktemp("idx_synth"))
-    build_index(spark, wt, out, min_f=0, max_p=1.0, block_span=64)
+    build_index(spark, wt, out, min_f=0, max_p=1.0, block_span=16)
     return SearchIndex.load(spark, out), build_oracle(corpus)
 
 
@@ -121,13 +123,56 @@ BOOL_QUERIES = [
 ]
 
 
-@pytest.mark.parametrize("q", BOOL_QUERIES)
+# NOT cases that only a multi-block index tells apart. On this corpus
+# "day0" (doc 14) and "and1" (doc 96) are disjoint, so their AND is a
+# compound empty operand; they sit in blocks 0 and 6 only, so a NOT of
+# them must fill the 11 other blocks; "the" fills every block.
+MULTI_BLOCK_QUERIES = [
+    "NOT zzzqqq",
+    "NOT (day0 AND and1)",
+    "NOT (NOT the)",
+    "NOT (day0 OR and1)",
+    "and1 OR NOT (day0 AND and1)",
+    "NOT (day0 AND and1) AND NOT (NOT the OR and1) OR day0",
+]
+
+
+def _boolean_ids(index, q):
+    return [r["doc_id"] for r in boolean_query(index, q).collect()]
+
+
+@pytest.mark.parametrize("q", BOOL_QUERIES + MULTI_BLOCK_QUERIES)
 def test_rank_identity_boolean(synth, q):
     index, oracle = synth
     expected = [d for d, u, s in oracle_boolean_query(oracle, q) if u is not None]
-    got = [r["doc_id"] for r in boolean_query(index, q).collect()]
+    got = _boolean_ids(index, q)
     assert got == sorted(got)
     assert got == expected
+
+
+def test_multi_block_premises(synth):
+    """The facts MULTI_BLOCK_QUERIES lean on still hold."""
+    index, oracle = synth
+    span = index.stats["block_span"]
+    assert -(-index.num_docs // span) == 13
+    docs = {t: {d for d, _, _ in oracle.postings[t]} for t in ("day0", "and1", "the")}
+    assert not docs["day0"] & docs["and1"]
+    assert len({d // span for d in docs["day0"] | docs["and1"]}) == 2
+    assert {d // span for d in docs["the"]} == set(range(13))
+
+
+def test_boolean_over_split_scans(synth, monkeypatch):
+    """The same answers when the postings and tokens scans keep their
+    file splits (no coalescing): blocks then meet across partitions."""
+    import search_rs_spark.plans.index as index_mod
+
+    index, oracle = synth
+    monkeypatch.setattr(index_mod, "SMALL_SCAN_BYTES", 0)
+    split = SearchIndex.load(index.spark, index.path)
+    assert split.postings.rdd.getNumPartitions() >= 2
+    for q in BOOL_QUERIES + MULTI_BLOCK_QUERIES:
+        expected = [d for d, u, s in oracle_boolean_query(oracle, q) if u is not None]
+        assert _boolean_ids(split, q) == expected, q
 
 
 SPECIAL_QUERIES = [
@@ -146,7 +191,7 @@ def test_operands_with_sql_and_format_characters(synth, q):
     boolean and free-text queries alike."""
     index, oracle = synth
     expected = [d for d, u, s in oracle_boolean_query(oracle, q) if u is not None]
-    assert [r["doc_id"] for r in boolean_query(index, q).collect()] == expected
+    assert _boolean_ids(index, q) == expected
     got = [
         (r["doc_id"], r["url"], r["score"]) for r in free_query(index, q, 50).collect()
     ]

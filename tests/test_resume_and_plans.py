@@ -9,6 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from search_rs_spark.operators.bm25 import free_query, resolve_query_terms, scored_hits, top_k
+from search_rs_spark.operators.boolean import boolean_query
 from search_rs_spark.operators.snippets import with_snippets
 from search_rs_spark.operators.spellcheck import DriverVocabulary, spellcheck_distributed
 from search_rs_spark.plans.build import build_index
@@ -149,11 +150,17 @@ def _jobs(spark, fn, group):
     return out, len(list(sc.statusTracker().getJobIdsForGroup(group)))
 
 
-def test_free_query_runs_one_job_at_corpus_scale(spark, small_index):
-    """free_query is one Spark job at every corpus size: on a handle
-    claiming 1M docs the top-k statement persists nothing (no
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_free_query_on_a_handle_claiming_1m_docs(spark, small_index):
+    """free_query's statement keeps its shape whatever ``num_docs``
+    says: on a handle claiming 1M docs (over the same coalesced
+    one-task scan) the top-k statement persists nothing (no
     InMemoryTableScan), the call runs exactly one job, and collecting
-    the returned k rows runs none."""
+    the returned k rows runs none. The split scan of a large index is
+    pinned by the next test."""
     idx, _ = small_index
     big = SearchIndex(
         spark=spark, path=idx.path, stats={**idx.stats, "num_docs": 1_000_000}
@@ -163,12 +170,72 @@ def test_free_query_runs_one_job_at_corpus_scale(spark, small_index):
     big.driver_vocab()
     _ = big.postings
     terms = resolve_query_terms(big, "the world time")
-    plan = top_k(big, terms, 10)._jdf.queryExecution().executedPlan().toString()
+    plan = _plan(top_k(big, terms, 10))
     assert "InMemoryTableScan" not in plan, plan
     df, n = _jobs(spark, lambda: free_query(big, "the world time", 10), "fq_big_call")
     assert n == 1
     rows, n = _jobs(spark, df.collect, "fq_big_collect")
     assert n == 0 and len(rows) == 10
+
+
+def test_free_query_over_split_scan_runs_two_jobs(spark, small_index, monkeypatch):
+    """With its file splits kept, as at real scale (SMALL_SCAN_BYTES at
+    0), the postings scan runs one task per file and the per-doc
+    aggregate needs one Exchange: free_query runs 2 jobs, the shuffle's
+    map stage and then the top-k, and returns the same rows."""
+    import search_rs_spark.plans.index as index_mod
+
+    idx, _ = small_index
+    monkeypatch.setattr(index_mod, "SMALL_SCAN_BYTES", 0)
+    split = SearchIndex.load(spark, idx.path)
+    split.driver_vocab()
+    files = [f for f in os.listdir(os.path.join(idx.path, "postings")) if f.endswith(".parquet")]
+    assert len(files) >= 2
+    assert split.postings.rdd.getNumPartitions() >= 2
+    plan = _plan(top_k(split, resolve_query_terms(split, "the world time"), 10))
+    assert len(re.findall(r"(?<!\w)Exchange ", plan)) == 1, plan
+    df, n = _jobs(spark, lambda: free_query(split, "the world time", 10), "fq_split_call")
+    assert n == 2
+    rows, n = _jobs(spark, df.collect, "fq_split_collect")
+    assert n == 0 and rows == free_query(idx, "the world time", 10).collect()
+
+
+def test_boolean_plan_is_one_scan_and_one_aggregate(spark, small_index):
+    """A boolean query reads the postings once and evaluates its set
+    algebra per doc-id block in one aggregate: no semi or anti join,
+    no Union but the NOT universe's ``range`` rows, the url join as the
+    only Join, and a Window only when a compound operand is negated."""
+    idx, _ = small_index
+    # query -> (postings scans, universe union, window); with no
+    # operand term the scan and the union fold away
+    cases = {
+        "the AND world": (1, False, False),
+        "(the OR world) AND time": (1, False, False),
+        "the AND NOT world": (1, True, False),
+        "NOT (the AND world) OR time": (1, True, True),
+        "NOT zzzqqq": (0, False, False),
+    }
+    for q, (scans, union, window) in cases.items():
+        plan = _plan(boolean_query(idx, q))
+        assert len(re.findall(r"FileScan parquet [^\n]*/postings\]", plan)) == scans, plan
+        # one GROUP BY block_id: its partial and final aggregates
+        assert plan.count("Aggregate(keys=[block_id") == 2, plan
+        assert "LeftSemi" not in plan and "LeftAnti" not in plan, plan
+        assert plan.count("Union") == union, plan
+        assert ("Range (0, " in plan) == ("NOT" in q), plan
+        joins = [line for line in plan.splitlines() if "Join" in line]
+        assert len(joins) == 1 and "/tokens]" in plan, plan
+        assert ("Window [" in plan) == window, plan
+
+
+def test_boolean_query_runs_two_jobs(spark, small_index):
+    """``a AND b``: one job for the aggregate and the broadcast of its
+    hits, one for the url join and the sort."""
+    idx, _ = small_index
+    idx.driver_vocab()
+    boolean_query(idx, "the AND world").collect()  # loads the stage relations
+    rows, n = _jobs(spark, boolean_query(idx, "the AND world").collect, "bool_and")
+    assert n == 2 and rows
 
 
 def test_free_query_runs_one_job(spark, small_index):
