@@ -19,11 +19,17 @@ reader the Spark engine's k-winner url lookup shares; a doc id with no
 tokens row raises ``ValueError``.
 
 A query slices its terms' runs out of those views and scores them with
-vectorised numpy: BM25 accumulated in query-token order, the batch
-window kernel (property-pinned equal to the reference's two-pointer
-sweep), and sorted-array set algebra for boolean queries. No Arrow call
-and no per-posting Python object runs per query, and results equal the
-Spark engine's (pinned in tests/test_serving.py).
+vectorised numpy: BM25 accumulated in query-token order for every hit
+doc, and sorted-array set algebra for boolean queries. The window
+kernel (:func:`window_score.min_windows_sorted`, property-pinned equal
+to the reference's two-pointer sweep) runs only where it can change
+the answer: never for one distinct term (the window is 1) nor for a doc
+missing a term (u32::MAX), and for the docs holding every term in
+bound-descending chunks until no bound left reaches the k-th best
+score (see :meth:`LocalEngine.free_query`). No Arrow call and no
+per-posting Python object runs per query, and results equal the Spark
+engine's (pinned in tests/test_serving.py) and, bit for bit, windowing
+every hit doc.
 
 Use: serving replicas / interactive CLIs at small-to-medium scale;
 the Spark path for batch scoring and 100 TB-scale corpora.
@@ -45,11 +51,15 @@ from .window_score import (
     BM25_B,
     BM25_K1,
     BM25_SCORE_MULTIPLIER,
+    U32_MAX,
     WINDOW_SCORE_MULTIPLIER,
     # unused here, kept importable: perfbench/serve_traced.py counts calls to it
     min_window,  # noqa: F401
-    min_windows_batch,
+    min_windows_sorted,
 )
+
+# conjunction docs are windowed in bound-descending chunks of this many
+WINDOW_CHUNK_DOCS = 2048
 
 _INTS = {"int32": np.int32, "int64": np.int64}
 
@@ -109,6 +119,60 @@ def read_docs(tokens: str, doc_ids, columns: list[str]) -> list:
             }
             out.append((part, np.flatnonzero(np.isin(_view(part["doc_id"]), want))))
     return out
+
+
+def _largest(values: np.ndarray, k: int) -> np.ndarray:
+    """The k largest of ``values`` (all of them when there are fewer)."""
+    if values.size <= k:
+        return values
+    return np.partition(values, values.size - k)[values.size - k :]
+
+
+def _window_conjunction(final, bm_norm, conj, terms, nt, k) -> None:
+    """Overwrite ``final`` at the conjunction docs ``conj`` (indices into
+    the hit docs) with their exact scores: chunk by chunk, the
+    WINDOW_CHUNK_DOCS largest bounds left, while a bound left is not below
+    the k-th best exact score. ``terms`` holds, per window id, the term's
+    (doc_ids, tfs, dls, positions) and the posting of each doc of
+    ``conj``. A doc left unscored keeps its bound, which is below k exact
+    scores, so it cannot reach the top k."""
+    n_ids = len(terms)
+    bound = WINDOW_SCORE_MULTIPLIER * (nt / n_ids) + bm_norm[conj]
+    # per window id: the conjunction docs' doc ids, tfs and first positions
+    per_id = [
+        (docs[post], tfs[post], (np.cumsum(tfs) - tfs)[post], flat)
+        for (docs, tfs, _, flat), post in terms
+    ]
+    rest = np.ones(final.size, dtype=bool)
+    rest[conj] = False
+    best = _largest(final[rest], k)
+    left = np.arange(conj.size)
+    while left.size:
+        if left.size > WINDOW_CHUNK_DOCS:
+            cut = np.argpartition(bound[left], left.size - WINDOW_CHUNK_DOCS)
+            sel, left = left[cut[-WINDOW_CHUNK_DOCS:]], left[cut[:-WINDOW_CHUNK_DOCS]]
+        else:
+            sel, left = left, left[:0]
+        sel = np.sort(sel)  # doc order, as the pairs sort by doc
+        keys, qids = [], []
+        sizes = np.zeros(sel.size, dtype=np.int64)
+        for qid, (docs, tfs, first, flat) in enumerate(per_id):
+            lens = tfs[sel]
+            ends = np.cumsum(lens)
+            idx = np.repeat(first[sel] - ends + lens, lens) + np.arange(ends[-1])
+            # a position holds one token, so (doc, pos) orders the pairs
+            # totally and qid never breaks a tie
+            keys.append((np.repeat(docs[sel], lens).astype(np.int64) << 32) | flat[idx])
+            qids.append(np.full(idx.size, qid, dtype=np.int64))
+            sizes += lens
+        key = np.concatenate(keys)
+        by = np.argsort(key, kind="stable")
+        w = min_windows_sorted(key[by] & 0xFFFFFFFF, np.concatenate(qids)[by], sizes, n_ids)
+        at_sel = conj[sel]
+        final[at_sel] = WINDOW_SCORE_MULTIPLIER * (nt / w) + bm_norm[at_sel]
+        best = _largest(np.concatenate([best, final[at_sel]]), k)
+        if best.size == k:
+            left = left[bound[left] >= best.min()]
 
 
 def _pick(arr, rows: np.ndarray) -> list:
@@ -270,21 +334,35 @@ class LocalEngine:
 
     def _read_postings(self, term: str):
         """-> (doc_ids, tfs, dls, positions) of one term: slices of the
-        resident views. A posting's tf is its position count, so the
-        positions split per posting by ``tfs``."""
+        resident views (positions stay int32). A posting's tf is its
+        position count, so the positions split per posting by ``tfs``."""
         s, p0, p1 = self.rows[term]
         seg = self.segments[s]
         docs = seg.doc_ids[p0:p1]
         offs = seg.offsets[p0 : p1 + 1]
-        return (
-            docs,
-            np.diff(offs),
-            self.doc_lens[docs],
-            seg.positions[offs[0] : offs[-1]].astype(np.int64),
-        )
+        return docs, np.diff(offs), self.doc_lens[docs], seg.positions[offs[0] : offs[-1]]
 
     def free_query(self, query: str, k: int = 100):
-        """-> [(doc_id, url, score)] — identical to operators.bm25."""
+        """-> [(doc_id, url, score)] — identical to operators.bm25.
+
+        Every hit doc gets BM25 (``bm/dl``); the window kernel runs only
+        where it can change the answer:
+
+        - one distinct term: every hit doc holds all nt query ids on one
+          shared position list, so the window is 1 and the score the
+          closed form ``3·(nt/1) + bm/dl``, as in bm25._candidates_sql;
+        - a doc missing a distinct term (every doc, when a spellchecked
+          token has no postings) has window u32::MAX: exact at once;
+        - a conjunction doc's window covers n_distinct distinct
+          positions, so ``w >= n_distinct``, and the score's own
+          expression with ``w = n_distinct`` is a bound ``>=`` the score
+          bit for bit (IEEE division and addition are monotone). The
+          conjunction docs are windowed in bound-descending chunks of
+          :data:`WINDOW_CHUNK_DOCS` until every bound left is strictly
+          below the k-th best exact score so far (MaxScore, Ding & Suel:
+          the docs left can neither beat nor tie it), see
+          :func:`_window_conjunction`. Scores, doc ids and tie order
+          equal windowing every hit doc."""
         from ..functions.tokenizer import tokenize, tokenize_and_stem
 
         toks = tokenize_and_stem(query) if self.stem else tokenize(query)
@@ -293,7 +371,7 @@ class LocalEngine:
             c = self.vocab.spellcheck_term(t)
             if c is not None:
                 tokens.append(c)
-        if not tokens:
+        if not tokens or k < 1:
             return []
         n = float(self.num_docs)
         avgdl = self.avgdl or 1.0
@@ -311,8 +389,28 @@ class LocalEngine:
                 read[tok] = self._read_postings(tok)
         if not read:
             return []
-        uniq = np.unique(np.concatenate([r[0] for r in read.values()]))
-        at = {tok: np.searchsorted(uniq, r[0]) for tok, r in read.items()}
+        # Window ids are the DISTINCT tokens: a repeated token's copies
+        # share every position, so the minimal window over them equals
+        # the one over all nt ids that the Spark engine computes.
+        distinct = list(dict.fromkeys(tokens))
+        if len(read) == 1:  # one term's doc ids are sorted and unique
+            uniq = next(iter(read.values()))[0]
+            at = {tok: slice(None) for tok in read}
+        else:
+            # so is each term's run in cat: a stable argsort merges the
+            # runs, and a posting's hit doc is its run of equal ids
+            cat = np.concatenate([r[0] for r in read.values()])
+            by = np.argsort(cat, kind="stable")
+            merged = cat[by]
+            new_doc = np.empty(cat.size, dtype=bool)
+            new_doc[0] = True
+            np.not_equal(merged[1:], merged[:-1], out=new_doc[1:])
+            uniq = merged[new_doc]
+            hit = np.empty(cat.size, dtype=np.int64)
+            hit[by] = np.cumsum(new_doc) - 1
+            held = np.bincount(hit, minlength=uniq.size)  # distinct terms per doc
+            ends = np.cumsum([r[0].size for r in read.values()])
+            at = dict(zip(read, np.split(hit, ends[:-1])))
         m = uniq.size
         scores = np.zeros(m, dtype=np.float64)
         dl_arr = np.ones(m, dtype=np.int64)
@@ -331,29 +429,23 @@ class LocalEngine:
             )
             scores[at[tok]] += bm
             dl_arr[at[tok]] = dls
-        # Window ids are the DISTINCT tokens: a repeated token's copies
-        # share every position, so the minimal window over them equals
-        # the one over all nt ids that the Spark engine computes, and the
-        # pair arrays stay bounded by the index, not by the query length.
-        # A token without postings keeps an id, so no window covers.
-        wid = {t: i for i, t in enumerate(dict.fromkeys(tokens))}
-        pair_doc, pair_pos, pair_qid = [], [], []
-        for tok, (_, tfs, _, flat) in read.items():
-            pair_doc.append(np.repeat(at[tok], tfs))
-            pair_pos.append(flat)
-            pair_qid.append(np.full(flat.size, wid[tok], dtype=np.int64))
-        pdoc = np.concatenate(pair_doc)
-        ppos = np.concatenate(pair_pos)
-        pqid = np.concatenate(pair_qid)
-        order = np.argsort(pdoc, kind="stable")
-        w = min_windows_batch(
-            ppos[order], pqid[order], np.bincount(pdoc, minlength=m), len(wid)
-        )
+        bm_norm = BM25_SCORE_MULTIPLIER * (scores / dl_arr)
         nt = len(tokens)
-        final = WINDOW_SCORE_MULTIPLIER * (nt / w) + BM25_SCORE_MULTIPLIER * (
-            scores / dl_arr
-        )
-        top = np.lexsort((uniq, -final))[:k]
+        w = 1 if len(distinct) == 1 else U32_MAX
+        final = WINDOW_SCORE_MULTIPLIER * (nt / w) + bm_norm
+        if len(distinct) > 1 and len(read) == len(distinct):
+            conj = np.flatnonzero(held == len(distinct))
+            if conj.size:
+                # per distinct term, in window-id order: its postings and
+                # the posting of each conjunction doc (both in doc order)
+                terms = [(read[t], np.flatnonzero(held[at[t]] == len(distinct))) for t in distinct]
+                _window_conjunction(final, bm_norm, conj, terms, nt, k)
+        if m > k:  # the k-th best and its ties, then their exact order
+            cut = np.partition(final, m - k)[m - k]
+            cand = np.flatnonzero(final >= cut)
+        else:
+            cand = np.arange(m)
+        top = cand[np.lexsort((uniq[cand], -final[cand]))[:k]]
         return [
             (d, self.urls[d], s)
             for d, s in zip(uniq[top].tolist(), final[top].tolist())

@@ -154,15 +154,30 @@ def min_windows_batch(pos, qid, doc_sizes, num_tokens: int, max_cells=None):
     count (sum == len(pos)). Returns one window per doc (U32_MAX when
     not covering). Same quantity as :func:`min_window` per doc.
 
-    Method: one global lexsort by (doc, pos, qid), then the
-    per-right-endpoint formulation (the minimal covering window ending
-    at pair i starts at the min over ids of their last occurrence
-    at-or-before i; the answer is the min over i) with a leak-guard —
-    M[q, i] holds the GLOBAL index of the last occurrence of token q
-    at-or-before i via a maximum.accumulate along the whole batch; an
-    occurrence is only valid for doc d if the index falls inside d's
-    segment (>= the doc's start), which exactly cancels the cross-doc
-    leakage of the global accumulate.
+    One global lexsort by (doc, pos, qid), then
+    :func:`min_windows_sorted`. qid is a sort key because a caller may
+    give two ids the same position (the Spark UDF numbers a repeated
+    query token once per copy)."""
+    import numpy as np
+
+    doc_sizes = np.asarray(doc_sizes, dtype=np.int64)
+    doc_idx = np.repeat(np.arange(len(doc_sizes), dtype=np.int64), doc_sizes)
+    order = np.lexsort((qid, pos, doc_idx))
+    return min_windows_sorted(pos[order], qid[order], doc_sizes, num_tokens, max_cells)
+
+
+def min_windows_sorted(pos, qid, doc_sizes, num_tokens: int, max_cells=None):
+    """The core of :func:`min_windows_batch`, over pairs already sorted
+    doc-major and by position within each doc.
+
+    The per-right-endpoint formulation (the minimal covering window
+    ending at pair i starts at the min over ids of their last
+    occurrence at-or-before i; the answer is the min over i) with a
+    leak-guard — M[q, i] holds the GLOBAL index of the last occurrence
+    of token q at-or-before i via a maximum.accumulate along the whole
+    batch; an occurrence is only valid for doc d if the index falls
+    inside d's segment (>= the doc's start), which exactly cancels the
+    cross-doc leakage of the global accumulate.
 
     The last-seen matrix is built in column chunks of at most
     ``max_cells`` int64 cells (default :data:`_BATCH_MATRIX_CELLS`),
@@ -176,12 +191,9 @@ def min_windows_batch(pos, qid, doc_sizes, num_tokens: int, max_cells=None):
     if L == 0:
         return np.full(n_docs, U32_MAX, dtype=np.int64)
     doc_sizes = np.asarray(doc_sizes, dtype=np.int64)
-    doc_idx = np.repeat(np.arange(n_docs, dtype=np.int64), doc_sizes)
-    order = np.lexsort((qid, pos, doc_idx))
-    pos_s, qid_s = pos[order], qid[order]
     starts = np.zeros(n_docs, dtype=np.int64)
     np.cumsum(doc_sizes[:-1], out=starts[1:])
-    start_of = np.repeat(starts, doc_sizes)  # doc-major order survives the sort
+    start_of = np.repeat(starts, doc_sizes)
     step = max(1, (max_cells or _BATCH_MATRIX_CELLS) // num_tokens - 1)
     m = np.empty(L, dtype=np.int64)
     last = np.full(num_tokens, -1, dtype=np.int64)
@@ -189,13 +201,13 @@ def min_windows_batch(pos, qid, doc_sizes, num_tokens: int, max_cells=None):
         hi = min(lo + step, L)
         M = np.full((num_tokens, hi - lo + 1), -1, dtype=np.int64)
         M[:, 0] = last
-        M[qid_s[lo:hi], np.arange(1, hi - lo + 1)] = np.arange(lo, hi)
+        M[qid[lo:hi], np.arange(1, hi - lo + 1)] = np.arange(lo, hi)
         np.maximum.accumulate(M, axis=1, out=M)
         m[lo:hi] = M[:, 1:].min(axis=0)
         last = M[:, -1].copy()
     valid = m >= start_of
     win = np.full(L, U32_MAX, dtype=np.int64)
-    win[valid] = pos_s[valid] - pos_s[m[valid]] + 1
+    win[valid] = pos[valid] - pos[m[valid]] + 1
     # reduceat over nonempty docs only (an empty doc's start index can
     # equal L or its successor's start, both illegal for reduceat);
     # consecutive nonempty starts span exactly one doc's elements since

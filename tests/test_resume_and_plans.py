@@ -328,3 +328,52 @@ def test_global_rank_plan_has_no_join_or_window(spark):
     finally:
         for p in persists:
             p.unpersist(blocking=False)
+
+
+def _subtrees(plan: str, node: str) -> list[str]:
+    """The text of each subtree of ``plan`` rooted at a line holding
+    ``node``: the lines below it that are nested deeper."""
+
+    def depth(line):
+        return len(line) - len(line.lstrip(" :+-"))
+
+    lines = plan.splitlines()
+    out = []
+    for i, line in enumerate(lines):
+        if node in line:
+            d, sub = depth(line), []
+            for below in lines[i + 1 :]:
+                if depth(below) <= d:
+                    break
+                sub.append(below)
+            out.append("\n".join(sub))
+    return out
+
+
+@pytest.fixture(scope="module")
+def boolean_builds(spark, tmp_path_factory):
+    """A 3k-doc corpus built at the default block_span (one block) and
+    at block_span=64 (47 blocks)."""
+    wt = synthesize_webtext(spark, 3000, seed=5, vocab_size=20000, mean_len=120)
+    out = {}
+    for span in (None, 64):
+        path = str(tmp_path_factory.mktemp(f"idx_bool_{span or 'default'}"))
+        build_index(spark, wt, path, **({"block_span": span} if span else {}))
+        out[span] = SearchIndex.load(spark, path)
+    return out
+
+
+@pytest.mark.parametrize("span", [None, 64])
+def test_boolean_url_join_never_broadcasts_the_tokens_scan(boolean_builds, span):
+    """The url join must not broadcast the whole (doc_id, url) tokens
+    projection: the hits side is the one sized by the answer. Checked
+    in the executed plan, before and after adaptive execution."""
+    idx = boolean_builds[span]
+    assert int(idx.stats["block_span"]) == (span or 4096)
+    for q in ("other0 AND the", "the AND NOT other0", "the OR other0"):
+        df = boolean_query(idx, q)
+        assert df.collect()
+        plan = _plan(df)
+        assert "/tokens]" in plan, plan
+        for sub in _subtrees(plan, "BroadcastExchange"):
+            assert "/tokens]" not in sub, (q, plan)

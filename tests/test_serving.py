@@ -225,3 +225,195 @@ def test_load_rejects_a_term_split_across_files(engines, tmp_path):
     )
     with pytest.raises(ValueError, match=f"term '{row['term']}'"):
         LocalEngine.load(copy)
+
+
+def _full_kernel(local, query, k):
+    """The answer of windowing EVERY hit doc: one min_windows_batch over
+    all (position, distinct-token id) pairs, as the engine scored before
+    it learned to skip windows. The closed form, the conjunction filter
+    and the early stop must equal it in doc ids and score bits."""
+    import numpy as np
+
+    from search_rs_spark.functions.tokenizer import tokenize, tokenize_and_stem
+    from search_rs_spark.operators import window_score as ws
+
+    toks = tokenize_and_stem(query) if local.stem else tokenize(query)
+    tokens = [c for c in map(local.vocab.spellcheck_term, toks) if c is not None]
+    n, avgdl = float(local.num_docs), local.avgdl or 1.0
+    read, idfs = {}, []
+    for tok in tokens:
+        if tok in local.rows:
+            df = local.vocab.get(tok)[1]
+            idfs.append((tok, math.log((n - df + 0.5) / (df + 0.5) + 1.0)))
+            read.setdefault(tok, local._read_postings(tok))
+    if not read:
+        return []
+    uniq = np.unique(np.concatenate([r[0] for r in read.values()]))
+    scores, dl = np.zeros(uniq.size), np.ones(uniq.size, dtype=np.int64)
+    for tok, idf in idfs:
+        docs, tfs, dls, _ = read[tok]
+        at = np.searchsorted(uniq, docs)
+        tf, dlf = tfs.astype(np.float64), dls.astype(np.float64)
+        scores[at] += (
+            idf
+            * (tf * (ws.BM25_K1 + 1.0))
+            / (tf + ws.BM25_K1 * ((1.0 - ws.BM25_B) + (ws.BM25_B * dlf) / avgdl))
+        )
+        dl[at] = dls
+    wid = {t: i for i, t in enumerate(dict.fromkeys(tokens))}
+    pdoc, ppos, pqid = [], [], []
+    for tok, (docs, tfs, _, flat) in read.items():
+        pdoc.append(np.repeat(np.searchsorted(uniq, docs), tfs))
+        ppos.append(flat.astype(np.int64))
+        pqid.append(np.full(flat.size, wid[tok], dtype=np.int64))
+    pdoc = np.concatenate(pdoc)
+    order = np.argsort(pdoc, kind="stable")
+    w = ws.min_windows_batch(
+        np.concatenate(ppos)[order],
+        np.concatenate(pqid)[order],
+        np.bincount(pdoc, minlength=uniq.size),
+        len(wid),
+    )
+    final = ws.WINDOW_SCORE_MULTIPLIER * (len(tokens) / w) + ws.BM25_SCORE_MULTIPLIER * (
+        scores / dl
+    )
+    top = np.lexsort((uniq, -final))[:k]
+    return [(d, local.urls[d], s) for d, s in zip(uniq[top].tolist(), final[top].tolist())]
+
+
+def _hex(rows):
+    return [(d, u, s.hex()) for d, u, s in rows]
+
+
+@pytest.fixture
+def core_calls(monkeypatch):
+    """Spy on the window core the engine calls: one entry per call, the
+    number of docs it windowed."""
+    from search_rs_spark.operators import serving
+
+    calls = []
+    core = serving.min_windows_sorted
+
+    def spy(pos, qid, doc_sizes, num_tokens, max_cells=None):
+        calls.append(len(doc_sizes))
+        return core(pos, qid, doc_sizes, num_tokens, max_cells)
+
+    monkeypatch.setattr(serving, "min_windows_sorted", spy)
+    return calls
+
+
+@pytest.mark.parametrize("q", ["the", "the the", "time time time", "worlds"])
+def test_one_distinct_term_closed_form_equals_kernel(engines, core_calls, q):
+    """One distinct term (repeats included) scores ``3·(nt/1) + bm/dl``
+    with no window kernel, bit for bit what the kernel gives."""
+    _, local, _ = engines
+    for k in (5, 1000):
+        got = local.free_query(q, k)
+        assert got and _hex(got) == _hex(_full_kernel(local, q, k)), (q, k)
+    assert core_calls == []
+
+
+@pytest.mark.parametrize(
+    "q", ["the world of men", "the world time", "the the time", "world men world"]
+)
+@pytest.mark.parametrize("chunk", [None, 3])
+def test_conjunction_windows_equal_full_kernel(engines, core_calls, monkeypatch, q, chunk):
+    """Windowing only the docs that hold every distinct term equals
+    windowing every hit doc, for a small k and for a k past the hits,
+    in one chunk or in many 3-doc chunks."""
+    from search_rs_spark.operators import serving
+
+    _, local, _ = engines
+    if chunk:
+        monkeypatch.setattr(serving, "WINDOW_CHUNK_DOCS", chunk)
+    for k in (1, 10, 1000):
+        assert _hex(local.free_query(q, k)) == _hex(_full_kernel(local, q, k)), (q, k)
+    assert core_calls
+
+
+def test_token_without_postings_leaves_every_window_u32max(engines, core_calls):
+    """A spellchecked token with no postings row is a query id no doc
+    covers: every doc keeps window u32::MAX and the kernel never runs."""
+    import dataclasses
+
+    _, local, _ = engines
+    gone = dataclasses.replace(
+        local, rows={t: r for t, r in local.rows.items() if t != "world"}
+    )
+    got = gone.free_query("the world", 20)
+    assert len(got) == 20 and _hex(got) == _hex(_full_kernel(gone, "the world", 20))
+    assert core_calls == []
+
+
+def _webtext(spark, texts, host):
+    from search_rs_spark.sources.webtext import WEBTEXT_SCHEMA, _EPOCH, wrap_html
+
+    rows = [
+        (f"https://{host}/{i:06d}.txt", _EPOCH, wrap_html(t), t, "en")
+        for i, t in enumerate(texts)
+    ]
+    return spark.createDataFrame(rows, schema=WEBTEXT_SCHEMA)
+
+
+@pytest.fixture(scope="module")
+def stop_index(spark, tmp_path_factory):
+    """42 docs hold both query terms: 40 long ones with the terms 31
+    positions apart, and two short ones (ids 20 and 30) with the terms
+    adjacent, whose bounds and exact scores lead. 12 more docs hold one
+    term."""
+    pads = " ".join(f"pad{i}" for i in range(30))
+    near = "alpha bravo pad0 pad1 pad2 pad3"
+    texts = [f"alpha {pads} bravo"] * 42
+    texts[20] = texts[30] = near
+    texts += [f"alpha {pads}"] * 6 + [f"bravo {pads}"] * 6
+    out = str(tmp_path_factory.mktemp("idx_serve_stop"))
+    build_index(spark, _webtext(spark, texts, "s.local"), out, min_f=0, max_p=1.0)
+    return SearchIndex.load(spark, out), LocalEngine.load(out)
+
+
+def test_early_stop_fires_and_equals_spark(stop_index, core_calls, monkeypatch):
+    """With 4-doc chunks, the first chunk scores both near docs, and the
+    next bound (a far doc's) is below the k-th score: the stop fires
+    after 4 of the 42 conjunction docs, and the answer is Spark's."""
+    from search_rs_spark.operators import serving
+
+    idx, local = stop_index
+    monkeypatch.setattr(serving, "WINDOW_CHUNK_DOCS", 4)
+    got = local.free_query("alpha bravo", 2)
+    assert core_calls == [4]
+    assert [d for d, _, _ in got] == [20, 30]
+    assert _hex(got) == _hex(_full_kernel(local, "alpha bravo", 2))
+    s = [(r["doc_id"], r["url"], r["score"]) for r in free_query(idx, "alpha bravo", 2).collect()]
+    assert [(d, u) for d, u, _ in s] == [(d, u) for d, u, _ in got]
+    for (_, _, ss), (_, _, ls) in zip(s, got):
+        assert math.isclose(ss, ls, rel_tol=1e-9)
+
+
+@pytest.fixture(scope="module")
+def tie_engine(spark, tmp_path_factory):
+    """tests/test_wand.py::tie_index's corpus: identical docs 0, 4 and 8
+    tie on the top score; docs 5 and 9 hold one term three times."""
+    x = "alpha bravo " + " ".join(f"pad{i}" for i in range(24))
+    c, f = "alpha alpha alpha", "zulu yankee"
+    texts = [x, f, f, f] + [x, c, f, f] * 2 + [f] * 24
+    out = str(tmp_path_factory.mktemp("idx_serve_tie"))
+    build_index(spark, _webtext(spark, texts, "t.local"), out, min_f=0, max_p=1.0)
+    return SearchIndex.load(spark, out), LocalEngine.load(out)
+
+
+@pytest.mark.parametrize("k", [1, 2])
+def test_ties_at_theta_are_scored(tie_engine, core_calls, monkeypatch, k):
+    """One-doc chunks put a stop check between tied docs: a bound equal
+    to theta is still scored, and the lowest doc ids win the tie, as in
+    Spark's answer."""
+    from search_rs_spark.operators import serving
+
+    idx, local = tie_engine
+    monkeypatch.setattr(serving, "WINDOW_CHUNK_DOCS", 1)
+    got = local.free_query("alpha bravo", k)
+    assert [d for d, _, _ in got] == [0, 4][:k]
+    assert len({s for _, _, s in got}) == 1
+    assert core_calls == [1, 1, 1]
+    assert _hex(got) == _hex(_full_kernel(local, "alpha bravo", k))
+    s = [(r["doc_id"], r["url"]) for r in free_query(idx, "alpha bravo", k).collect()]
+    assert s == [(d, u) for d, u, _ in got]

@@ -136,7 +136,8 @@ def test_min_windows_batch_equals_loop():
     random multi-doc batches, including non-covering docs, absent
     tokens, duplicate positions, and empty docs — also when a small
     matrix cap splits the accumulate into many column chunks, down to
-    one column each."""
+    one column each. Its core, given the same pairs already sorted
+    doc-major by (pos, qid), gives the same windows."""
     import random
 
     import numpy as np
@@ -145,13 +146,14 @@ def test_min_windows_batch_equals_loop():
         U32_MAX,
         min_window,
         min_windows_batch,
+        min_windows_sorted,
     )
 
     rng = random.Random(4242)
     for trial in range(60):
         nt = rng.randint(1, 9)
         n_docs = rng.randint(1, 40)
-        pos_l, qid_l, sizes, expected = [], [], [], []
+        pos_l, qid_l, sizes, expected, sorted_l = [], [], [], [], []
         for _ in range(n_docs):
             pairs = []
             for q in range(nt):
@@ -163,10 +165,19 @@ def test_min_windows_batch_equals_loop():
             expected.append(min_window(sorted(pairs), nt))
             pos_l.extend(p for p, _ in pairs)
             qid_l.extend(q for _, q in pairs)
+            sorted_l.extend(sorted(pairs))
         for max_cells in (None, 40, 1):
             got = min_windows_batch(
                 np.asarray(pos_l, dtype=np.int64),
                 np.asarray(qid_l, dtype=np.int64),
+                np.asarray(sizes, dtype=np.int64),
+                nt,
+                max_cells,
+            )
+            assert list(got) == expected, (trial, nt, max_cells, list(got), expected)
+            got = min_windows_sorted(
+                np.asarray([p for p, _ in sorted_l], dtype=np.int64),
+                np.asarray([q for _, q in sorted_l], dtype=np.int64),
                 np.asarray(sizes, dtype=np.int64),
                 nt,
                 max_cells,
