@@ -149,29 +149,26 @@ def bind_terms(structs: dict[str, list[str]], fields: str, where: str = "") -> s
     )
 
 
-def _hits_sql(index, terms, blocks, hint: str = "") -> tuple[str, dict]:
-    """-> (SELECT text, relations) of :func:`scored_hits`."""
+def _hits_sql(index, terms, blocks, hint: str = "") -> str:
+    """-> the SELECT text of :func:`scored_hits` (over ``{postings}``)."""
     structs: dict[str, list[str]] = {}
     for qid, t, df in terms:
         structs.setdefault(t, []).append(
             f"struct({int(qid)}, {sql_double(index.idf(df))})"
         )
-    rels = {"postings": index.postings}
-    if isinstance(blocks, list):
-        ids = ", ".join(str(int(b)) for b in blocks)
-        where = f" AND block_id IN ({ids})" if blocks else " AND FALSE"
-    elif blocks is not None:
-        where = " AND block_id IN (SELECT block_id FROM {blocks})"
-        rels["blocks"] = blocks
-    else:
+    if blocks is None:
         where = ""
+    elif blocks:
+        where = f" AND block_id IN ({', '.join(str(int(b)) for b in blocks)})"
+    else:
+        where = " AND FALSE"
     avgdl = sql_double(index.avgdl or 1.0)
     k1, b = sql_double(BM25_K1), sql_double(BM25_B)
     bm = (
         f"idf * (tf * {sql_double(BM25_K1 + 1.0)}) / "
         f"(tf + {k1} * ({sql_double(1.0 - BM25_B)} + {b} * dl / {avgdl}))"
     )
-    text = (
+    return (
         f"SELECT {hint}qid, idf, doc_id, tf, dl, positions, {bm} AS bm FROM ("
         "SELECT qid, idf, doc_id, CAST(size(pos) AS DOUBLE) AS tf, "
         "CAST(dl_i AS DOUBLE) AS dl, pos AS positions "
@@ -179,39 +176,30 @@ def _hits_sql(index, terms, blocks, hint: str = "") -> tuple[str, dict]:
         "LATERAL VIEW inline(arrays_zip(doc_ids, dls, positions)) p "
         "AS doc_id, dl_i, pos)"
     )
-    return text, rels
 
 
 def scored_hits(
     index,
     terms: list[tuple[int, str, int]],
-    blocks: "DataFrame | list[int] | None" = None,
+    blocks: "list[int] | None" = None,
 ) -> DataFrame:
     """Per-(doc, qid) exploded hits with bm25 contribution columns.
 
     ``blocks`` restricts to the given posting blocks BEFORE the arrays
-    are exploded (block-max WAND's pruned exact pass). Two forms:
-
-    - a bounded ``list[int]`` of block ids becomes a literal
-      ``block_id IN (...)`` folded into the scan predicate: the
-      postings files are sorted by (term, block_id) within partitions,
-      so parquet row-group stats + the pushed In filter skip the pruned
-      blocks' row groups — the positions arrays of skipped blocks are
-      never read or decompressed (measured 2x vs the semi-join on a
-      warm 10M-doc scan, more cold). Callers must bound the list
-      (wand.py caps at MAX_LITERAL_BLOCKS) — an unbounded literal
-      predicate blows up plan compile time.
-    - a block_id DataFrame becomes an ``IN (SELECT block_id ...)``
-      subquery, planned as a LEFT SEMI join — the fallback when the
-      surviving-block set is too large to inline (it prunes the
-      explode, not the scan).
+    are exploded (block-max WAND's pruned exact passes): the ids become
+    a literal ``block_id IN (...)`` folded into the scan predicate. The
+    postings files are sorted by (term, block_id) within partitions, so
+    parquet row-group and page stats plus the pushed In filter skip the
+    pruned blocks — their positions arrays are never read or
+    decompressed. Callers bound the list (wand.py caps it at
+    MAX_LITERAL_BLOCKS): an unbounded literal predicate blows up plan
+    compile time.
     """
-    text, rels = _hits_sql(index, terms, blocks)
-    return index.spark.sql(text, **rels)
+    return index.spark.sql(_hits_sql(index, terms, blocks), postings=index.postings)
 
 
-def _candidates_sql(index, terms, blocks) -> tuple[str, dict]:
-    """-> (SELECT text, relations) of :func:`score_candidates`."""
+def _candidates_sql(index, terms, blocks) -> str:
+    """-> the SELECT text of :func:`score_candidates` (over ``{postings}``)."""
     num_tokens = len(terms)
     dfs = {t: df for _, t, df in terms}
     # the multi-term aggregate buffers its partition's (qid, positions)
@@ -227,12 +215,12 @@ def _candidates_sql(index, terms, blocks) -> tuple[str, dict]:
     conf_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     parts = postings_shuffle_partitions(sum(df for _, _, df in terms), conf_parts)
     hint = f"/*+ REPARTITION({parts}, doc_id, dl) */ " if parts > conf_parts else ""
-    hits, rels = _hits_sql(index, terms, blocks, hint)
+    hits = _hits_sql(index, terms, blocks, hint)
     bm_norm = f"bm_sum * {sql_double(BM25_SCORE_MULTIPLIER)} / dl"
     if len(dfs) == 1:
         agg = f"SELECT doc_id, dl, sum(bm) AS bm_sum FROM ({hits}) GROUP BY doc_id, dl"
         score = f"{sql_double(WINDOW_SCORE_MULTIPLIER * num_tokens)} + {bm_norm}"
-        return f"SELECT doc_id, {score} AS score FROM ({agg})", rels
+        return f"SELECT doc_id, {score} AS score FROM ({agg})"
     # two collect_lists in one aggregate see rows in the same order, so
     # qids[i] owns ps[i]; the position arrays ride the shuffle unexploded
     agg = (
@@ -254,13 +242,13 @@ def _candidates_sql(index, terms, blocks) -> tuple[str, dict]:
         f"CASE WHEN size(qids) = {num_tokens} THEN {window} ELSE {eps} END"
         f" + {bm_norm}"
     )
-    return f"SELECT doc_id, {score} AS score FROM ({agg})", rels
+    return f"SELECT doc_id, {score} AS score FROM ({agg})"
 
 
 def score_candidates(
     index,
     terms: list[tuple[int, str, int]],
-    blocks: "DataFrame | list[int] | None" = None,
+    blocks: "list[int] | None" = None,
 ) -> DataFrame:
     """-> (doc_id, score): exact combined scores of every doc holding a
     query term (restricted to ``blocks``, see :func:`scored_hits`).
@@ -276,24 +264,25 @@ def score_candidates(
     (``3*nt/window + bm_sum/dl``, the HOF or, past
     BATCH_WINDOW_MIN_DOCS, the batch UDF — bit-identical).
     """
-    text, rels = _candidates_sql(index, terms, blocks)
-    return index.spark.sql(text, **rels)
+    return index.spark.sql(
+        _candidates_sql(index, terms, blocks), postings=index.postings
+    )
 
 
 def top_k(
     index,
     terms: list[tuple[int, str, int]],
     k: int,
-    blocks: "DataFrame | list[int] | None" = None,
+    blocks: "list[int] | None" = None,
 ) -> DataFrame:
     """-> lazy (doc_id, score): the k winners of :func:`score_candidates`
     (restricted to ``blocks``, see :func:`scored_hits`), score-desc /
     doc_id-asc, as one statement whose top-k is a distributed bounded
     heap (TakeOrderedAndProject)."""
-    scored, rels = _candidates_sql(index, terms, blocks)
+    scored = _candidates_sql(index, terms, blocks)
     return index.spark.sql(
         f"SELECT doc_id, score FROM ({scored}) ORDER BY score DESC, doc_id LIMIT {int(k)}",
-        **rels,
+        postings=index.postings,
     )
 
 

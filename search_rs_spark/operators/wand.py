@@ -25,8 +25,9 @@ of DISTINCT terms, and the true window component reaches
 distinct). A flat 3.0 would under-bound duplicate-token queries and
 make pruning unsafe.
 
-Exact-top-k protocol (two bounded passes; no full-metadata collect —
-the driver holds at most a bounded set of block ids):
+Exact-top-k protocol (one bounded span collect, then two bounded
+passes; no full-metadata collect — the driver holds at most
+COVERAGE_FACTOR * k + MAX_LITERAL_BLOCKS + 1 span rows):
 1. coverage: the highest-ub spans, taken in ub order until they hold
    COVERAGE_FACTOR * k docs of their rarest present query term (a head
    term's docs would drag theta down to head-only scores), are scored
@@ -34,11 +35,11 @@ the driver holds at most a bounded set of block ids):
    the k-th best score is theta;
 2. every other span whose ub clears theta (see :func:`theta_floor`) is
    scored the same way, and the two top-ks merge.
-   Block-id sets up to MAX_LITERAL_BLOCKS (the coverage set and the
-   survivors alike) are inlined as a literal ``block_id IN`` scan
-   filter (parquet page and row-group stats skip the pruned blocks'
-   array columns entirely — the IO win pruning exists for); larger
-   sets stay a broadcast semi join (prunes the explode, not the scan).
+   Both block-id sets (the coverage set and the survivors) are inlined
+   as a literal ``block_id IN`` scan filter (parquet page and row-group
+   stats skip the pruned blocks' array columns entirely — the IO win
+   pruning exists for). A set over MAX_LITERAL_BLOCKS hands the query
+   to the exhaustive scorer instead.
 
 Safety: every doc's true score <= its span's ub, so a span with
 ub < theta cannot contribute a doc at or above the k-th best
@@ -79,20 +80,16 @@ from .window_score import U32_MAX, WINDOW_SCORE_MULTIPLIER
 
 COVERAGE_FACTOR = 4
 
-# cost gates (see free_query_wand): the block protocol only runs when
-# the span pool is big enough that pruning CAN pay (pre-gates, zero-job
-# from the dfs and per-term block counts), and is abandoned when theta
-# leaves too many spans alive for it to pay (post-theta gate, one
-# aggregate over the slim persisted span-ub table, run only when the
-# survivors exceed MAX_LITERAL_BLOCKS).
-SPAN_GATE_FACTOR = 2  # pre-gate: need > this x coverage target spans
-BLANKET_FRACTION = 0.95  # pre-gate: bail when >= this holds all terms
-SURVIVOR_BAILOUT_FRACTION = 0.5  # post-gate: bail when >= this survives
+# pre-gates (see free_query_wand, zero-job from the dfs and per-term
+# block counts): the block protocol only runs when the span pool is big
+# enough that pruning CAN pay.
+SPAN_GATE_FACTOR = 2  # need > this x coverage target spans
+BLANKET_FRACTION = 0.95  # bail when >= this holds all terms
 
 # pre-gate (absolute volume, zero-job): the exhaustive scorer explodes
 # exactly sum(df over distinct query terms) posting rows in ONE job
-# chain; the protocol's two bounded passes + the post-theta aggregate
-# are a handful of extra jobs of fixed structure. Below this volume the
+# chain; the protocol's span collect and two bounded passes are a
+# handful of extra jobs of fixed structure. Below this volume the
 # single pass is cheaper than the structure even when pruning would
 # skip 90% of spans (measured: 1M-doc planted-rare-term corpus, sum_df
 # ~= 1M, exhaustive 3.4-4.1 s vs protocol 7.3 s despite ~10%
@@ -102,9 +99,10 @@ SURVIVOR_BAILOUT_FRACTION = 0.5  # post-gate: bail when >= this survives
 # is-there-enough-work-to-prune.
 MIN_PRUNABLE_POSTINGS = 4_000_000
 
-# block restrictions at or under this many ids inline as a literal
-# (row-group-prunable) scan filter; larger sets fall back to the
-# broadcast semi-join (see scored_hits). Bounds plan-compile cost.
+# block restrictions inline as a literal (row-group-prunable) scan
+# filter of at most this many ids (see scored_hits); a larger coverage
+# set or survivor set hands the query to the exhaustive scorer. Bounds
+# plan-compile cost and the span rows collected.
 MAX_LITERAL_BLOCKS = 2048
 
 # relative margin under theta that a span's ub may sit and still be
@@ -188,15 +186,16 @@ def free_query_wand(
       protocol by their real block counts. Both bounds are exact, so
       neither bails where the measured span table would have kept the
       protocol; the cases they cannot decide run it.
-    - post-theta, only past MAX_LITERAL_BLOCKS survivors: pass 2 is
-      then a semi join that reads every array, so one aggregate over
-      the persisted span-ub table bails when >= SURVIVOR_BAILOUT_FRACTION
-      of spans have ub >= theta. Under the cap pass 2 is a literal
-      ``block_id IN`` scan that reads a subset of what the exhaustive
-      scorer would, so it never costs more than bailing.
 
-    ``force_protocol=True`` skips every gate (tests pin the protocol's
-    rank-identity directly).
+    Past the gates, one collect gathers the spans in ub order (at most
+    ``COVERAGE_FACTOR * k + MAX_LITERAL_BLOCKS + 1`` rows); the coverage
+    prefix and the pass-2 survivors are cut from them on the driver.
+    Either set over MAX_LITERAL_BLOCKS hands the query to the exhaustive
+    scorer; under the cap each pass is a literal ``block_id IN`` scan
+    that reads a subset of what the exhaustive scorer would.
+
+    ``force_protocol=True`` skips the pre-gates (tests pin the
+    protocol's rank-identity directly); the literal cap still holds.
     """
     terms = resolve_query_terms(index, query)
     if not terms:
@@ -219,65 +218,44 @@ def free_query_wand(
         ):
             return free_query(index, query, k)
 
-    span_ub = span_upper_bounds(index, terms).persist()
-    try:
-        # ---- pass 1: the coverage set ------------------------------------
-        # every span covers >= 1 doc, so the top `target` spans by ub
-        # reach the target. Inside the try: the collect is a Spark job,
-        # and a failure here must still unpersist span_ub.
-        first_blocks: list[int] = []
-        covered = 0
-        for r in (
-            span_ub.orderBy(F.desc("ub"), F.asc("block_id"))
-            .select("block_id", "cover")
-            .limit(target)
-            .collect()
-        ):
-            if covered >= target:
-                break
-            first_blocks.append(int(r["block_id"]))
-            covered += int(r["cover"])
-        first_blocks.sort()
-        # past MAX_LITERAL_BLOCKS (k > 512 at the default constants) the
-        # ids become a driver-local table: a broadcast semi join for the
-        # scan, an anti join for the pass-2 exclusion
-        first: "list[int] | DataFrame" = first_blocks
-        if len(first_blocks) > MAX_LITERAL_BLOCKS:
-            first = index.spark.createDataFrame(
-                [(b,) for b in first_blocks], "block_id long"
-            )
-        first_top = top_k(index, terms, k, first).collect()
-        theta = first_top[-1]["score"] if len(first_top) >= k else float("-inf")
-        keep = F.col("ub") >= F.lit(theta_floor(theta))
+    # one collect: the spans in ub order, enough of them for the coverage
+    # prefix (each span covers >= 1 doc, so at most `target` rows) and
+    # for every survivor the literal pass 2 can take, plus one more to
+    # tell a full survivor list from a cut one
+    spans = [
+        (int(r["block_id"]), r["ub"], int(r["cover"]))
+        for r in span_upper_bounds(index, terms)
+        .orderBy(F.desc("ub"), F.asc("block_id"))
+        .limit(target + MAX_LITERAL_BLOCKS + 1)
+        .collect()
+    ]
 
-        # ---- pass 2: every other span that could still alter the top-k ----
-        # The two passes score disjoint span sets exactly, so the merged
-        # top-k of their top-ks is the exact top-k.
-        remaining = span_ub.filter(keep)
-        if isinstance(first, list):
-            remaining = remaining.filter(~F.col("block_id").isin(first))
-        else:
-            remaining = remaining.join(F.broadcast(first), "block_id", "left_anti")
-        remaining = remaining.select("block_id")
-        # the limit bounds the driver contact; an empty survivor set
-        # skips pass 2's job entirely
-        surv = remaining.limit(MAX_LITERAL_BLOCKS + 1).collect()
-        second: "list[int] | DataFrame" = sorted(int(r["block_id"]) for r in surv)
-        if len(surv) > MAX_LITERAL_BLOCKS:
-            # only the semi join (it reads every array) can cost more
-            # than the exhaustive scorer
-            if not force_protocol:
-                gate = span_ub.agg(
-                    F.count(F.lit(1)).alias("n_spans"),
-                    F.count_if(keep).alias("survivors"),
-                ).collect()[0]
-                if gate["survivors"] >= SURVIVOR_BAILOUT_FRACTION * gate["n_spans"]:
-                    return free_query(index, query, k)
-            second = remaining
-        second_top = top_k(index, terms, k, second).collect() if surv else []
-    finally:
-        span_ub.unpersist(blocking=False)
+    # ---- pass 1: the coverage set ----------------------------------------
+    n_first = covered = 0
+    while n_first < len(spans) and covered < target:
+        covered += spans[n_first][2]
+        n_first += 1
+    if n_first > MAX_LITERAL_BLOCKS:
+        return free_query(index, query, k)
+    first = sorted(b for b, _, _ in spans[:n_first])
+    first_top = top_k(index, terms, k, first).collect()
+    theta = first_top[-1]["score"] if len(first_top) >= k else float("-inf")
 
+    # ---- pass 2: every other span that could still alter the top-k ------
+    # the rows are in ub order, so the survivors are the rows after the
+    # prefix down to the first one under the floor; if the collect's
+    # limit cut them off, there are more than MAX_LITERAL_BLOCKS
+    floor = theta_floor(theta)
+    second = []
+    for b, ub, _ in spans[n_first:]:
+        if ub < floor:
+            break
+        second.append(b)
+    if len(second) > MAX_LITERAL_BLOCKS:
+        return free_query(index, query, k)
+    # the two passes score disjoint span sets exactly, so the merged
+    # top-k of their top-ks is the exact top-k; no survivor, no job
+    second_top = top_k(index, terms, k, sorted(second)).collect() if second else []
     merged = sorted(
         list(first_top) + list(second_top),
         key=lambda r: (-r["score"], r["doc_id"]),

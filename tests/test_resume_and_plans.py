@@ -377,3 +377,63 @@ def test_boolean_url_join_never_broadcasts_the_tokens_scan(boolean_builds, span)
         assert "/tokens]" in plan, plan
         for sub in _subtrees(plan, "BroadcastExchange"):
             assert "/tokens]" not in sub, (q, plan)
+
+
+
+def _final_nodes(df) -> list:
+    """The JVM nodes of ``df``'s executed plan after adaptive execution:
+    query stages are entered, a cached relation's own plan is not (it
+    is not data that flows through this plan)."""
+    out, todo = [], [df._jdf.queryExecution().executedPlan()]
+    while todo:
+        node = todo.pop()
+        name = node.nodeName()
+        if name == "AdaptiveSparkPlan":
+            todo.append(node.executedPlan())
+            continue
+        if name.endswith("QueryStage"):
+            todo.append(node.plan())
+            continue
+        out.append(node)
+        kids = node.children()
+        todo.extend(kids.apply(i) for i in range(kids.size()))
+    return out
+
+
+@pytest.fixture(scope="module")
+def sf001_docs(spark):
+    return spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
+
+
+def test_exact_dedup_plan_has_no_join(sf001_docs):
+    """exact_dedup is one window pass over (doc_id, md5(text)): its
+    executed plan joins nothing."""
+    from search_rs_spark.operators.dedup import exact_dedup
+
+    df = exact_dedup(sf001_docs)
+    assert df.collect()
+    names = [n.nodeName() for n in _final_nodes(df)]
+    assert "Window" in names and not [n for n in names if "Join" in n], names
+
+
+def test_lsh_attaches_shingles_by_two_merge_joins(sf001_docs):
+    """minhash_lsh_pairs attaches the shingle sets to the candidate
+    pairs through exactly two sort-merge joins, and no broadcast
+    carries a shingle column (the semi join's broadcast holds
+    candidate ids only)."""
+    from search_rs_spark.operators.dedup import minhash_lsh_pairs
+
+    persists: list = []
+    df = minhash_lsh_pairs(sf001_docs, persist_tracker=persists)
+    try:
+        assert df.collect()
+        nodes = _final_nodes(df)
+    finally:
+        for p in persists:
+            p.unpersist(blocking=False)
+    names = [n.nodeName() for n in nodes]
+    assert names.count("SortMergeJoin") == 2, names
+    for n in nodes:
+        if n.nodeName() == "BroadcastExchange":
+            cols = [n.output().apply(i).name() for i in range(n.output().size())]
+            assert not {"shingles", "sh_a", "sh_b"} & set(cols), cols

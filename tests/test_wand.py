@@ -2,8 +2,8 @@
 its per-block upper bounds must dominate every true doc score (the
 safety invariant pruning rests on — including duplicate-token queries,
 where the window component can exceed 3.0), and its block protocol
-must stay distributed (bounded-literal or semi-join block
-restrictions, no full-metadata collect).
+must stay bounded (one span collect of bounded size, literal block_id
+restrictions, the exhaustive scorer past the literal cap).
 """
 
 import math
@@ -61,31 +61,45 @@ def test_wand_equals_exhaustive(wand_index, q, k):
         assert math.isclose(ws, es, rel_tol=1e-9, abs_tol=1e-12)
 
 
-def test_wand_pass1_over_literal_cap_uses_semijoin_and_stays_exact(
+def _spy_free_query(monkeypatch):
+    """-> the (query, k) list of calls WAND makes to free_query."""
+    from search_rs_spark.operators import wand as wand_mod
+
+    calls = []
+    real = wand_mod.free_query
+
+    def spy(index, query, k):
+        calls.append((query, k))
+        return real(index, query, k)
+
+    monkeypatch.setattr(wand_mod, "free_query", spy)
+    return calls
+
+
+def test_wand_coverage_over_literal_cap_hands_over_to_free_query(
     wand_index, monkeypatch
 ):
     """When the pass-1 coverage set exceeds MAX_LITERAL_BLOCKS (k > 512
-    at the default constants), the scan restriction must switch from an
-    inlined IN filter to a broadcast semi-join and the pass-2 exclusion
-    to an anti-join — with ranks unchanged. Pinned by shrinking the cap
-    below this corpus's coverage-set size."""
+    at the default constants), the forced protocol hands the query to
+    the exhaustive scorer: one free_query call, the same answer. Pinned
+    by shrinking the cap below this corpus's coverage-set size."""
     from search_rs_spark.operators import wand as wand_mod
 
     monkeypatch.setattr(wand_mod, "MAX_LITERAL_BLOCKS", 2)
+    calls = _spy_free_query(monkeypatch)
     q, k = "the world of people", 10
-    exact = [
-        (r["doc_id"], round(r["score"], 9))
-        for r in free_query(wand_index, q, k).collect()
-    ]
     wand = [
-        (r["doc_id"], round(r["score"], 9))
+        (r["doc_id"], r["score"].hex())
         for r in wand_mod.free_query_wand(
             wand_index, q, k, force_protocol=True
         ).collect()
     ]
-    assert [d for d, _ in wand] == [d for d, _ in exact]
-    for (_, ws), (_, es) in zip(wand, exact):
-        assert math.isclose(ws, es, rel_tol=1e-9, abs_tol=1e-12)
+    assert calls == [(q, k)]
+    exact = [
+        (r["doc_id"], r["score"].hex())
+        for r in free_query(wand_index, q, k).collect()
+    ]
+    assert wand == exact
 
 
 def test_wand_cost_gate_routes_small_span_pools_to_exhaustive(
@@ -352,32 +366,30 @@ def test_wand_duplicate_tokens_with_pruning_firing(dup_index):
 
 
 def test_wand_block_restriction_forms(dup_index):
-    """Two block-restriction forms, each with the right plan shape:
-    a DataFrame restriction must be a broadcast LEFT SEMI join with NO
-    literal block_id IN-list (the unbounded case — an arbitrarily large
-    literal predicate would blow up plan compile time), while a bounded
-    list restriction must fold into the scan as a literal filter (the
-    row-group-prunable fast path wand.py uses under MAX_LITERAL_BLOCKS)
-    and produce identical rows."""
+    """A block restriction folds into the scan as a literal filter (an
+    IN-list or INSET, no semi join) and keeps exactly the unrestricted
+    scores of the docs in those blocks."""
     from search_rs_spark.operators.bm25 import resolve_query_terms, score_candidates
 
     terms = resolve_query_terms(dup_index, DUP_QUERY)
-    blocks = span_upper_bounds(dup_index, terms).select("block_id")
-    df = score_candidates(dup_index, terms, blocks=blocks)
-    plan = df._jdf.queryExecution().optimizedPlan().toString()
-    assert not re.search(r"block_id#\d+L? IN \(", plan), plan[:4000]
-    assert re.search(r"Join LeftSemi, \(block_id#", plan), plan[:4000]
-
-    ids = sorted(int(r["block_id"]) for r in blocks.collect())
-    df_lit = score_candidates(dup_index, terms, blocks=ids)
-    plan_lit = df_lit._jdf.queryExecution().optimizedPlan().toString()
-    assert re.search(r"block_id#\d+L? IN \(", plan_lit) or "INSET" in plan_lit, (
-        plan_lit[:4000]
+    spans = sorted(
+        int(r["block_id"]) for r in span_upper_bounds(dup_index, terms).collect()
     )
-    assert not re.search(r"Join LeftSemi, \(block_id#", plan_lit), plan_lit[:4000]
-    a = sorted((r["doc_id"], round(r["score"], 9)) for r in df.collect())
-    b = sorted((r["doc_id"], round(r["score"], 9)) for r in df_lit.collect())
-    assert a == b
+    ids = spans[::2]
+    assert 0 < len(ids) < len(spans)
+    df = score_candidates(dup_index, terms, blocks=ids)
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert re.search(r"block_id#\d+L? IN \(", plan) or "INSET" in plan, plan[:4000]
+    assert "LeftSemi" not in plan, plan[:4000]
+
+    span = dup_index.stats["block_span"]
+    got = sorted((r["doc_id"], r["score"].hex()) for r in df.collect())
+    want = sorted(
+        (r["doc_id"], r["score"].hex())
+        for r in score_candidates(dup_index, terms).collect()
+        if r["doc_id"] // span in ids
+    )
+    assert got and got == want
 
 
 @pytest.fixture(scope="module")
@@ -663,7 +675,7 @@ def head_rare_index(spark, tmp_path_factory):
     return SearchIndex.load(spark, out)
 
 
-@pytest.mark.parametrize("max_literal", [None, 0])
+@pytest.mark.parametrize("max_literal", [None, 100])
 def test_wand_coverage_counts_the_rarest_term(
     head_rare_index, monkeypatch, max_literal
 ):
@@ -671,8 +683,9 @@ def test_wand_coverage_counts_the_rarest_term(
     rarest-term docs, so theta is a real k-th score and auto mode keeps
     the protocol, with free_query's answer. Counting the head term's
     docs fills coverage with 'the'-only docs, theta falls to their
-    scores, every span survives and the post-theta gate bails.
-    MAX_LITERAL_BLOCKS=0 makes the gate run on any survivor."""
+    scores and nearly every span survives (197 of 200), so at
+    MAX_LITERAL_BLOCKS=100 the protocol hands over to free_query;
+    rarest-term coverage leaves 20 survivors."""
     from search_rs_spark.operators import wand as wand_mod
 
     idx, q, k = head_rare_index, "rare the", 10
@@ -695,34 +708,60 @@ def test_wand_coverage_counts_the_rarest_term(
     assert auto == exact
 
 
-def test_wand_survivor_gate_runs_only_past_the_literal_cap(
+def test_wand_hands_over_to_free_query_only_past_the_literal_cap(
     head_rare_index, monkeypatch
 ):
-    """With SURVIVOR_BAILOUT_FRACTION at 0 the post-theta gate bails
-    whenever it runs. Survivors that fit MAX_LITERAL_BLOCKS must not
-    run it (the literal pass 2 never costs more than the exhaustive
-    scorer); past the cap it runs and bails."""
+    """The protocol hands the query to free_query exactly when its
+    coverage set or its survivors exceed MAX_LITERAL_BLOCKS, with the
+    same answer. At k = 10 the coverage set is 40 rare spans and 20
+    survive; at COVERAGE_FACTOR = 1 it is 10 and 50 survive, so a cap
+    of 49 (the span collect then stops one row past the cap) must hand
+    over and a cap of 50 must not."""
     from search_rs_spark.operators import wand as wand_mod
 
     idx, q, k = head_rare_index, "rare the", 10
     monkeypatch.setattr(wand_mod, "MIN_PRUNABLE_POSTINGS", 0)
-    monkeypatch.setattr(wand_mod, "SURVIVOR_BAILOUT_FRACTION", 0)
-    calls = []
-    real = wand_mod.free_query
+    calls = _spy_free_query(monkeypatch)
 
-    def spy(index, query, kk):
-        calls.append((query, kk))
-        return real(index, query, kk)
+    def run():
+        return [
+            (r["doc_id"], r["score"].hex())
+            for r in free_query_wand(idx, q, k).collect()
+        ]
 
-    monkeypatch.setattr(wand_mod, "free_query", spy)
-    auto = [
-        (r["doc_id"], r["score"].hex()) for r in free_query_wand(idx, q, k).collect()
-    ]
-    assert not calls, "survivor gate ran under the literal cap"
+    auto = run()
+    assert not calls, "handed over under the literal cap"
 
     monkeypatch.setattr(wand_mod, "MAX_LITERAL_BLOCKS", 0)
-    bailed = [
-        (r["doc_id"], r["score"].hex()) for r in free_query_wand(idx, q, k).collect()
+    assert run() == auto
+    assert calls == [(q, k)], "coverage set over the cap did not hand over"
+
+    monkeypatch.setattr(wand_mod, "COVERAGE_FACTOR", 1)
+    for cap, handed_over in ((50, False), (49, True)):
+        calls.clear()
+        monkeypatch.setattr(wand_mod, "MAX_LITERAL_BLOCKS", cap)
+        assert run() == auto
+        assert calls == ([(q, k)] if handed_over else []), cap
+
+
+def test_forced_protocol_runs_three_jobs_and_persists_nothing(head_rare_index):
+    """The forced protocol is one span collect and the two literal
+    passes: 3 Spark jobs for a query with pass-2 survivors, and no RDD
+    left persisted."""
+    idx = head_rare_index
+    spark = idx.spark
+    sc = spark.sparkContext
+    free_query_wand(idx, "rare the", 10, force_protocol=True)  # loads the handle
+    before = set(sc._jsc.getPersistentRDDs().keySet())
+    sc.setJobGroup("wand_forced", "wand_forced")
+    try:
+        rows = free_query_wand(idx, "rare the", 10, force_protocol=True).collect()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(list(sc.statusTracker().getJobIdsForGroup("wand_forced"))) == 3
+    assert set(sc._jsc.getPersistentRDDs().keySet()) == before
+    exact = free_query(idx, "rare the", 10).collect()
+    assert [(r["doc_id"], r["score"].hex()) for r in rows] == [
+        (r["doc_id"], r["score"].hex()) for r in exact
     ]
-    assert calls == [(q, k)], "survivor gate did not run past the literal cap"
-    assert auto == bailed
